@@ -9,9 +9,9 @@ import org.apache.spark.sql.SparkSession
  * input).
  *
  * Measures the headline validation job (graft.Bench.validateBench) at ONE
- * core count per JVM — run it twice via tools/run_scaling.sh, which pins
- * the JVM's visible processors (SPARK_GRAFT_JVMPROCS) so the small-N run
- * is a faithful small-node proxy, then computes
+ * core count per JVM — run it via tools/run_scaling_quiet.py, which pins
+ * the JVM's visible processors (-XX:ActiveProcessorCount) so the small-N
+ * run is a faithful small-node proxy, then computes
  * efficiency = rps(4N) / (4 * rps(N)).
  *
  * Protocol per run: materialized parquet input, one warm-up pass, median

@@ -117,10 +117,15 @@ object ChecklistCompiler {
       // CharClassMatch byte scan (same kernel as Str patterns).
       val isInt = graft.functions.CharClassMatch
         .columnIfSupported(v, "^-?\\d+$").getOrElse(v.rlike("^-?\\d+$"))
-      val n = v.cast(DecimalType(38, 0))
+      // try_cast: under ANSI a plain cast aborts the job on a 39+-digit
+      // cell. An integer-shaped value it cannot hold lies beyond every
+      // Long bound, so its sign alone decides: a positive one meets any
+      // min and fails any max, a negative one the reverse.
+      val n = v.try_cast(DecimalType(38, 0))
+      val positive = !v.startsWith("-")
       val boundOk = Seq(
-        min.map(m => n >= lit(m)),
-        max.map(m => n <= lit(m))
+        min.map(m => coalesce(n >= lit(m), positive)),
+        max.map(m => coalesce(n <= lit(m), !positive))
       ).flatten.reduceOption(_ && _).getOrElse(lit(true))
       isInt && boundOk
     case FieldType.StrT(pattern) =>

@@ -56,14 +56,20 @@ object CheckpointRunner {
       .digest(checklist.toString.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 
+  /** Work units with an 'ok' manifest row for this checklist. A manifest
+   * that does not exist yet (first run) holds none; any other read
+   * failure propagates — an unreadable manifest must not turn into
+   * "nothing done" and silently re-validate every partition. */
   private def completedPartitions(spark: SparkSession, manifestPath: String,
-      md5: String): Set[String] =
-    try {
-      spark.read.parquet(manifestPath)
-        .filter(col("status") === "ok" && col("checklist_md5") === md5)
-        .select("partition").distinct()
-        .collect().map(_.getString(0)).toSet
-    } catch { case _: Exception => Set.empty } // first run: no manifest yet
+      md5: String): Set[String] = {
+    val p = new org.apache.hadoop.fs.Path(manifestPath)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      Set.empty
+    else spark.read.parquet(manifestPath)
+      .filter(col("status") === "ok" && col("checklist_md5") === md5)
+      .select("partition").distinct()
+      .collect().map(_.getString(0)).toSet
+  }
 
   /**
    * Partition values from FILESYSTEM METADATA when the input is laid out

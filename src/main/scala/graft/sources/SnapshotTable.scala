@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 
 /**
  * Snapshot-manifest table layer — the Iceberg ACCESS PATTERN with no
@@ -42,6 +43,27 @@ import org.apache.spark.sql.functions.col
  *   <root>/metadata/v<N>.json                snapshot manifest
  *   <root>/metadata/version-hint.text        current-version pointer
  * }}}
+ *
+ * Iceberg mapping — the reason each method has the shape it has; an
+ * Iceberg DataSourceV2 binding would replace this object call for call:
+ * {{{
+ *   currentVersion                table.currentSnapshot().snapshotId()
+ *   commit(overwritePartitions)   writeTo(t).overwritePartitions() | append()
+ *   commit(bloomCols)             write.parquet.bloom-filter-enabled.column.<c>
+ *   read(version, filters)        VERSION AS OF v + .filter (manifest pruning)
+ *   changesBetween(a, b)          incremental append scan (start/end-snapshot-id)
+ *   changelogBetween(a, b)        CALL create_changelog_view(...)
+ *   partitions                    the t.partitions metadata table
+ *   deleteWhere / merge           DELETE FROM / MERGE INTO, copy-on-write
+ *   deleteWhereMoR                v2 position deletes (merge-on-read)
+ *   deleteByKeysMoR               v2 equality deletes
+ *   materializeDeletes            CALL rewrite_position_delete_files(...)
+ *   filesTable / snapshotsTable   the t.files / t.snapshots metadata tables
+ *   compact / expireSnapshots     CALL rewrite_data_files / expire_snapshots
+ * }}}
+ * Incremental scans skip `replace` snapshots, and a row-level rewrite
+ * re-delivers its survivors (at-least-once), as Iceberg's do. Versions
+ * are Ints here; Iceberg snapshot ids are 64-bit.
  *
  * JSON rides Spark's own Jackson (no new dependency). Cited reference
  * behavior: the reference records per-file identity (MD5 + UUID,
@@ -375,7 +397,6 @@ object SnapshotTable {
         require(df.columns.contains(c), s"$what column '$c' not in the frame")
       }
       cols.map { c =>
-        import org.apache.spark.sql.types._
         df.schema(c).dataType match {
           case ByteType | ShortType | IntegerType | LongType => c -> "long"
           case StringType => c -> "string"
@@ -528,7 +549,6 @@ object SnapshotTable {
       // are built over xxhash64 of the column (integrals canonicalized to
       // long) so the manifest carries ~10 bits/key instead of the keys.
       def bloomHash(c: String): org.apache.spark.sql.Column = {
-        import org.apache.spark.sql.types._
         val base = delta.schema(c).dataType match {
           case ByteType | ShortType | IntegerType | LongType => col(c).cast("long")
           case _ => col(c)
@@ -1031,13 +1051,34 @@ object SnapshotTable {
 
   // --- metadata tables -----------------------------------------------------
 
+  /** Schema of [[filesTable]]. `content` ∈ {"data", "position-deletes",
+   * "equality-deletes"} — Iceberg's file-content kinds. */
+  val filesTableSchema: StructType = StructType(Seq(
+    StructField("content", StringType, nullable = false),
+    StructField("file_path", StringType, nullable = false),
+    StructField("partition", MapType(StringType, StringType,
+      valueContainsNull = false), nullable = false),
+    StructField("record_count", LongType, nullable = true),
+    StructField("file_size_in_bytes", LongType, nullable = true),
+    StructField("lower_bounds", MapType(StringType, StringType,
+      valueContainsNull = false), nullable = false),
+    StructField("upper_bounds", MapType(StringType, StringType,
+      valueContainsNull = false), nullable = false)))
+
+  /** Schema of [[snapshotsTable]]. */
+  val snapshotsTableSchema: StructType = StructType(Seq(
+    StructField("version", LongType, nullable = false),
+    StructField("operation", StringType, nullable = false),
+    StructField("data_file_count", LongType, nullable = false),
+    StructField("delete_file_count", LongType, nullable = false),
+    StructField("record_count", LongType, nullable = true),
+    StructField("total_data_bytes", LongType, nullable = true),
+    StructField("is_current", BooleanType, nullable = false)))
+
   /** Iceberg's `refs` metadata table: one row per named ref, sorted by
-   * name. Off the [[TableFormat]] seam — refs are a feature of THIS
-   * binding (the full-state format has none), like the maintenance
-   * procedures. */
+   * name. */
   def refsTable(spark: SparkSession, root: String): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("name", StringType, nullable = false),
       StructField("type", StringType, nullable = false),
@@ -1050,7 +1091,7 @@ object SnapshotTable {
   /** Iceberg's `files` metadata table, answered from PURE manifest
    * metadata (one FileStatus probe per pending DELETE file for its size
    * — delete commits don't record per-file bytes pre-round-5; zero data
-   * I/O either way). Schema: [[TableFormat.filesTableSchema]].
+   * I/O either way). Schema: [[filesTableSchema]].
    * `record_count` for a multi-file position-delete commit is NULL per
    * file (the manifest records per-TARGET counts, not per-delete-file
    * splits). */
@@ -1083,13 +1124,13 @@ object SnapshotTable {
     }
     spark.createDataFrame(
       new java.util.ArrayList[Row]((data ++ posDel ++ eqDel).asJava),
-      TableFormat.filesTableSchema)
+      filesTableSchema)
   }
 
   /** Iceberg's `snapshots`/`history` metadata table: one row per LIVE
    * (unexpired) manifest, ascending. Pure metadata — the per-version
    * counts come from the manifests alone. Schema:
-   * [[TableFormat.snapshotsTableSchema]]. */
+   * [[snapshotsTableSchema]]. */
   def snapshotsTable(spark: SparkSession, root: String): DataFrame = {
     import org.apache.spark.sql.Row
     val cur = currentVersion(spark, root).getOrElse(
@@ -1108,7 +1149,7 @@ object SnapshotTable {
           s.files.map(_.rows).sum, s.files.map(_.bytes).sum, v == cur)
       }
     spark.createDataFrame(new java.util.ArrayList[Row](rows.asJava),
-      TableFormat.snapshotsTableSchema)
+      snapshotsTableSchema)
   }
 
   /**

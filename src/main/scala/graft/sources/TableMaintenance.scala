@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
- * Metadata-driven maintenance PLANNING over the [[TableFormat]] seam —
+ * Metadata-driven maintenance PLANNING for a [[SnapshotTable]] —
  * the in-sandbox analog of the scheduled Iceberg maintenance jobs
  * (`rewrite_data_files` / `rewrite_position_delete_files` /
  * `expire_snapshots`) every long-lived table needs: a 10^12-file table
@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
  * amplification, and one that never expires history hoards every byte
  * it ever wrote.
  *
- * The planner reads ONLY the metadata tables ([[TableFormat.filesTable]]
- * / [[TableFormat.snapshotsTable]]) — no filesystem listing, no data
+ * The planner reads ONLY the metadata tables ([[SnapshotTable.filesTable]]
+ * / [[SnapshotTable.snapshotsTable]]) — no filesystem listing, no data
  * I/O — and aggregates them Spark-side with a bounded `limit(k)` per
  * signal, so the driver never holds more than `maxTargets` rows even
  * when the file count is astronomical.
@@ -43,14 +43,14 @@ object TableMaintenance {
    *    delete file until someone folds them).
    *  - **expireSnapshots** when more than `keepLast` versions are live.
    */
-  def plan(fmt: TableFormat, spark: SparkSession, root: String,
+  def plan(spark: SparkSession, root: String,
       targetFileBytes: Long = 512L * 1024 * 1024,
       minInputFiles: Int = 2,
       maxDeleteRatio: Double = 0.1,
       keepLast: Int = 10,
       maxTargets: Int = 20): Seq[Action] = {
     require(maxTargets >= 1, "maxTargets must be at least 1")
-    val files = fmt.filesTable(spark, root)
+    val files = SnapshotTable.filesTable(spark, root)
     // map columns don't group; canonicalize to the Hive path form
     val partStr = array_join(
       transform(array_sort(map_entries(col("partition"))),
@@ -83,7 +83,7 @@ object TableMaintenance {
             s"$maxDeleteRatio) — every reader pays the anti-join until folded"))
       else Seq.empty
 
-    val live = fmt.snapshotsTable(spark, root).count()
+    val live = SnapshotTable.snapshotsTable(spark, root).count()
     val expire =
       if (live > keepLast)
         Seq(Action("expireSnapshots", "", live.toDouble,
@@ -96,9 +96,8 @@ object TableMaintenance {
   }
 
   /**
-   * Plan, then EXECUTE against a [[SnapshotTable]] root (execution needs
-   * the maintenance procedures, which live beside the seam, not on it —
-   * as in Iceberg, where they are Spark procedures, not table ops).
+   * Plan, then EXECUTE against a [[SnapshotTable]] root with its
+   * maintenance procedures (Spark procedures in Iceberg, not table ops).
    * Ordering matters and is deliberate: materialize first (folds delete
    * entries so the rewrite doesn't pay them twice), compact second
    * (ONE call — its candidate pick is already all-partition), expire
@@ -112,7 +111,7 @@ object TableMaintenance {
       maxDeleteRatio: Double = 0.1,
       keepLast: Int = 10,
       maxTargets: Int = 20): Seq[Action] = {
-    val actions = plan(SnapshotTableFormat, spark, root, targetFileBytes,
+    val actions = plan(spark, root, targetFileBytes,
       minInputFiles, maxDeleteRatio, keepLast, maxTargets)
     if (actions.exists(_.kind == "materializeDeletes"))
       SnapshotTable.materializeDeletes(spark, root)

@@ -85,6 +85,28 @@ class RunnerSpec extends SparkSuite {
     assert(r4.forall(!_.skipped))
   }
 
+  test("checkpoint runner: an unreadable manifest fails the run, naming its path") {
+    val base = Files.createTempDirectory("graft_ckpt_bad").toString
+    val input = s"$base/input"
+    CodeFiles.generate(spark, 50)
+      .withColumn("part", (col("id") % 2).cast("string"))
+      .write.partitionBy("part").parquet(input)
+    val manifest = s"$base/manifest"
+    Files.createDirectories(java.nio.file.Paths.get(manifest))
+    Files.write(java.nio.file.Paths.get(manifest, "notes.txt"),
+      "not parquet".getBytes("UTF-8"))
+    val cfg = CheckpointRunner.Config(
+      inputPath = input, partitionCol = "part",
+      outputPath = s"$base/out", violationsPath = s"$base/viol",
+      manifestPath = manifest, rowIdCol = Some("id"))
+    val err = intercept[Exception] {
+      CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
+    }
+    assert(err.getMessage.contains(manifest), err.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$base/out")),
+      "no partition may be re-validated over an unreadable manifest")
+  }
+
   test("CheckpointMain: spark-submit arg surface drives a resumable run end-to-end") {
     import graft.run.CheckpointMain
     val base = Files.createTempDirectory("graft_ckpt_cli").toString

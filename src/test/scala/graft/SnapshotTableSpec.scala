@@ -1286,7 +1286,7 @@ class SnapshotTableSpec extends SparkSuite {
   test("metadata-driven maintenance: plan diagnoses small files, delete " +
       "amplification and long history; runOnSnapshotTable heals all three " +
       "and is idempotent") {
-    import graft.sources.{SnapshotTableFormat, TableMaintenance}
+    import graft.sources.TableMaintenance
     val root = freshRoot()
     // 12 versions: v1 full, then 11 tiny single-row appends -> small-file
     // skew in src0 plus a history longer than keepLast
@@ -1302,7 +1302,7 @@ class SnapshotTableSpec extends SparkSuite {
     val before = SnapshotTable.read(spark, root)
       .select("id", "payload").collect().map(r => (r.getLong(0), r.getString(1))).toSet
 
-    val actions = TableMaintenance.plan(SnapshotTableFormat, spark, root,
+    val actions = TableMaintenance.plan(spark, root,
       targetFileBytes = 64L * 1024 * 1024, minInputFiles = 2,
       maxDeleteRatio = 0.01, keepLast = 5)
     val kinds = actions.map(_.kind)
@@ -1326,7 +1326,7 @@ class SnapshotTableSpec extends SparkSuite {
     assert(after === before)
     // healed: a re-plan with the same thresholds finds nothing, and the
     // execute path is a no-op returning the empty plan
-    assert(TableMaintenance.plan(SnapshotTableFormat, spark, root,
+    assert(TableMaintenance.plan(spark, root,
       targetFileBytes = 64L * 1024 * 1024, minInputFiles = 2,
       maxDeleteRatio = 0.01, keepLast = 5).isEmpty)
     val v = SnapshotTable.currentVersion(spark, root)

@@ -116,4 +116,60 @@ class StreamingFunnelSpec extends SparkSuite {
         7200L, evictionWatermark = Some("0 seconds"))
     }
   }
+
+  test("evictionWatermark: a stateful user's event after the watermark " +
+      "passed anchor + window clamps the timeout instead of failing the query") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // no idle batches: u1 keeps its state into the batch that carries its
+    // late event, instead of an idle batch evicting it first
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = spark.conf.get(noData)
+    spark.conf.set(noData, "false")
+    // u1 anchors at 10:00 (window 2h, timeout 12:00); u9's "B" events
+    // store no state and only advance the watermark
+    val b1 = Seq((1L, ts("2024-01-01 10:00:00"), "A"),
+      (1L, ts("2024-01-01 10:10:00"), "B"))
+    val b2 = Seq((9L, ts("2024-01-01 13:00:00"), "B"))
+    // watermark 13:00 > 12:00 while u1 still holds state
+    val b3 = Seq((1L, ts("2024-01-01 13:01:00"), "C"))
+    // watermark 13:01 passes the clamped timeout: u1 evicts here
+    val b4 = Seq((9L, ts("2024-01-01 14:00:00"), "B"))
+    val b5 = Seq((1L, ts("2024-01-01 15:00:00"), "A"))
+    val in = MemoryStream[(Long, Timestamp, String)]
+    val hits = StreamingFunnel.levels(
+      in.toDS().toDF("user_id", "ts", "event_type"),
+      "user_id", "ts", "event_type", steps, windowSeconds = 7200L,
+      evictionWatermark = Some("0 seconds"))
+    val q = hits.writeStream.format("memory").queryName("sf4")
+      .outputMode("append").start()
+    try {
+      Seq(b1, b2, b3, b4, b5).foreach { b =>
+        in.addData(b: _*); q.processAllAvailable() }
+      val got = spark.sql("select user, level from sf4").collect()
+        .map(r => (r.getLong(0), r.getInt(1)))
+      // b1: levels 1+2; b3's C is outside the window; b5 re-anchors
+      assert(got.count(_ == (1L, 1)) === 2, s"got ${got.toSeq}")
+      assert(got.count(_ == (1L, 2)) === 1)
+      assert(got.length === 3)
+    } finally {
+      q.stop()
+      spark.conf.set(noData, prev)
+    }
+  }
+
+  test("a non-numeric user id is dropped under ANSI, not a query failure") {
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val events = Seq(("u123", ts("2024-01-01 10:00:00"), "A"),
+        ("7", ts("2024-01-01 10:00:00"), "A"),
+        ("7", ts("2024-01-01 10:05:00"), "B"))
+        .toDF("user_id", "ts", "event_type")
+      val got = StreamingFunnel.levels(events, "user_id", "ts", "event_type",
+        steps, windowSeconds = 7200L).collect()
+        .map(h => (h.user, h.level)).toSet
+      assert(got === Set((7L, 1), (7L, 2)))
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
 }

@@ -86,6 +86,24 @@ class ValidatorSpec extends SparkSuite {
     assert(stateOf(IntT(min = Some(5)), S("3")) === FieldState.Invalid)
   }
 
+  test("05: Int bounds judge a 41-digit value by its sign under ANSI, not abort") {
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val pos = "9" * 41
+      val neg = "-" + pos
+      // Perl's numeric compare (Plugin/Int.pm:14-27): a huge positive
+      // meets any min and fails any max; a huge negative the reverse
+      assert(stateOf(IntT(min = Some(5)), S(pos)) === FieldState.Valid)
+      assert(stateOf(IntT(max = Some(10)), S(pos)) === FieldState.Invalid)
+      assert(stateOf(IntT(min = Some(5), max = Some(10)), S(pos)) === FieldState.Invalid)
+      assert(stateOf(IntT(min = Some(5)), S(neg)) === FieldState.Invalid)
+      assert(stateOf(IntT(max = Some(10)), S(neg)) === FieldState.Valid)
+      assert(stateOf(IntT(min = Some(5), max = Some(10)), S(neg)) === FieldState.Invalid)
+      assert(stateOf(IntT(), S(pos)) === FieldState.Valid)
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
   test("05: Str truth table incl. unanchored regex") {
     for (v <- Seq("a", "abc", "a b", "a:b", "0")) assert(stateOf(StrT(), S(v)) === FieldState.Valid, v)
     assert(stateOf(StrT(), S(" ")) === FieldState.Skipped) // empty-cell skip wins
