@@ -200,6 +200,11 @@ object Dedup {
    * kept block is <= 32 rows (<= 496 pairs), prefix join beyond.
    * Below-threshold pairs are not returned in this mode (callers that
    * need the full similarity histogram use the default mode).
+   *
+   * EAGER ACTION: that occupancy aggregate runs when the frame is BUILT,
+   * not when it is executed, so the strategy reflects the data as of the
+   * call. A streaming `df` cannot run it and is rejected with an
+   * IllegalArgumentException in this mode; the default mode is lazy.
    */
   def blockedNgramPairs(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], k: Int = 3, maxBlockSize: Int = 1000,
@@ -226,6 +231,9 @@ object Dedup {
             jac(col("sh_a"), col("sh_b")).as("jaccard"))
       case Some(t) =>
         require(t > 0.0 && t <= 1.0, s"minJaccard must be in (0,1], got $t")
+        require(!df.isStreaming, "blockedNgramPairs(minJaccard = Some(_)) " +
+          "runs an eager aggregate to pick its join strategy and does not " +
+          "support a streaming input")
         // Strategy dispatch by MEASURED block occupancy (one tiny
         // aggregate over the per-block counts, the same frame the
         // oversized guard derives from): all-pairs scoring costs

@@ -383,24 +383,6 @@ object Similarity {
       ColumnBridge.expression(vec), mins.clone(), maxs.clone()))
   }
 
-  /** The higher-order-function formulation [[quantizeInt8]]'s codegen
-   * kernel replaced — kept as the independent parity reference
-   * (FunctionsSpec pins kernel == HOF bit-for-bit; the HOF's per-element
-   * interpretation measured ~2.5 us/vector at dim 64). */
-  private[graft] def quantizeInt8Hof(vec: Column, mins: Array[Double],
-      maxs: Array[Double]): Column = {
-    val mn = typedLit(mins.toSeq)
-    val mx = typedLit(maxs.toSeq)
-    transform(vec, (x, i) => {
-      val lo = element_at(mn, i + 1)
-      val hi = element_at(mx, i + 1)
-      when(hi === lo, lit(-128))
-        .otherwise(greatest(lit(0), least(lit(255),
-          floor((x.cast("double") - lo) * (lit(256.0) / (hi - lo))))) - 128)
-        .cast("byte")
-    })
-  }
-
   /** Midpoint reconstruction: `mn_i + (code_i + 128 + 0.5) * ((mx_i - mn_i)
    * / 256.0)` (array<double>) — the decode half of [[quantizeInt8]], used
    * to score quantized vectors with the same fused cosine kernel as the
@@ -410,17 +392,5 @@ object Similarity {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.functions.DequantizeInt8Expr(
       ColumnBridge.expression(code), mins.clone(), maxs.clone()))
-  }
-
-  /** HOF parity reference for [[dequantizeInt8]] (see [[quantizeInt8Hof]]). */
-  private[graft] def dequantizeInt8Hof(code: Column, mins: Array[Double],
-      maxs: Array[Double]): Column = {
-    val mn = typedLit(mins.toSeq)
-    val mx = typedLit(maxs.toSeq)
-    transform(code, (q, i) => {
-      val lo = element_at(mn, i + 1)
-      val hi = element_at(mx, i + 1)
-      lo + (q.cast("double") + lit(128.5)) * ((hi - lo) / lit(256.0))
-    })
   }
 }

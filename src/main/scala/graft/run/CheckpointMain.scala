@@ -19,10 +19,14 @@ import org.apache.spark.sql.SparkSession
  *   [--row-id <col>] [--content <col>]
  * }}}
  *
- * Re-running the same command after a kill resumes at partition
- * granularity; changing the checklist re-validates everything (the
- * lineage rows are keyed by the checklist fingerprint). Exit code 0 when
- * every partition committed, 1 otherwise.
+ * Partitions are validated concurrently, up to the session's
+ * `defaultParallelism` at a time; each commits its own outputs and then
+ * its manifest row (manifest appends are serialized). Re-running the same
+ * command after a kill resumes at partition granularity; changing the
+ * checklist re-validates everything (the lineage rows are keyed by the
+ * checklist fingerprint). Exit code 0 when every partition committed, 1
+ * otherwise: after a partition fails, no new partition starts, the ones
+ * in flight still commit, and the error names the failed partition.
  */
 object CheckpointMain {
 

@@ -4,6 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 import graft.engine.Validator
 import graft.model.Checklist
@@ -12,9 +13,13 @@ import graft.model.Checklist
  * Partition-granular checkpointed validation runs (north_rule: "resumable
  * from checkpoint with per-partition lineage + metrics").
  *
- * The input table is processed one partition at a time (hive-style
- * partition column, e.g. `source` or a date). After a partition's outputs
- * commit, one manifest row is appended to the manifest table:
+ * The work unit is one partition of the input table (hive-style
+ * partition column, e.g. `source` or a date). Pending partitions run
+ * concurrently, `min(pending, spark.sparkContext.defaultParallelism)` at
+ * a time, so a small partition's jobs fill the cores a large one leaves
+ * idle at its tail. After a partition's own outputs commit, one manifest
+ * row is appended to the manifest table (appends are serialized; see
+ * [[appendManifestRow]]):
  *
  *   (run_id, partition, checklist_md5, n_rows, n_invalid, n_violations,
  *    started_at, finished_at, status)
@@ -24,6 +29,9 @@ import graft.model.Checklist
  * stopped, and a *changed checklist* invalidates prior work automatically.
  * Outputs are written with partition-directory overwrite, making re-runs
  * idempotent (no duplicated violation rows — risk register SURVEY.md §7.4).
+ * When a partition fails, no further partition starts; those already
+ * running finish and commit their rows, and the run then throws the first
+ * failure, naming its partition. A re-run resumes from the `ok` rows.
  *
  * Each partition is ONE compute pass: manifest metrics ride the validated
  * write as CollectMetrics (`observe`) accumulators, and the violations
@@ -121,23 +129,54 @@ object CheckpointRunner {
           .collect().map(_.get(0).toString).sorted.toSeq)
     val done = completedPartitions(spark, cfg.manifestPath, md5)
 
-    partitions.map { p =>
-      if (done.contains(p)) PartitionResult(p, 0, 0, 0, skipped = true)
-      else {
-        // snapshot tables prune the slice's FILE SET manifest-side; hive
-        // layout pushes the partition filter down to the parquet scan
-        val slice =
-          if (isSnapshotTable)
-            graft.sources.SnapshotTable.read(spark, cfg.inputPath,
-              partitionFilter = Map(cfg.partitionCol -> p))
-          else input.filter(col(cfg.partitionCol) === p)
-        val (nRows, nInvalid, nViol) = validateSlice(spark, checklist,
-          slice, p, s"${cfg.outputPath}/${cfg.partitionCol}=$p",
-          s"${cfg.violationsPath}/${cfg.partitionCol}=$p",
-          cfg.manifestPath, runId, md5, cfg.rowIdCol, cfg.contentCol)
-        PartitionResult(p, nRows, nInvalid, nViol, skipped = false)
+    val pending = partitions.filterNot(done.contains)
+    val results = forEachConcurrently(pending,
+        spark.sparkContext.defaultParallelism, cfg.partitionCol) { p =>
+      // snapshot tables prune the slice's FILE SET manifest-side; hive
+      // layout pushes the partition filter down to the parquet scan
+      val slice =
+        if (isSnapshotTable)
+          graft.sources.SnapshotTable.read(spark, cfg.inputPath,
+            partitionFilter = Map(cfg.partitionCol -> p))
+        else input.filter(col(cfg.partitionCol) === p)
+      val (nRows, nInvalid, nViol) = validateSlice(spark, checklist,
+        slice, p, s"${cfg.outputPath}/${cfg.partitionCol}=$p",
+        s"${cfg.violationsPath}/${cfg.partitionCol}=$p",
+        cfg.manifestPath, runId, md5, cfg.rowIdCol, cfg.contentCol)
+      PartitionResult(p, nRows, nInvalid, nViol, skipped = false)
+    }
+    partitions.map(p =>
+      results.getOrElse(p, PartitionResult(p, 0, 0, 0, skipped = true)))
+  }
+
+  /** Runs `f` over `keys` on `min(keys.size, width)` threads. After the
+   * first failure no further key starts; keys already running finish (and
+   * commit), then that failure is rethrown naming its `partitionCol=key`. */
+  private def forEachConcurrently[R](keys: Seq[String], width: Int,
+      partitionCol: String)(f: String => R): Map[String, R] = {
+    if (keys.isEmpty) return Map.empty
+    val results = new java.util.concurrent.ConcurrentHashMap[String, R]()
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    val failure =
+      new java.util.concurrent.atomic.AtomicReference[(String, Throwable)]()
+    val worker: Runnable = () => {
+      var i = next.getAndIncrement()
+      while (failure.get == null && i < keys.size) {
+        val k = keys(i)
+        try results.put(k, f(k))
+        catch { case e: Throwable => failure.compareAndSet(null, (k, e)) }
+        i = next.getAndIncrement()
       }
-    }.toSeq
+    }
+    val threads = math.min(keys.size, width)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try Seq.fill(threads)(pool.submit(worker)).foreach(_.get())
+    finally pool.shutdown()
+    Option(failure.get).foreach { case (k, e) =>
+      throw new RuntimeException(
+        s"partition $partitionCol=$k failed: ${e.getMessage}", e)
+    }
+    results.asScala.toMap
   }
 
   /** ONE compute pass over a work unit (a partition or a snapshot delta),
@@ -167,7 +206,8 @@ object CheckpointRunner {
     val nRows = m("n_rows").asInstanceOf[Long]
     val nInvalid = m("n_invalid").asInstanceOf[Long]
     val nViol = Option(m("n_violations")).fold(0L)(_.asInstanceOf[Long])
-    Validator.violationRows(spark.read.parquet(outDir))
+    // the schema just written: re-reading it skips the footer-inference job
+    Validator.violationRows(spark.read.schema(validated.schema).parquet(outDir))
       .write.mode(SaveMode.Overwrite).parquet(violationsDir)
     appendManifestRow(spark, manifestPath, runId, manifestKey, md5,
       nRows, nInvalid, nViol, startedAt, "ok")
@@ -210,16 +250,21 @@ object CheckpointRunner {
       skipped = false)
   }
 
+  /** Serializes manifest appends: concurrent `SaveMode.Append` jobs into
+   * one directory share its `_temporary/0`, which the first job commit
+   * deletes under the others. */
+  private val manifestLock = new Object
+
   private def appendManifestRow(spark: SparkSession, path: String,
       runId: String, partition: String, md5: String, nRows: Long,
       nInvalid: Long, nViolations: Long, startedAt: String,
       status: String): Unit = {
     import spark.implicits._
-    Seq((runId, partition, md5, nRows, nInvalid, nViolations,
+    val row = Seq((runId, partition, md5, nRows, nInvalid, nViolations,
       startedAt, java.time.Instant.now().toString, status))
       .toDF("run_id", "partition", "checklist_md5", "n_rows", "n_invalid",
         "n_violations", "started_at", "finished_at", "status")
       .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(path)
+    manifestLock.synchronized(row.write.mode(SaveMode.Append).parquet(path))
   }
 }

@@ -68,7 +68,9 @@ object StreamingFunnel {
    * @param evictionWatermark when Some(delay) — STREAMING ONLY — sets
    *        `withWatermark(tsCol, delay)` on the input and evicts a user's
    *        state once the watermark passes anchor + window (see the
-   *        object doc for the re-entry consequence). None (default)
+   *        object doc for the re-entry consequence). `tsCol` must then be
+   *        a TIMESTAMP: Spark rejects a watermark on any other type,
+   *        TIMESTAMP_NTZ included, so that fails up front. None (default)
    *        keeps state forever, the exact-batch-parity mode.
    */
   def levels(events: DataFrame, userCol: String, tsCol: String,
@@ -80,6 +82,11 @@ object StreamingFunnel {
     require(evictionWatermark.isEmpty || events.isStreaming,
       "evictionWatermark needs a streaming input: batch mode sees each " +
         "group exactly once, so there is no state to evict")
+    require(evictionWatermark.isEmpty ||
+      events.schema(tsCol).dataType == org.apache.spark.sql.types.TimestampType,
+      s"evictionWatermark needs a TIMESTAMP column, but '$tsCol' is " +
+        s"${events.schema(tsCol).dataType.sql}: Spark sets watermarks on " +
+        "TIMESTAMP only; cast it upstream")
     val k = steps.length
     val winMicros = windowSeconds * 1000000L
     val src = evictionWatermark

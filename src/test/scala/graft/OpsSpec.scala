@@ -910,6 +910,22 @@ class OpsSpec extends SparkSuite {
     assert(gotBig.exists { case (a, b, _) => a === 0L && b === 1000L })
   }
 
+  test("blockedNgramPairs(minJaccard) rejects a streaming input by name; " +
+      "the default mode stays lazy on it") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val stream = MemoryStream[(Long, String, String)].toDS()
+      .toDF("doc_id", "lang", "text")
+    val err = intercept[IllegalArgumentException] {
+      Dedup.blockedNgramPairs(stream, "doc_id", "text", Seq("lang"),
+        minJaccard = Some(0.5))
+    }
+    assert(err.getMessage.contains("minJaccard") &&
+      err.getMessage.contains("streaming"), err.getMessage)
+    assert(Dedup.blockedNgramPairs(stream, "doc_id", "text", Seq("lang"))
+      .isStreaming)
+  }
+
   // --- Multimodal ----------------------------------------------------------
 
   test("IVF: deterministic centroids; nprobe=k == brute force; nprobe=1 finds planted NN") {

@@ -107,6 +107,125 @@ class RunnerSpec extends SparkSuite {
       "no partition may be re-validated over an unreadable manifest")
   }
 
+  private def hiveInput(base: String, rows: Long, parts: Int): String = {
+    val input = s"$base/input"
+    CodeFiles.generate(spark, rows)
+      .withColumn("part", (col("id") % parts).cast("string"))
+      .write.partitionBy("part").parquet(input)
+    input
+  }
+
+  private def ckptConfig(input: String, base: String) = CheckpointRunner.Config(
+    inputPath = input, partitionCol = "part",
+    outputPath = s"$base/out", violationsPath = s"$base/viol",
+    manifestPath = s"$base/manifest", rowIdCol = Some("id"),
+    contentCol = Some("content"))
+
+  test("concurrent checkpoint run: one ok row per partition with its input " +
+      "count, no _temporary left, verdicts equal one whole-input validate") {
+    val base = Files.createTempDirectory("graft_ckpt_conc").toString
+    val input = hiveInput(base, 1200, 12)
+    val cfg = ckptConfig(input, base)
+    val res = CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
+    assert(res.map(_.partition) === res.map(_.partition).sorted)
+    assert(res.size === 12 && res.forall(!_.skipped))
+
+    val want = spark.read.parquet(input).groupBy("part").count().collect()
+      .map(r => r.get(0).toString -> r.getLong(1)).toMap
+    val rows = spark.read.parquet(cfg.manifestPath).collect()
+    assert(rows.length === 12 && rows.forall(_.getAs[String]("status") == "ok"))
+    assert(rows.map(r => r.getAs[String]("partition") -> r.getAs[Long]("n_rows"))
+      .toMap === want)
+    assert(res.map(r => r.partition -> r.nRows).toMap === want)
+    // the partitions really ran side by side: some two of them were in
+    // flight at the same time
+    def at(r: org.apache.spark.sql.Row, c: String) =
+      java.time.Instant.parse(r.getAs[String](c))
+    val spans = rows.map(r => (at(r, "started_at"), at(r, "finished_at")))
+    assert(spans.combinations(2).exists { case Array((s1, f1), (s2, f2)) =>
+      s1.isBefore(f2) && s2.isBefore(f1) }, "no two partitions overlapped")
+
+    for (dir <- Seq(cfg.outputPath, cfg.violationsPath, cfg.manifestPath)) {
+      val leftovers = Files.walk(java.nio.file.Paths.get(dir)).toArray
+        .map(_.toString).filter(_.contains("_temporary"))
+      assert(leftovers.isEmpty, leftovers.mkString(", "))
+    }
+
+    import graft.engine.Validator
+    def verdicts(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", Validator.PassedCol, Validator.ErrorCol).collect()
+        .map(r => r.getLong(0) -> ((r.getBoolean(1), r.getString(2)))).toMap
+    val whole = Validator.validate(spark.read.parquet(input),
+      CodeFiles.checklist, Validator.Options(Some("id"), Some("content")))
+    assert(verdicts(spark.read.parquet(cfg.outputPath)) === verdicts(whole))
+  }
+
+  test("concurrent checkpoint run: a failed partition is named, the others " +
+      "commit, and a re-run validates only the failed one") {
+    val base = Files.createTempDirectory("graft_ckpt_fail").toString
+    val input = hiveInput(base, 300, 6)
+    val cfg = ckptConfig(input, base)
+    // the last partition to start: every other one has started before it
+    // fails. A dangling link where its output directory goes makes the
+    // write's mkdirs fail (an overwrite would just delete a regular file)
+    val obstacle = java.nio.file.Paths.get(s"${cfg.outputPath}/part=5")
+    Files.createDirectories(obstacle.getParent)
+    Files.createSymbolicLink(obstacle, java.nio.file.Paths.get(s"$base/missing"))
+    val err = intercept[Exception] {
+      CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
+    }
+    assert(err.getMessage.contains("partition part=5"), err.getMessage)
+    val ok = spark.read.parquet(cfg.manifestPath)
+      .filter(col("status") === "ok").select("partition").collect()
+      .map(_.getString(0)).toSet
+    assert(ok === Set("0", "1", "2", "3", "4"))
+
+    Files.delete(obstacle)
+    val again = CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
+    assert(again.filterNot(_.skipped).map(_.partition) === Seq("5"))
+    assert(again.find(_.partition == "5").get.nRows === 50)
+  }
+
+  test("checkpoint run: at most 4 Spark jobs per partition on a fresh " +
+      "snapshot-table run") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = Files.createTempDirectory("graft_ckpt_jobs").toString
+    val root = s"$base/table"
+    graft.sources.SnapshotTable.commit(
+      CodeFiles.generate(spark, 600)
+        .withColumn("part", (col("id") % 6).cast("string")),
+      root, Seq("part"))
+    val cfg = ckptConfig(root, base)
+    // job groups are inherited by the runner's worker threads; a sentinel
+    // job in another group marks the end of this run's job-start events
+    val group = "ckpt_job_count"
+    val sentinel = "ckpt_job_count_end"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "checkpoint run")
+      val res = CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
+      assert(res.size === 6 && res.forall(!_.skipped))
+      sc.setJobGroup(sentinel, "end of run")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get > 0 && jobs.get <= 4 * 6, s"${jobs.get} jobs for 6 partitions")
+  }
+
   test("CheckpointMain: spark-submit arg surface drives a resumable run end-to-end") {
     import graft.run.CheckpointMain
     val base = Files.createTempDirectory("graft_ckpt_cli").toString

@@ -158,6 +158,33 @@ class StreamingFunnelSpec extends SparkSuite {
     }
   }
 
+  test("evictionWatermark on a TIMESTAMP_NTZ column fails up front, " +
+      "naming the type") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[(Long, java.time.LocalDateTime, String)]
+    val events = in.toDS().toDF("user_id", "ts", "event_type")
+    val err = intercept[IllegalArgumentException] {
+      StreamingFunnel.levels(events, "user_id", "ts", "event_type", steps,
+        windowSeconds = 7200L, evictionWatermark = Some("0 seconds"))
+    }
+    assert(err.getMessage.contains("TIMESTAMP_NTZ") &&
+      err.getMessage.contains("'ts'"), err.getMessage)
+    // the no-eviction mode still takes NTZ
+    val hits = StreamingFunnel.levels(events, "user_id", "ts", "event_type",
+      steps, windowSeconds = 7200L)
+    val q = hits.writeStream.format("memory").queryName("sf_ntz")
+      .outputMode("append").start()
+    try {
+      in.addData((1L, java.time.LocalDateTime.parse("2024-01-01T10:00:00"), "A"),
+        (1L, java.time.LocalDateTime.parse("2024-01-01T10:05:00"), "B"))
+      q.processAllAvailable()
+      val got = spark.sql("select user, level from sf_ntz").collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toSet
+      assert(got === Set((1L, 1), (1L, 2)))
+    } finally q.stop()
+  }
+
   test("a non-numeric user id is dropped under ANSI, not a query failure") {
     val prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
