@@ -298,9 +298,13 @@ object TextAnalysis {
           coalesce(graft.functions.BroadcastMapLookup.lookup(
             s.getField("token"), idfBcast), lit(0.0)))).as("n"),
         s.getField("token").as("token")))
+    // posexplode takes the top-k expression itself, not an attribute
+    // holding it: for an attribute input InferFiltersFromGenerate adds a
+    // size(__top) > 0 filter, and pushdown copies the whole array
+    // expression into it, so the array would be built twice per row
     base
-      .select(col(idCol), slice(array_sort(scored), 1, k).as("__top"))
-      .select(col(idCol), posexplode(col("__top")).as(Seq("__r", "__kw")))
+      .select(col(idCol),
+        posexplode(slice(array_sort(scored), 1, k)).as(Seq("__r", "__kw")))
       .select(col(idCol), (col("__r") + 1).cast("int").as("rank"),
         col("__kw.token").as("token"),
         round(-col("__kw.n"), 6).as("score"))

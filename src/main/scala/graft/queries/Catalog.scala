@@ -250,19 +250,58 @@ object Catalog {
 
   import graft.ops.{TextAnalysis, Dedup, Similarity, Multimodal, Clustering, Sampling, Curation}
 
+  /**
+   * The ordered output of a per-row query, with its per-row work run once
+   * and on every core: `input` is range-partitioned on the leading sort
+   * key into `n = max(defaultParallelism, input partitions)` partitions,
+   * `derive` runs on that, and the result is ordered by `key, thenBy*`.
+   * The range partitioning passes through `derive`'s projections and
+   * generators, so the final sort needs no exchange of its own, and the
+   * output order is that of `derive(input).orderBy(key, thenBy*)`.
+   *
+   * Three plan traps make a per-row query slow on full output:
+   *  - A global `orderBy` on top of a per-row projection puts a range
+   *    exchange above it, and `RangePartitioner` samples by running the
+   *    whole child plan: the projection runs twice, once for the sample
+   *    and once for the shuffle write. Here the sample runs over the scan.
+   *  - A byte-sized input (one small parquet file, one row group) is one
+   *    split, so everything above the scan runs in a single task. The
+   *    explicit `n` is required: without it AQE coalesces a range exchange
+   *    below its `minPartitionSize` back to one partition.
+   *  - `InferFiltersFromGenerate` adds a `size(a) > 0` filter for an
+   *    `explode`/`posexplode` fed by an attribute `a`, and pushdown then
+   *    copies `a`'s defining array expression into that filter, so the
+   *    array is built twice. `derive` has to avoid this one itself (see
+   *    [[TextAnalysis.tfidfKeywords]]).
+   *
+   * Do not pre-sort inside: `EliminateSorts` drops an inner global sort
+   * under the outer one, which restores the sort-above-projection plan.
+   * A `localCheckpoint` inside `derive` loses the partitioning under AQE
+   * (its scan reports none), so the final sort then keeps its own range
+   * exchange; `derive` still runs on `n` partitions ([[ddSpanrm]]).
+   */
+  private def sortedRows(input: DataFrame, key: String, thenBy: String*)(
+      derive: DataFrame => DataFrame): DataFrame = {
+    val n = math.max(input.sparkSession.sparkContext.defaultParallelism,
+      input.rdd.getNumPartitions)
+    derive(input.repartitionByRange(n, col(key))).orderBy(key, thenBy: _*)
+  }
+
   /** Text-analysis feature extraction: one codegen'd projection per doc. */
   def taFeatures(spark: SparkSession, dir: String): DataFrame =
-    TextAnalysis.features(docs(spark, dir), "doc_id", "text")
-      .drop("n_subwords") // lookaround split is not RE2-expressible for the oracle
-      .orderBy("doc_id")
+    sortedRows(docs(spark, dir), "doc_id") { d =>
+      TextAnalysis.features(d, "doc_id", "text")
+        .drop("n_subwords") // lookaround split is not RE2-expressible for the oracle
+    }
 
   /** Subword counts + rolling hash (no SQL oracle: lookaround regex and
    * wrapping 64-bit arithmetic are outside DuckDB's dialect). */
   def taExtras(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(col("doc_id"),
-      TextAnalysis.subwordCount(col("text")).as("n_subwords"),
-      TextAnalysis.rollingHash(col("text")).as("rolling_hash"))
-      .orderBy("doc_id")
+    sortedRows(docs(spark, dir), "doc_id") {
+      _.select(col("doc_id"),
+        TextAnalysis.subwordCount(col("text")).as("n_subwords"),
+        TextAnalysis.rollingHash(col("text")).as("rolling_hash"))
+    }
 
   /** Exact-duplicate groups by normalized sha256 fingerprint. The corpus is
    * documents plus deterministic clones (doc_id % 50 == 0, re-keyed +500000,
@@ -344,9 +383,9 @@ object Catalog {
     val multiline = d.filter(col("doc_id") % 75 === 0)
       .withColumn("doc_id", col("doc_id") + 400000)
       .withColumn("text", concat(col("text"), lit("\n"), col("text")))
-    Curation.repetitionMetrics(
-      d.unionByName(doubled).unionByName(multiline), "doc_id", "text")
-      .orderBy("doc_id")
+    sortedRows(d.unionByName(doubled).unionByName(multiline), "doc_id") {
+      Curation.repetitionMetrics(_, "doc_id", "text")
+    }
   }
 
   /** Benchmark decontamination: docs with doc_id % 100 == 0 serve as the
@@ -398,7 +437,7 @@ object Catalog {
       when(col("doc_id") % 45 === 0,
         lit(" from 192.168.1.42 call +1-555-867-5309")).otherwise(lit("")))
       .as("text"))
-    Curation.redactPii(planted, "doc_id", "text").orderBy("doc_id")
+    sortedRows(planted, "doc_id") { Curation.redactPii(_, "doc_id", "text") }
   }
 
   /** URL extraction + domain-blocklist audit over planted URLs (doc_id %
@@ -472,10 +511,15 @@ object Catalog {
   /** Per-document top-3 TF-IDF keywords
    * ([[graft.ops.TextAnalysis.tfidfKeywords]]). Oracle:
    * [[Oracles.taKeywords]] — the equivalent row_number window with the
-   * same score-desc/token-asc tie order. */
-  def taKeywords(spark: SparkSession, dir: String): DataFrame =
-    TextAnalysis.tfidfKeywords(docs(spark, dir), "doc_id", "text", k = 3)
-      .orderBy("doc_id", "rank")
+   * same score-desc/token-asc tie order. The idf map is built on the
+   * unpartitioned docs, so its vocabulary aggregate does not shuffle text. */
+  def taKeywords(spark: SparkSession, dir: String): DataFrame = {
+    val d = docs(spark, dir)
+    val idf = TextAnalysis.idfMap(d, "doc_id", "text")
+    sortedRows(d, "doc_id", "rank") {
+      TextAnalysis.tfidfKeywords(_, "doc_id", "text", k = 3, idf = Some(idf))
+    }
+  }
 
   /** The OPEN-VOCABULARY TF-IDF keyword path
    * ([[graft.ops.TextAnalysis.tfidfKeywordsJoin]]): same corpus, same
@@ -1290,8 +1334,9 @@ object Catalog {
    * xxhash64 of it — identical grouping barring 2^-64 collisions) and
    * restates winner choice, position coverage and reassembly. */
   def ddSpanrm(spark: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.removeDupSpans(docs(spark, dir), "doc_id", "text", k = 3)
-      .orderBy("doc_id")
+    sortedRows(docs(spark, dir), "doc_id") {
+      graft.ops.Dedup.removeDupSpans(_, "doc_id", "text", k = 3)
+    }
 
   /** Bigram PMI collocations ([[graft.ops.TextAnalysis.collocations]]):
    * top-20 adjacent pairs by pointwise mutual information at n_pair >= 5.

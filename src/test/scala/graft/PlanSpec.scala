@@ -16,6 +16,12 @@ class PlanSpec extends SparkSuite {
 
   def physical(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
+  /** The adaptive plan's current physical plan, before any stage runs. */
+  private def initialPlan(df: DataFrame) = df.queryExecution.executedPlan match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
+
   lazy val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
   test("validation pass is shuffle-free and codegen'd") {
@@ -228,12 +234,20 @@ class PlanSpec extends SparkSuite {
     // is a single shuffle-free projection — the idf rides a broadcast map
     // kernel, never a join, and per-doc top-k is array-local, never a
     // window or a re-aggregation.
-    val kw = physical(graft.ops.TextAnalysis.tfidfKeywords(
-      docs, "doc_id", "text", k = 3, nDocs = Some(1)))
+    val kwDf = graft.ops.TextAnalysis.tfidfKeywords(
+      docs, "doc_id", "text", k = 3, nDocs = Some(1))
+    val kw = physical(kwDf)
     assert(!kw.contains("Join") && !kw.contains("Window"),
       s"keyword scoring must not join or window:\n$kw")
     assert(!kw.contains("Exchange"),
       s"keyword scoring must be shuffle-free after the vocab pass:\n$kw")
+    // posexplode takes the top-k expression, not an attribute: no filter
+    // is inferred from it, so the array is built once
+    val kwFilters = initialPlan(kwDf).collect {
+      case f: org.apache.spark.sql.execution.FilterExec
+          if f.condition.sql.contains("array_sort") => f
+    }
+    assert(kwFilters.isEmpty, s"top-k array built in a filter:\n$kw")
   }
 
   test("bucketed layout: join and aggregation on the bucket key are exchange-free") {
@@ -504,5 +518,40 @@ class PlanSpec extends SparkSuite {
     assert(!rPlan.contains("SortMergeJoin") &&
       !rPlan.contains("ShuffledHashJoin"),
       s"resample must never row-scale-join:\n$rPlan")
+  }
+
+  test("per-row catalog text queries range-partition their input: one " +
+      "REPARTITION_BY_NUM range exchange, none added for the final sort") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import graft.queries.Catalog
+    val dir = SparkSuite.Sf0001Dir
+    // an ENSURE_REQUIREMENTS range exchange would sit above the per-row
+    // projection and run it twice: once to sample, once to write
+    val wrong = Seq("ta_features" -> Catalog.taFeatures _,
+        "ta_extras" -> Catalog.taExtras _,
+        "ta_pii" -> Catalog.taPii _,
+        "ta_repetition" -> Catalog.taRepetition _,
+        "ta_keywords" -> Catalog.taKeywords _).flatMap { case (name, q) =>
+      val p = initialPlan(q(spark, dir))
+      val origins = p.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
+          e.shuffleOrigin
+      }
+      if (origins == Seq(REPARTITION_BY_NUM)) None else Some(s"$name: $origins\n$p")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  test("dd_spanrm: removeDupSpans' checkpointed token and span tables are " +
+      "defaultParallelism partitions wide") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    // the range exchange runs inside the op's localCheckpoints, whose scans
+    // report no partitioning under AQE, so the final sort keeps its own
+    val p = initialPlan(graft.queries.Catalog.ddSpanrm(spark, SparkSuite.Sf0001Dir))
+    val widths = p.collect { case s: RDDScanExec => s.rdd.getNumPartitions }
+    val n = spark.sparkContext.defaultParallelism
+    assert(widths.nonEmpty && widths.forall(_ == n),
+      s"checkpoints must be $n partitions wide, got $widths:\n$p")
   }
 }

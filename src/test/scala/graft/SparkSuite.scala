@@ -13,6 +13,9 @@ object SparkSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** The sf0.001 fixture directory, `~/testdata/sf0.001`. */
+  val Sf0001Dir: String = s"${sys.props("user.home")}/testdata/sf0.001"
 }
 
 trait SparkSuite extends AnyFunSuite {
