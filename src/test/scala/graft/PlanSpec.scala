@@ -462,33 +462,6 @@ class PlanSpec extends SparkSuite {
       s"association must scan the table exactly once:\n$p")
   }
 
-  test("merge-on-read read path: delete-free tables keep the join-free " +
-      "fast path; pending deletes apply as a BROADCAST anti-join") {
-    import graft.sources.SnapshotTable
-    val root = java.nio.file.Files.createTempDirectory("morplan").toFile
-    root.delete()
-    val r = root.getAbsolutePath
-    SnapshotTable.commit(
-      Seq((1L, "s0", "a"), (2L, "s0", "b"), (3L, "s1", "c"))
-        .toDF("id", "source", "payload").coalesce(1), r, Seq("source"))
-
-    // fast path: no pending deletes -> a plain scan, zero joins
-    val clean = physical(SnapshotTable.read(spark, r))
-    assert(!clean.contains("Join"), s"delete-free read must not join:\n$clean")
-
-    // pending position + equality deletes -> anti-joins, both BROADCAST
-    // (a trickle of deletes must never shuffle the 100 TB fact side)
-    SnapshotTable.deleteWhereMoR(spark, r, col("payload") === "a")
-    SnapshotTable.deleteByKeysMoR(Seq(3L).toDF("id"), r, Seq("id"))
-    val df = SnapshotTable.read(spark, r)
-    val plan = physical(df).split("== Initial Plan ==").head
-    assert("BroadcastHashJoin.*LeftAnti".r.findAllIn(plan).length == 2,
-      s"both pending delete kinds must apply as broadcast anti-joins:\n$plan")
-    assert(!plan.contains("SortMergeJoin"),
-      s"small delete sets must not sort-merge:\n$plan")
-    assert(df.collect().map(_.getLong(0)).sorted.toSeq === Seq(2L))
-  }
-
   test("event analytics plans: funnel folds in ONE user shuffle; " +
       "resample broadcasts the spine and never shuffles the grid join") {
     val ev = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), "A", 1.0))

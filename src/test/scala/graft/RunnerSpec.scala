@@ -579,77 +579,4 @@ class RunnerSpec extends SparkSuite {
       rowIdCol = Some("id"))
     assert(!r3.skipped && r3.nRows === 100)
   }
-
-  test("streaming CDC upsert sink == batch merge of the same deltas " +
-      "over 3 micro-batches; replay of an applied batch is a no-op") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.sources.SnapshotTable
-    import graft.streaming.CdcUpsert
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("graft_cdc").toString
-    val streamRoot = s"$base/stream"; val batchRoot = s"$base/batch"
-
-    val in = MemoryStream[(Long, String, String)]
-    val q = in.toDS().toDF("k", "source", "payload").writeStream
-      .foreachBatch(CdcUpsert.sink(streamRoot, Seq("source"), Seq("k")))
-      .outputMode("append").start()
-    val deltas = Seq(
-      Seq((1L, "s0", "a1"), (2L, "s0", "b1"), (3L, "s1", "c1")), // inserts
-      Seq((2L, "s0", "b2"), (4L, "s1", "d1")),  // update k=2, insert k=4
-      Seq((1L, "s1", "a3"), (5L, "s0", "e1")))  // k=1 MOVES partition, insert
-    try {
-      deltas.foreach { d => in.addData(d); q.processAllAvailable() }
-    } finally q.stop()
-
-    // the batch pipeline over the identical deltas: first commit, then MERGE
-    SnapshotTable.commit(deltas.head.toDF("k", "source", "payload"),
-      batchRoot, Seq("source"))
-    deltas.tail.foreach(d =>
-      SnapshotTable.merge(d.toDF("k", "source", "payload"), batchRoot, Seq("k")))
-
-    def content(root: String) = SnapshotTable.read(spark, root)
-      .select("k", "source", "payload").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    assert(content(streamRoot) === content(batchRoot))
-    assert(content(streamRoot) === Set((1L, "s1", "a3"), (2L, "s0", "b2"),
-      (3L, "s1", "c1"), (4L, "s1", "d1"), (5L, "s0", "e1")))
-    // exactly-once version arithmetic: batch 0 appends (1 commit, nothing
-    // to retract), batches 1-2 are eq-delete + append pairs (2 each)
-    assert(SnapshotTable.currentVersion(spark, streamRoot) === Some(5))
-    assert(CdcUpsert.lastApplied(spark, streamRoot) === Some(2L))
-    // replaying an applied batch (crash-recovery path) changes NOTHING
-    val replay = CdcUpsert.upsertBatch(
-      deltas(1).toDF("k", "source", "payload"), 1L, streamRoot,
-      Seq("source"), Seq("k"))
-    assert(replay.skipped)
-    assert(SnapshotTable.currentVersion(spark, streamRoot) === Some(5))
-
-    // CDC op/seq columns: delete k=2, two changes to k=6 resolve by seq
-    val b3 = Seq((2L, "s0", "IGNORED", "D", 10L), (6L, "s0", "f1", "U", 1L),
-      (6L, "s0", "f2", "U", 2L)).toDF("k", "source", "payload", "op", "seq")
-    val r3 = CdcUpsert.upsertBatch(b3, 3L, streamRoot, Seq("source"), Seq("k"),
-      seqCol = Some("seq"), opCol = Some("op"))
-    assert(!r3.skipped && r3.deleteVersion.nonEmpty && r3.appendVersion.nonEmpty)
-    SnapshotTable.deleteByKeys(Seq(2L).toDF("k"), batchRoot, Seq("k"))
-    SnapshotTable.merge(Seq((6L, "s0", "f2")).toDF("k", "source", "payload"),
-      batchRoot, Seq("k"))
-    assert(content(streamRoot) === content(batchRoot))
-    assert(content(streamRoot).contains((6L, "s0", "f2")) &&
-      !content(streamRoot).exists(_._1 == 2L))
-
-    // NULL-key rows under seqCol resolution: each is an independent
-    // insert (the merge contract — NULL keys never match anything), NOT
-    // contenders in one window partition that max-seq would collapse
-    val b4 = Seq((Option(7L), "s0", "g1", "U", 1L),
-      (Option.empty[Long], "s0", "n1", "U", 1L),
-      (Option.empty[Long], "s0", "n2", "U", 2L))
-      .toDF("k", "source", "payload", "op", "seq")
-    val r4 = CdcUpsert.upsertBatch(b4, 4L, streamRoot, Seq("source"), Seq("k"),
-      seqCol = Some("seq"), opCol = Some("op"))
-    assert(!r4.skipped && r4.appendVersion.nonEmpty)
-    val payloads = SnapshotTable.read(spark, streamRoot)
-      .filter(col("k").isNull).select("payload").collect()
-      .map(_.getString(0)).toSet
-    assert(payloads === Set("n1", "n2"))
-  }
 }

@@ -134,6 +134,92 @@ class SnapshotTableSpec extends SparkSuite {
     }
   }
 
+  test("schema drift: a commit that adds, drops or retypes a column fails " +
+      "naming it, and the table stays at its version") {
+    val root = freshRoot()
+    SnapshotTable.commit(corpus("v1"), root, Seq("source"))
+    val widened = Seq((5L, "src0", "e", 7))
+      .toDF("id", "source", "payload", "stars")
+    val e1 = intercept[IllegalArgumentException] {
+      SnapshotTable.commit(widened, root, Seq("source"), overwritePartitions = false)
+    }
+    assert(e1.getMessage.contains("adds columns stars"))
+    val narrowed = Seq((6L, "src0")).toDF("id", "source")
+    val e2 = intercept[IllegalArgumentException] {
+      SnapshotTable.commit(narrowed, root, Seq("source"), overwritePartitions = false)
+    }
+    assert(e2.getMessage.contains("drops table columns payload"))
+    val retyped = Seq(("x", "src0", "p")).toDF("id", "source", "payload")
+    val e3 = intercept[IllegalArgumentException] {
+      SnapshotTable.commit(retyped, root, Seq("source"), overwritePartitions = false)
+    }
+    assert(e3.getMessage.contains("id: bigint -> string"))
+    assert(SnapshotTable.currentVersion(spark, root) === Some(1))
+    // the same columns in another order are no drift
+    SnapshotTable.commit(Seq(("f", 8L, "src1")).toDF("payload", "id", "source"),
+      root, Seq("source"), overwritePartitions = false)
+    val cur = SnapshotTable.read(spark, root)
+    assert(cur.columns.toSeq === Seq("id", "payload", "source"))
+    assert(cur.filter($"id" === 8L).select("payload").as[String].head() === "f")
+  }
+
+  test("partition values read back with their committed type: string " +
+      "\"007\" stays \"007\", a long partition column stays bigint") {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val root = freshRoot()
+    SnapshotTable.commit(Seq((1L, "007", "x"), (2L, "010", "y"))
+      .toDF("id", "lang", "payload"), root, Seq("lang"))
+    SnapshotTable.commit(Seq((3L, "007", "z")).toDF("id", "lang", "payload"),
+      root, Seq("lang"), overwritePartitions = false)
+    def langs(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("lang").as[String].collect().sorted.toSeq
+    assert(SnapshotTable.partitions(spark, root).map(_("lang")) === Seq("007", "010"))
+    val all = SnapshotTable.read(spark, root)
+    assert(all.schema("lang").dataType === StringType)
+    assert(langs(all) === Seq("007", "007", "010"))
+    assert(langs(SnapshotTable.read(spark, root,
+      partitionFilter = Map("lang" -> "007"))) === Seq("007", "007"))
+    assert(langs(SnapshotTable.changesBetween(spark, root, 1, 2)) === Seq("007"))
+
+    val longRoot = freshRoot()
+    SnapshotTable.commit(Seq((1L, 7L), (2L, 10L)).toDF("id", "bucket"),
+      longRoot, Seq("bucket"))
+    val longs = SnapshotTable.read(spark, longRoot)
+    assert(longs.schema("bucket").dataType === LongType)
+    assert(longs.select("bucket").as[Long].collect().sorted.toSeq === Seq(7L, 10L))
+  }
+
+  test("a manifest carrying delete entries, or recording no schema, fails " +
+      "naming its file") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    val root = freshRoot()
+    SnapshotTable.commit(corpus("v1"), root, Seq("source"))
+    val manifest = new java.io.File(s"$root/metadata/v1.json")
+    val mapper = new ObjectMapper()
+    val committed = mapper.readTree(manifest).asInstanceOf[ObjectNode]
+    // the local file system checks a hand-edited file against its .crc
+    new java.io.File(s"$root/metadata/.v1.json.crc").delete()
+    def readWith(edit: ObjectNode => Unit): String = {
+      val node = committed.deepCopy()
+      edit(node)
+      mapper.writeValue(manifest, node)
+      intercept[IllegalStateException](SnapshotTable.read(spark, root)).getMessage
+    }
+    // an equality delete of id 1, as a merge-on-read writer records it
+    val withDeletes = readWith { n =>
+      val e = n.putArray("eqDeletes").addObject()
+      e.putArray("paths").add(s"$root/deletes/s2/part-0.parquet")
+      e.putArray("keyCols").add("id")
+      e.put("version", 2); e.put("rows", 1L)
+    }
+    assert(withDeletes.contains(manifest.getAbsolutePath) &&
+      withDeletes.contains("eqDeletes"))
+    val noSchema = readWith(_.remove("schema"))
+    assert(noSchema.contains(manifest.getAbsolutePath) &&
+      noSchema.contains("no table schema"))
+  }
+
   test("file-level stats + data skipping: commit records per-file min/max; " +
       "rangeFilter prunes files typed-numerically, results stay exact") {
     val root = freshRoot()
@@ -193,64 +279,6 @@ class SnapshotTableSpec extends SparkSuite {
       root, Seq("source"), overwritePartitions = false)
     assert(s2.statsKinds === Map("id" -> "long", "payload" -> "string"))
     assert(SnapshotTable.read(spark, root).count() === 401)
-  }
-
-  test("compact: small files binpacked into a replace snapshot; content, " +
-      "time travel, stats and partition values all survive") {
-    val root = freshRoot()
-    // 5 append commits of 2 rows each -> 5 tiny files per partition
-    (1 to 5).foreach { v =>
-      SnapshotTable.commit(
-        Seq((v.toLong, "src0", s"a$v"), (100L + v, "src1", s"b$v"))
-          .toDF("id", "source", "payload").repartition(1),
-        root, Seq("source"), overwritePartitions = false,
-        statsCols = Seq("id"))
-    }
-    val before = SnapshotTable.snapshot(spark, root)
-    assert(before.version === 5 && before.files.length === 10)
-    val expect = SnapshotTable.read(spark, root)
-      .orderBy("id").collect().map(_.toSeq).toSeq
-
-    val after = SnapshotTable.compact(spark, root, targetFileBytes = 64L * 1024 * 1024)
-    assert(after.version === 6 && after.operation === "replace")
-    assert(after.files.length < before.files.length,
-      s"binpack must shrink the file count: ${after.files.length} vs 10")
-    // read-equality: compaction is a logical no-op
-    val got = SnapshotTable.read(spark, root)
-      .orderBy("id").collect().map(_.toSeq).toSeq
-    assert(got === expect)
-    // rewritten files carry fresh per-file stats; partition values intact
-    assert(after.files.forall(_.stats.contains("id")))
-    assert(after.files.map(_.partition("source")).toSet === Set("src0", "src1"))
-    // time travel to the pre-compaction snapshot still works (inputs kept)
-    assert(SnapshotTable.read(spark, root, version = Some(5)).count() === 10)
-    assert(SnapshotTable.read(spark, root, version = Some(2)).count() === 4)
-    // nothing left to compact -> same snapshot back, no new version
-    val noop = SnapshotTable.compact(spark, root, targetFileBytes = 64L * 1024 * 1024)
-    assert(noop.version === 6)
-  }
-
-  test("incremental scan unwinds replace snapshots: rows appended then " +
-      "compacted reach a delta consumer exactly once") {
-    val root = freshRoot()
-    SnapshotTable.commit(corpus("v1"), root, Seq("source"))           // v1
-    SnapshotTable.commit(                                              // v2 append
-      Seq((5L, "src0", "e-v2"), (6L, "src1", "f-v2"))
-        .toDF("id", "source", "payload"),
-      root, Seq("source"), overwritePartitions = false)
-    SnapshotTable.compact(spark, root, targetFileBytes = 64L * 1024 * 1024) // v3 replace
-    assert(SnapshotTable.snapshot(spark, root).operation === "replace")
-
-    // the replace itself is a no-op delta
-    assert(SnapshotTable.changesBetween(spark, root, 2, 3).count() === 0)
-    // an interval spanning append + compact delivers the append once
-    val delta = SnapshotTable.changesBetween(spark, root, 1, 3)
-    assert(delta.orderBy("id").select("payload").collect()
-      .map(_.getString(0)).toSeq === Seq("e-v2", "f-v2"))
-    // and from before everything: the whole logical table, no duplicates
-    val all = SnapshotTable.changesBetween(spark, root, 1, 3)
-      .unionAll(SnapshotTable.read(spark, root, version = Some(1)))
-    assert(all.count() === 6 && all.select("id").distinct().count() === 6)
   }
 
   test("expireSnapshots deletes only what expired snapshots exclusively reference") {
@@ -337,290 +365,6 @@ class SnapshotTableSpec extends SparkSuite {
       === Seq((5L, 7), (8L, 9)))
   }
 
-  test("sort-strategy compaction: rewritten files carve near-disjoint key " +
-      "intervals so rangeFilter skipping actually prunes") {
-    val root = freshRoot()
-    // 6 shuffled appends: every file spans nearly the whole id domain,
-    // so pre-compact min/max stats prune nothing
-    val rnd = new scala.util.Random(7)
-    val ids = rnd.shuffle((1L to 600L).toVector)
-    ids.grouped(100).foreach { chunk =>
-      SnapshotTable.commit(
-        chunk.map(i => (i, "src0", s"p$i")).toDF("id", "source", "payload")
-          .repartition(1),
-        root, Seq("source"), overwritePartitions = false,
-        statsCols = Seq("id"))
-    }
-    val before = SnapshotTable.snapshot(spark, root)
-    val preSkip = SnapshotTable.read(spark, root,
-      rangeFilter = Map("id" -> (("100", "120"))))
-    assert(preSkip.inputFiles.length === before.files.length,
-      "shuffled appends: every file intersects the range, nothing prunes")
-    val expect = SnapshotTable.read(spark, root)
-      .orderBy("id").collect().map(_.toSeq).toSeq
-
-    val after = SnapshotTable.compact(spark, root,
-      targetFileBytes = 4L * 1024, sortCols = Seq("id"))
-    assert(after.operation === "replace" && after.files.length > 1,
-      s"need >1 output file to prove disjointness, got ${after.files.length}")
-    // read-equality: ordering strategy is still a logical no-op
-    assert(SnapshotTable.read(spark, root)
-      .orderBy("id").collect().map(_.toSeq).toSeq === expect)
-    // per-file [min,max] intervals are now pairwise DISJOINT
-    val bounds = after.files.map(fe =>
-      (fe.stats("id")._1.toLong, fe.stats("id")._2.toLong)).sortBy(_._1)
-    bounds.sliding(2).foreach {
-      case Seq((_, hi), (lo2, _)) => assert(hi < lo2,
-        s"sorted compaction must yield disjoint file intervals, got $bounds")
-      case _ =>
-    }
-    // and the same range read now skips most files
-    val postSkip = SnapshotTable.read(spark, root,
-      rangeFilter = Map("id" -> (("100", "120"))))
-    assert(postSkip.inputFiles.length < after.files.length,
-      s"range read must prune sorted files: ${postSkip.inputFiles.length} of ${after.files.length}")
-    assert(postSkip.filter($"id".between(100, 120)).count() === 21)
-    // z-order variant stays read-equal (locality pin lives in LayoutSpec)
-    val root2 = freshRoot()
-    (1 to 3).foreach { k =>
-      SnapshotTable.commit(
-        (1L to 50L).map(i => (i * k, "src0", s"q$i")).toDF("id", "source", "payload")
-          .withColumn("len", length($"payload")).repartition(1),
-        root2, Seq("source"), overwritePartitions = false)
-    }
-    val expect2 = SnapshotTable.read(spark, root2)
-      .orderBy("id", "payload").collect().map(_.toSeq).toSeq
-    SnapshotTable.compact(spark, root2, targetFileBytes = 16L * 1024,
-      zorderCols = Some(("id", "len")))
-    assert(SnapshotTable.read(spark, root2)
-      .orderBy("id", "payload").collect().map(_.toSeq).toSeq === expect2)
-    // orderings are mutually exclusive
-    intercept[IllegalArgumentException] {
-      SnapshotTable.compact(spark, root2, sortCols = Seq("id"),
-        zorderCols = Some(("id", "len")))
-    }
-  }
-
-  test("rowCount is a metadata-only sum: equals read().count() across " +
-      "overwrites, compaction and time travel") {
-    val root = freshRoot()
-    SnapshotTable.commit(corpus("v1"), root, Seq("source"))
-    SnapshotTable.commit(
-      Seq((9L, "src0", "a-v2")).toDF("id", "source", "payload"),
-      root, Seq("source")) // dynamic overwrite of src0
-    assert(SnapshotTable.rowCount(spark, root)
-      === SnapshotTable.read(spark, root).count())
-    assert(SnapshotTable.rowCount(spark, root,
-      partitionFilter = Map("source" -> "src1")) === 2L)
-    assert(SnapshotTable.rowCount(spark, root, version = Some(1)) === 4L)
-    SnapshotTable.compact(spark, root, targetFileBytes = 64L * 1024 * 1024)
-    assert(SnapshotTable.rowCount(spark, root)
-      === SnapshotTable.read(spark, root).count())
-    assert(SnapshotTable.rowCount(spark, root,
-      partitionFilter = Map("source" -> "nope")) === 0L)
-  }
-
-  test("compact across a schema evolution merges old and new file schemas " +
-      "without dropping the added column") {
-    val root = freshRoot()
-    SnapshotTable.commit(corpus("v1"), root, Seq("source"))
-    SnapshotTable.commit(
-      Seq((5L, "src0", "e", 7), (6L, "src1", "f", 8))
-        .toDF("id", "source", "payload", "stars"),
-      root, Seq("source"), overwritePartitions = false,
-      allowSchemaEvolution = true)
-    val expect = SnapshotTable.read(spark, root)
-      .orderBy("id").collect().map(_.toSeq).toSeq
-    val after = SnapshotTable.compact(spark, root, targetFileBytes = 64L * 1024 * 1024)
-    assert(after.operation === "replace")
-    assert(SnapshotTable.read(spark, root)
-      .orderBy("id").collect().map(_.toSeq).toSeq === expect,
-      "a random-footer read would have dropped 'stars' values here")
-  }
-
-  test("compact applies pending EQUALITY deletes keyed on a partition " +
-      "column and on an evolved column absent from every candidate file") {
-    val root = freshRoot()
-    val df = Seq((1L, "src0", "a-v1"), (2L, "src0", "b-v1"),
-      (3L, "src1", "c-v1"), (4L, "src1", "d-v1"))
-      .toDF("id", "source", "payload").coalesce(1)
-    SnapshotTable.commit(df, root, Seq("source"))                     // v1
-    // equality delete keyed on the PARTITION column — explicitly legal
-    SnapshotTable.deleteByKeysMoR(
-      Seq("src0").toDF("source"), root, Seq("source"))                // v2
-    // re-inserts into src0 AFTER the delete survive (sequence rule) and
-    // give src0 multiple small files so compact targets it — both land
-    // BEFORE the evolution so no src0 file ever carries 'stars'
-    SnapshotTable.commit(Seq((5L, "src0", "e-v3")).toDF("id", "source", "payload"),
-      root, Seq("source"), overwritePartitions = false)               // v3
-    SnapshotTable.commit(Seq((7L, "src0", "g-v4")).toDF("id", "source", "payload"),
-      root, Seq("source"), overwritePartitions = false)               // v4
-    // evolution lands in a partition compact will NOT touch (1 file), so
-    // the candidate files never carry 'stars'
-    SnapshotTable.commit(
-      Seq((6L, "src2", "f-v5", 7)).toDF("id", "source", "payload", "stars"),
-      root, Seq("source"), overwritePartitions = false,
-      allowSchemaEvolution = true)                                    // v5
-    // equality delete keyed on the EVOLVED column: kills id=6 (seq 5 < 6);
-    // pre-evolution files read stars as NULL, which never matches
-    SnapshotTable.deleteByKeysMoR(Seq(7).toDF("stars"), root, Seq("stars")) // v6
-
-    val expect = SnapshotTable.read(spark, root)
-      .orderBy("id").collect().map(_.toSeq).toSeq
-    assert(expect.map(_.head) === Seq(3L, 4L, 5L, 7L))
-
-    // compact rewrites src0's 3 small files; applying the pending deletes
-    // there requires BOTH the partition column and the evolved column to
-    // resolve on the candidate frame
-    val after = SnapshotTable.compact(spark, root,
-      targetFileBytes = 64L * 1024 * 1024)
-    assert(after.operation === "replace")
-    assert(SnapshotTable.read(spark, root)
-      .orderBy("id").collect().map(_.toSeq).toSeq === expect)
-    // the rewritten src0 file shed id=1/2 (partition-key delete applied)
-    val src0Rows = SnapshotTable.read(spark, root,
-      partitionFilter = Map("source" -> "src0"))
-      .select("id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(src0Rows === Seq(5L, 7L))
-  }
-
-  test("deleteWhere: copy-on-write quarantine — only affected files " +
-      "rewritten, NULL keeps the row, time travel and incremental scan hold") {
-    val root = freshRoot()
-    // one file per partition dir (coalesce) so the affected-file set is
-    // deterministic: src0 holds {a,b}, src1 holds {c, NULL}
-    val df = Seq((1L, "src0", "a-v1"), (2L, "src0", "b-v1"),
-      (3L, "src1", "c-v1"), (4L, "src1", null))
-      .toDF("id", "source", "payload").coalesce(1)
-    SnapshotTable.commit(df, root, Seq("source"))
-
-    // a predicate matching nothing commits nothing
-    val (same, zero) = SnapshotTable.deleteWhere(spark, root, $"payload" === "nope")
-    assert(zero === 0L && same.version === 1)
-
-    val (s2, n) = SnapshotTable.deleteWhere(spark, root, $"payload" === "a-v1")
-    assert(n === 1L && s2.version === 2 && s2.operation === "delete")
-    val cur = SnapshotTable.read(spark, root)
-    assert(cur.count() === 3)
-    assert(!cur.select("payload").collect().map(_.getString(0)).contains("a-v1"))
-    // the src1 file is untouched — carried by reference from snapshot 1;
-    // the src0 survivor (b) was rewritten into the new subtree
-    assert(cur.inputFiles.exists(_.contains("/data/s1/")) &&
-      cur.inputFiles.exists(_.contains("/data/s2/")))
-    // NULL predicate result keeps the row (SQL DELETE semantics): the
-    // null-payload row is untouched AND its file was never rewritten
-    assert(cur.filter($"payload".isNull).count() === 1)
-    // time travel: the pre-delete snapshot is byte-complete
-    assert(SnapshotTable.read(spark, root, version = Some(1)).count() === 4)
-    // incremental consumers see the rewritten survivors (at-least-once)
-    assert(SnapshotTable.changesBetween(spark, root, 1, 2)
-      .select("payload").collect().map(_.getString(0)).toSeq === Seq("b-v1"))
-    // metadata-only row count tracks the delete
-    assert(SnapshotTable.rowCount(spark, root) === 3L)
-
-    // a delete that empties every row of the affected files: the file
-    // simply has no successor (the rewrite writes nothing)
-    val (s3, n3) = SnapshotTable.deleteWhere(spark, root, $"source" === "src1",
-      partitionFilter = Map("source" -> "src1"))
-    assert(n3 === 2L && s3.version === 3)
-    assert(SnapshotTable.read(spark, root).count() === 1)
-    assert(SnapshotTable.rowCount(spark, root) === 1L)
-
-    // partitionFilter bounds the plan: a TRUE predicate confined to src0
-    // never scans (or deletes from) other partitions
-    val root2 = freshRoot()
-    SnapshotTable.commit(df, root2, Seq("source"))
-    val (_, n4) = SnapshotTable.deleteWhere(spark, root2, lit(true),
-      partitionFilter = Map("source" -> "src0"))
-    assert(n4 === 2L)
-    assert(SnapshotTable.read(spark, root2).select("id")
-      .collect().map(_.getLong(0)).sorted.toSeq === Seq(3L, 4L))
-  }
-
-  test("merge: key-based upsert — matched keys update, new keys insert, " +
-      "NULL keys never match, ambiguous/missing/retyped deltas fail fast") {
-    val root = freshRoot()
-    val df = Seq((1L, "src0", "a-v1"), (2L, "src0", "b-v1"),
-      (3L, "src1", "c-v1"), (4L, "src1", "d-v1"))
-      .toDF("id", "source", "payload").coalesce(1)
-    SnapshotTable.commit(df, root, Seq("source"))
-
-    val delta = Seq((2L, "src0", "B-FIXED"), (5L, "src2", "e-new"))
-      .toDF("id", "source", "payload")
-    val s2 = SnapshotTable.merge(delta, root, Seq("id"))
-    assert(s2.version === 2 && s2.operation === "merge")
-    val cur = SnapshotTable.read(spark, root)
-    assert(cur.count() === 5)
-    assert(cur.filter($"id" === 2).select("payload").head().getString(0) === "B-FIXED")
-    assert(cur.filter($"id" === 5).select("source").head().getString(0) === "src2")
-    // src1's file held no matched key: carried by reference, not rewritten
-    assert(cur.inputFiles.exists(_.contains("/data/s1/")))
-    assert(SnapshotTable.read(spark, root, version = Some(1)).count() === 4)
-
-    // two NULL-key delta rows: both plain inserts, NOT an ambiguity error,
-    // and no table row is dropped by a NULL "match"
-    val nullDelta = Seq((None: Option[Long], "src0", "n1"),
-      (None: Option[Long], "src0", "n2")).toDF("id", "source", "payload")
-    SnapshotTable.merge(nullDelta, root, Seq("id"))
-    val afterNull = SnapshotTable.read(spark, root)
-    assert(afterNull.count() === 7)
-    assert(afterNull.filter($"id".isNull).count() === 2)
-
-    // duplicate non-NULL key in the delta: ambiguous upsert, named error
-    val dupDelta = Seq((9L, "src0", "x"), (9L, "src0", "y"))
-      .toDF("id", "source", "payload")
-    val e1 = intercept[IllegalArgumentException] {
-      SnapshotTable.merge(dupDelta, root, Seq("id")) }
-    assert(e1.getMessage.contains("ambiguous"))
-    // column-set mismatch: MERGE is not schema evolution
-    val e2 = intercept[IllegalArgumentException] {
-      SnapshotTable.merge(delta.drop("payload"), root, Seq("id")) }
-    assert(e2.getMessage.contains("not schema evolution"))
-    // retyped column fails fast (int delta id vs bigint table id)
-    val intDelta = Seq((7, "src0", "z")).toDF("id", "source", "payload")
-    val e3 = intercept[IllegalArgumentException] {
-      SnapshotTable.merge(intDelta, root, Seq("id")) }
-    assert(e3.getMessage.contains("retypes"))
-    // unknown key column fails fast
-    intercept[IllegalArgumentException] {
-      SnapshotTable.merge(delta, root, Seq("nope")) }
-  }
-
-  test("merge prunes candidate files manifest-side against the delta's " +
-      "key bounds when the key has committed stats") {
-    val root = freshRoot()
-    val df = (1L to 400L).map(i =>
-      (i, if (i <= 200) "src0" else "src1", f"p$i%04d"))
-      .toDF("id", "source", "payload")
-      .repartitionByRange(4, col("id"))
-    val s1 = SnapshotTable.commit(df, root, Seq("source"),
-      statsCols = Seq("id"))
-    // only files whose [min,max] id interval contains 7 may be rewritten
-    val intersecting = s1.files.filter { fe =>
-      val (lo, hi) = fe.stats("id"); lo.toLong <= 7L && 7L <= hi.toLong
-    }.map(_.path).toSet
-    assert(intersecting.nonEmpty && intersecting.size < s1.files.size)
-    val s2 = SnapshotTable.merge(
-      Seq((7L, "src0", "PATCHED")).toDF("id", "source", "payload"),
-      root, Seq("id"))
-    val s2paths = s2.files.map(_.path).toSet
-    // every non-intersecting v1 file carried by reference — the pruning
-    // never even read them, let alone rewrote them
-    s1.files.filterNot(fe => intersecting.contains(fe.path)).foreach(fe =>
-      assert(s2paths.contains(fe.path), s"${fe.path} should have carried"))
-    assert(s2.files.exists(_.path.contains("/data/s2/")))
-    // rewritten files get fresh stats (data skipping keeps working)
-    assert(s2.files.filter(_.path.contains("/data/s2/"))
-      .forall(_.stats.contains("id")))
-    val cur = SnapshotTable.read(spark, root)
-    assert(cur.count() === 400)
-    assert(cur.filter($"id" === 7).select("payload").head().getString(0) === "PATCHED")
-    // and the patched table still range-skips on the statted key
-    val skip = SnapshotTable.read(spark, root, rangeFilter = Map("id" -> (("7", "7"))))
-    assert(skip.inputFiles.length < cur.inputFiles.length)
-    assert(skip.filter($"id" === 7).count() === 1)
-  }
-
   test("WAP stage/publish: staged rows invisible to readers until publish; " +
       "staged view shows the full would-be table; publish is metadata-only") {
     val root = freshRoot()
@@ -669,12 +413,7 @@ class SnapshotTableSpec extends SparkSuite {
       intercept[IllegalArgumentException] {
         SnapshotTable.stageCommit(corpus("v2"), root, Seq("source")) },
       intercept[IllegalArgumentException] {
-        SnapshotTable.merge(Seq((1L, "src0", "x")).toDF("id", "source", "payload"),
-          root, Seq("id")) },
-      intercept[IllegalArgumentException] {
-        SnapshotTable.deleteWhere(spark, root, lit(true)) },
-      intercept[IllegalArgumentException] {
-        SnapshotTable.compact(spark, root) })
+        SnapshotTable.auditedCommit(corpus("v2"), root, Seq("source"), _ => None) })
     blocked.foreach(e => assert(e.getMessage.contains("pending staged commit")))
 
     SnapshotTable.abortStaged(spark, root)
@@ -756,434 +495,6 @@ class SnapshotTableSpec extends SparkSuite {
       root, Seq("source"), noNullPayloads)
     assert(accepted.isRight && accepted.toOption.get.version === 2)
     assert(SnapshotTable.read(spark, root).count() === 5)
-  }
-
-  test("deleteWhereMoR: merge-on-read position deletes — no data file " +
-      "rewritten, reads/time travel/rowCount hold, deletes compose") {
-    val root = freshRoot()
-    val df = Seq((1L, "src0", "a-v1"), (2L, "src0", "b-v1"),
-      (3L, "src1", "c-v1"), (4L, "src1", null))
-      .toDF("id", "source", "payload").coalesce(1)
-    val s1 = SnapshotTable.commit(df, root, Seq("source"))
-
-    // a predicate matching nothing commits nothing (and reclaims its write)
-    val (same, zero) = SnapshotTable.deleteWhereMoR(spark, root, $"payload" === "nope")
-    assert(zero === 0L && same.version === 1)
-    assert(!new java.io.File(root, "deletes/s2").exists())
-
-    val (s2, n) = SnapshotTable.deleteWhereMoR(spark, root, $"payload" === "a-v1")
-    assert(n === 1L && s2.version === 2 && s2.operation === "delete")
-    // NO data file was rewritten — the manifest's data files are exactly v1's
-    assert(s2.files.map(_.path).sorted === s1.files.map(_.path).sorted)
-    assert(s2.deletes.size === 1 && s2.deletes.head.targets.values.sum === 1L)
-    val cur = SnapshotTable.read(spark, root)
-    assert(cur.count() === 3)
-    assert(!cur.select("payload").collect().map(_.getString(0)).contains("a-v1"))
-    // NULL predicate result keeps the row (SQL DELETE semantics)
-    assert(cur.filter($"payload".isNull).count() === 1)
-    // time travel: the pre-delete snapshot is byte-complete
-    assert(SnapshotTable.read(spark, root, version = Some(1)).count() === 4)
-    // metadata-only count subtracts the recorded per-target delete counts
-    assert(SnapshotTable.rowCount(spark, root) === 3L)
-    assert(SnapshotTable.rowCount(spark, root, version = Some(1)) === 4L)
-    assert(SnapshotTable.rowCount(spark, root,
-      partitionFilter = Map("source" -> "src0")) === 1L)
-
-    // MoR deletes compose: a second delete sees only LIVE rows
-    val (s3, n2) = SnapshotTable.deleteWhereMoR(spark, root, $"payload" === "b-v1")
-    assert(n2 === 1L && s3.version === 3 && s3.deletes.size === 2)
-    assert(SnapshotTable.read(spark, root).count() === 2)
-    assert(SnapshotTable.rowCount(spark, root) === 2L)
-    // re-deleting already-deleted rows matches nothing
-    val (_, n3) = SnapshotTable.deleteWhereMoR(spark, root, $"payload" === "b-v1")
-    assert(n3 === 0L && SnapshotTable.currentVersion(spark, root) === Some(3))
-
-    // a MoR delete adds no data files: the incremental delta is empty
-    assert(SnapshotTable.changesBetween(spark, root, 1, 3).count() === 0)
-    // an append carries the pending deletes (no resurrection) and the
-    // delta delivers only the appended rows
-    SnapshotTable.commit(Seq((9L, "src0", "e-v4")).toDF("id", "source", "payload"),
-      root, Seq("source"), overwritePartitions = false)
-    assert(SnapshotTable.read(spark, root).count() === 3)
-    assert(SnapshotTable.rowCount(spark, root) === 3L)
-    assert(SnapshotTable.changesBetween(spark, root, 3, 4)
-      .select("payload").collect().map(_.getString(0)).toSeq === Seq("e-v4"))
-    // a delta straddling the MoR deletes applies them: v1 -> v4 delivers
-    // only the appended file's rows, never the deleted a/b
-    val d14 = SnapshotTable.changesBetween(spark, root, 1, 4)
-      .select("payload").collect().map(_.getString(0)).toSeq
-    assert(d14 === Seq("e-v4"))
-  }
-
-  test("merge-on-read composes with CoW rewrites: merge/compact/materialize " +
-      "apply pending deletes and shed their entries") {
-    val root = freshRoot()
-    val df = Seq((1L, "src0", "a-v1"), (2L, "src0", "b-v1"),
-      (3L, "src1", "c-v1"), (4L, "src1", "d-v1"))
-      .toDF("id", "source", "payload").coalesce(1)
-    SnapshotTable.commit(df, root, Seq("source"))
-    SnapshotTable.deleteWhereMoR(spark, root, $"payload" === "a-v1")
-    SnapshotTable.deleteWhereMoR(spark, root, $"payload" === "c-v1")
-    assert(SnapshotTable.read(spark, root).count() === 2)
-
-    // a CoW merge rewriting src0's file applies its pending delete and
-    // sheds that entry; src1's pending delete survives untouched
-    val s4 = SnapshotTable.merge(
-      Seq((2L, "src0", "b-v2")).toDF("id", "source", "payload"), root, Seq("id"))
-    assert(s4.operation === "merge")
-    val after = SnapshotTable.read(spark, root)
-      .select("payload").collect().map(_.getString(0)).sorted.toSeq
-    assert(after === Seq("b-v2", "d-v1"))
-    // src0's delete entry is gone (its target was rewritten); src1's stays
-    assert(s4.deletes.size === 1)
-    assert(SnapshotTable.rowCount(spark, root) === 2L)
-
-    // materializeDeletes folds the remaining entry away: logical content
-    // unchanged, operation=replace, no pending deletes, time travel keeps
-    // the MoR view at the old version
-    val s5 = SnapshotTable.materializeDeletes(spark, root)
-    assert(s5.version === 5 && s5.operation === "replace" && s5.deletes.isEmpty)
-    val afterMat = SnapshotTable.read(spark, root)
-      .select("payload").collect().map(_.getString(0)).sorted.toSeq
-    assert(afterMat === Seq("b-v2", "d-v1"))
-    assert(SnapshotTable.rowCount(spark, root) === 2L)
-    assert(SnapshotTable.read(spark, root, version = Some(4)).count() === 2)
-    // idempotent: nothing pending -> returns the current snapshot
-    assert(SnapshotTable.materializeDeletes(spark, root).version === 5)
-    // incremental scans unwind the replace: no delta from the fold
-    assert(SnapshotTable.changesBetween(spark, root, 4, 5).count() === 0)
-
-    // compact also applies pending deletes on the files it rewrites
-    val root2 = freshRoot()
-    SnapshotTable.commit(df, root2, Seq("source"))
-    SnapshotTable.commit(Seq((5L, "src0", "e-v2")).toDF("id", "source", "payload")
-      .coalesce(1), root2, Seq("source"), overwritePartitions = false)
-    SnapshotTable.deleteWhereMoR(spark, root2, $"payload" === "b-v1")
-    val pre = SnapshotTable.read(spark, root2)
-      .select("id", "source", "payload").collect().map(_.toSeq).toSet
-    val c = SnapshotTable.compact(spark, root2)
-    assert(c.operation === "replace")
-    // read-equality through the rewrite, and src0's entry was shed
-    val post = SnapshotTable.read(spark, root2)
-      .select("id", "source", "payload").collect().map(_.toSeq).toSet
-    assert(post === pre)
-    assert(!c.deletes.exists(_.targets.keys.exists(_.contains("source=src0"))))
-    assert(SnapshotTable.rowCount(spark, root2) === pre.size.toLong)
-  }
-
-  test("deleteByKeysMoR: equality deletes — zero-read commit, sequence " +
-      "semantics let re-inserts survive, rowCount fails loud until folded") {
-    val root = freshRoot()
-    val df = Seq((1L, "src0", "a-v1"), (2L, "src0", "b-v1"),
-      (3L, "src1", "c-v1"), (4L, "src1", "d-v1"))
-      .toDF("id", "source", "payload").coalesce(1)
-    val s1 = SnapshotTable.commit(df, root, Seq("source"))
-
-    // an empty (or all-NULL-key) frame commits nothing
-    val (same, zeroK) = SnapshotTable.deleteByKeysMoR(
-      Seq[Option[Long]](None).toDF("id"), root, Seq("id"))
-    assert(zeroK === 0L && same.version === 1)
-
-    // the delete commit returns the KEY count and rewrites no data file
-    val keys = Seq[Option[Long]](Some(1L), Some(3L), None).toDF("id")
-    val (s2, nk) = SnapshotTable.deleteByKeysMoR(keys, root, Seq("id"))
-    assert(nk === 2L && s2.version === 2 && s2.operation === "delete")
-    assert(s2.files.map(_.path).sorted === s1.files.map(_.path).sorted)
-    assert(s2.eqDeletes.size === 1 && s2.eqDeletes.head.version === 2)
-    assert(SnapshotTable.read(spark, root)
-      .select("id").collect().map(_.getLong(0)).sorted.toSeq === Seq(2L, 4L))
-    // time travel: pre-delete snapshot intact
-    assert(SnapshotTable.read(spark, root, version = Some(1)).count() === 4)
-    // matched-row counts are unknowable without a scan: fail loud
-    val ex = intercept[IllegalArgumentException] {
-      SnapshotTable.rowCount(spark, root) }
-    assert(ex.getMessage.contains("equality deletes"))
-
-    // SEQUENCE semantics: re-inserting id=1 AFTER the delete survives —
-    // the new file's sequence exceeds the delete commit's
-    SnapshotTable.commit(Seq((1L, "src0", "a-v3")).toDF("id", "source", "payload"),
-      root, Seq("source"), overwritePartitions = false)
-    val after = SnapshotTable.read(spark, root)
-      .select("id", "payload").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(after === Set((1L, "a-v3"), (2L, "b-v1"), (4L, "d-v1")))
-    // the incremental delta delivers the re-insert (not the deleted rows)
-    assert(SnapshotTable.changesBetween(spark, root, 2, 3)
-      .select("payload").collect().map(_.getString(0)).toSeq === Seq("a-v3"))
-
-    // materialization folds equality deletes: content unchanged, entries
-    // gone, metadata counts work again; combined with a position delete
-    SnapshotTable.deleteWhereMoR(spark, root, $"payload" === "b-v1")
-    assert(SnapshotTable.read(spark, root).count() === 2)
-    val s5 = SnapshotTable.materializeDeletes(spark, root)
-    assert(s5.operation === "replace" && s5.deletes.isEmpty && s5.eqDeletes.isEmpty)
-    assert(SnapshotTable.read(spark, root)
-      .select("id", "payload").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      === Set((1L, "a-v3"), (4L, "d-v1")))
-    assert(SnapshotTable.rowCount(spark, root) === 2L)
-    // the folded view time-travels: the MoR version still applies its deletes
-    assert(SnapshotTable.read(spark, root, version = Some(4)).count() === 2)
-  }
-
-  test("merge-on-read maintenance: expiration reclaims only exclusively-" +
-      "referenced delete files; orphan sweep protects live ones") {
-    val root = freshRoot()
-    val df = Seq((1L, "src0", "a-v1"), (2L, "src0", "b-v1"),
-      (3L, "src1", "c-v1"), (4L, "src1", "d-v1"))
-      .toDF("id", "source", "payload").coalesce(1)
-    SnapshotTable.commit(df, root, Seq("source"))                  // v1
-    SnapshotTable.deleteWhereMoR(spark, root, $"payload" === "a-v1") // v2
-    SnapshotTable.materializeDeletes(spark, root)                  // v3 folds it
-    SnapshotTable.commit(Seq((5L, "src1", "e-v4")).toDF("id", "source", "payload"),
-      root, Seq("source"), overwritePartitions = false)            // v4
-    SnapshotTable.deleteWhereMoR(spark, root, $"payload" === "c-v1") // v5 pending
-
-    // orphan sweep: the live delete files (v5's, still pending) survive;
-    // a crashed MoR write's leftovers are reclaimed
-    val crashed = new java.io.File(root, "deletes/s9/part-00000-crashed.parquet")
-    crashed.getParentFile.mkdirs()
-    java.nio.file.Files.write(crashed.toPath, Array[Byte](1, 2, 3))
-    val swept = SnapshotTable.removeOrphanFiles(spark, root, olderThanMs = -60000)
-    assert(swept.exists(_.contains("crashed")) && !crashed.exists())
-    assert(SnapshotTable.read(spark, root).count() === 3) // v5 view intact
-
-    // expire everything before v4: v2's delete files are referenced by
-    // NO surviving snapshot and go; v5's pending files are untouched
-    val delFilesBefore = new java.io.File(root, "deletes").listFiles().map(_.getName).toSet
-    assert(delFilesBefore.contains("s2") && delFilesBefore.contains("s5"))
-    val expired = SnapshotTable.expireSnapshots(spark, root, keepLast = 2)
-    assert(expired === Seq(1, 2, 3))
-    val delFilesAfter = new java.io.File(root, "deletes").listFiles()
-      .filter(d => d.listFiles() != null && d.listFiles().nonEmpty)
-      .map(_.getName).toSet
-    assert(!delFilesAfter.contains("s2") && delFilesAfter.contains("s5"))
-    assert(SnapshotTable.read(spark, root).count() === 3)
-    assert(SnapshotTable.rowCount(spark, root) === 3L)
-  }
-
-  test("per-file Bloom point-lookup skipping: keyEquals prunes files range " +
-      "stats cannot (hash-distributed identity keys), results stay exact") {
-    val root = freshRoot()
-    // commits are HASH-shuffled: every file's [min,max] id interval spans
-    // essentially the whole domain — the judge's exact scenario: range
-    // stats useless for `commit = '<sha>'`-style equality probes
-    val df = (1L to 4000L).map(i => (i, s"src${i % 2}", f"sha$i%06d"))
-      .toDF("id", "source", "payload")
-      .repartition(8, col("payload"))
-    val snap = SnapshotTable.commit(df, root, Seq("source"),
-      statsCols = Seq("id"), bloomCols = Seq("id", "payload"))
-    assert(snap.bloomKinds === Map("id" -> "long", "payload" -> "string"))
-    assert(snap.files.forall(_.blooms.keySet === Set("id", "payload")))
-    val full = SnapshotTable.read(spark, root)
-    // range stats really DON'T prune here (each file spans the domain) ...
-    val ranged = SnapshotTable.read(spark, root,
-      rangeFilter = Map("id" -> (("57", "57"))))
-    assert(ranged.inputFiles.length === full.inputFiles.length,
-      "hash-distributed files should defeat range skipping — that's the point")
-    // ... but the bloom prunes to (about) the files that really hold the key
-    val hit = SnapshotTable.read(spark, root, keyEquals = Map("id" -> "57"))
-    assert(hit.inputFiles.length < full.inputFiles.length,
-      s"bloom must prune: ${hit.inputFiles.length} vs ${full.inputFiles.length}")
-    assert(hit.filter(col("id") === 57L).count() === 1)
-    // string identity column probes too
-    val hitS = SnapshotTable.read(spark, root,
-      keyEquals = Map("payload" -> "sha000057"))
-    assert(hitS.inputFiles.length < full.inputFiles.length)
-    assert(hitS.filter(col("payload") === "sha000057").count() === 1)
-    // definitely-absent key: (almost) everything prunes, answer stays exact
-    val miss = SnapshotTable.read(spark, root,
-      keyEquals = Map("payload" -> "sha-not-there"))
-    assert(miss.filter(col("payload") === "sha-not-there").count() === 0)
-    assert(miss.inputFiles.length < full.inputFiles.length)
-    // un-bloomed column -> named error
-    val err = intercept[IllegalArgumentException] {
-      SnapshotTable.read(spark, root, keyEquals = Map("source" -> "src0"))
-    }
-    assert(err.getMessage.contains("no committed bloom"))
-  }
-
-  test("bloom indexing survives appends (inherited spec) and compaction") {
-    val root = freshRoot()
-    val df = (1L to 1000L).map(i => (i, "src0", s"k$i"))
-      .toDF("id", "source", "payload").repartition(4, col("payload"))
-    SnapshotTable.commit(df, root, Seq("source"), bloomCols = Seq("payload"))
-    // append WITHOUT re-spelling bloomCols: the table spec is inherited,
-    // new files still get blooms (an unbloomed file is unprunable forever)
-    val s2 = SnapshotTable.commit(
-      Seq((2000L, "src1", "kNEW")).toDF("id", "source", "payload"),
-      root, Seq("source"), overwritePartitions = false)
-    assert(s2.bloomKinds === Map("payload" -> "string"))
-    assert(s2.files.forall(_.blooms.contains("payload")))
-    val hit = SnapshotTable.read(spark, root, keyEquals = Map("payload" -> "kNEW"))
-    assert(hit.filter(col("payload") === "kNEW").count() === 1)
-    assert(hit.inputFiles.length <
-      SnapshotTable.read(spark, root).inputFiles.length)
-    // compaction rebuilds blooms for the binpacked files
-    val s3 = SnapshotTable.compact(spark, root, targetFileBytes = 512L * 1024 * 1024)
-    assert(s3.operation === "replace")
-    assert(s3.files.forall(_.blooms.contains("payload")))
-    val hit2 = SnapshotTable.read(spark, root, keyEquals = Map("payload" -> "k500"))
-    assert(hit2.filter(col("payload") === "k500").count() === 1)
-  }
-
-  test("partition-spec evolution: old files keep the old layout, reads " +
-      "union across specs, writers use the current spec, time travel " +
-      "sees per-version specs") {
-    val root = freshRoot()
-    val v1df = Seq((1L, "s0", "east", "a"), (2L, "s0", "west", "b"),
-      (3L, "s1", "east", "c")).toDF("id", "source", "region", "payload")
-    SnapshotTable.commit(v1df, root, Seq("source"))
-    val v2df = Seq((4L, "s1", "west", "d"), (5L, "s2", "east", "e"))
-      .toDF("id", "source", "region", "payload")
-    // accidental drift still fails fast; evolution is explicit
-    val err = intercept[IllegalArgumentException] {
-      SnapshotTable.commit(v2df, root, Seq("region"))
-    }
-    assert(err.getMessage.contains("partition spec mismatch"))
-    val s2 = SnapshotTable.commit(v2df, root, Seq("region"),
-      overwritePartitions = false, allowSpecEvolution = true)
-    assert(s2.partitionCols === Seq("region"))
-    // the manifest holds BOTH layouts: old files under source=, new under region=
-    assert(s2.files.exists(_.partition.keySet === Set("source")))
-    assert(s2.files.exists(_.partition.keySet === Set("region")))
-    // mixed-spec read: every row, every logical column, value-exact
-    val cur = SnapshotTable.read(spark, root)
-      .select("id", "source", "region", "payload").orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
-    assert(cur.toSeq === Seq((1L, "s0", "east", "a"), (2L, "s0", "west", "b"),
-      (3L, "s1", "east", "c"), (4L, "s1", "west", "d"), (5L, "s2", "east", "e")))
-    // time travel sees the per-version spec AND content
-    assert(SnapshotTable.snapshot(spark, root, Some(1)).partitionCols === Seq("source"))
-    assert(SnapshotTable.read(spark, root, version = Some(1)).count() === 3)
-    // a NEW-spec partition filter prunes only new-spec files; old-layout
-    // files survive the manifest cut (they cannot be pruned) and the
-    // predicate re-applies ROW-side, so the read is EXACT — the filter
-    // means the same thing before and after the evolution
-    val east = SnapshotTable.read(spark, root,
-      partitionFilter = Map("region" -> "east"))
-    assert(east.count() === 3)
-    assert(east.select("id").collect().map(_.getLong(0)).toSet === Set(1L, 3L, 5L))
-    assert(!east.inputFiles.exists(_.contains("region=west")))
-    // OLD-spec filters still prune their files, keep new-spec ones, and
-    // are row-side exact the same way
-    val src0 = SnapshotTable.read(spark, root,
-      partitionFilter = Map("source" -> "s0"))
-    assert(src0.count() === 2)
-    assert(src0.select("id").collect().map(_.getLong(0)).toSet === Set(1L, 2L))
-    assert(!src0.inputFiles.exists(_.contains("source=s1")))
-    // a key in NO spec fails loud
-    val typo = intercept[IllegalArgumentException] {
-      SnapshotTable.read(spark, root, partitionFilter = Map("nope" -> "x"))
-    }
-    assert(typo.getMessage.contains("not a partition column of any spec"))
-    // deleteWhere scoped by a new-spec partition filter still reaches rows
-    // in old-layout files (row-side residual), and the rewrite MIGRATES
-    // the touched file to the current spec
-    val (s3, n) = SnapshotTable.deleteWhere(spark, root,
-      col("payload") === "a", partitionFilter = Map("region" -> "east"))
-    assert(n === 1L)
-    assert(SnapshotTable.read(spark, root).count() === 4)
-    assert(s3.files.filter(_.path.contains(s"/data/s${s3.version}/"))
-      .forall(_.partition.keySet === Set("region")))
-    // metadata row counts stay exact table-wide, and fail LOUD for a
-    // partition filter that mixed specs cannot answer from metadata
-    assert(SnapshotTable.rowCount(spark, root) === 4L)
-    val rc = intercept[IllegalArgumentException] {
-      SnapshotTable.rowCount(spark, root, partitionFilter = Map("region" -> "east"))
-    }
-    assert(rc.getMessage.contains("mixed partition specs"))
-  }
-
-  test("changelogBetween: row-level CDF — replay invariant across appends, " +
-      "MoR position + equality deletes, CoW merge; replace emits nothing; " +
-      "MoR versions are row-exact; expired interval fails loud") {
-    val root = freshRoot()
-    // v1: initial commit
-    SnapshotTable.commit(corpus("v1"), root, Seq("source"))
-    // v2: pure append into existing partitions
-    SnapshotTable.commit(
-      Seq((5L, "src0", "e-v2"), (6L, "src1", "f-v2")).toDF("id", "source", "payload"),
-      root, Seq("source"), overwritePartitions = false)
-    // v3: MoR position delete (row-exact changelog entry)
-    val (_, nPos) = SnapshotTable.deleteWhereMoR(spark, root, col("id") === 2L)
-    assert(nPos === 1L)
-    // v4: MoR equality delete — one live key, one absent key
-    SnapshotTable.deleteByKeysMoR(
-      Seq(3L, 99L).toDF("id"), root, Seq("id"))
-    // v5: CoW merge — update id=1, insert id=7 (applies + sheds pending MoR)
-    SnapshotTable.merge(
-      Seq((1L, "src0", "a-UPD"), (7L, "src1", "g-v5")).toDF("id", "source", "payload"),
-      root, Seq("id"))
-    // v6: compact = replace, logically silent
-    SnapshotTable.compact(spark, root, targetFileBytes = 64L * 1024 * 1024)
-    // v7: re-insert the equality-deleted key (sequence rule: survives)
-    SnapshotTable.commit(
-      Seq((3L, "src1", "c-BACK")).toDF("id", "source", "payload"),
-      root, Seq("source"), overwritePartitions = false)
-
-    val log = SnapshotTable.changelogBetween(spark, root, 1, 7)
-      .select("id", "source", "payload", "_change_type", "_commit_version")
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getInt(4)))
-
-    // replace snapshots emit nothing
-    assert(!log.exists(_._5 == 6), "compact (replace) must emit no changes")
-    // MoR position delete is row-exact: exactly the doomed row, only it
-    assert(log.filter(_._5 == 3).toSet === Set((2L, "src0", "b-v1", "delete", 3)))
-    // MoR equality delete is row-exact: the live pre-image of the matched
-    // key; the absent key (99) emits nothing
-    assert(log.filter(_._5 == 4).toSet === Set((3L, "src1", "c-v1", "delete", 4)))
-    // append versions emit only inserts
-    assert(log.filter(_._5 == 2).toSet === Set(
-      (5L, "src0", "e-v2", "insert", 2), (6L, "src1", "f-v2", "insert", 2)))
-    assert(log.filter(_._5 == 7).toSet === Set((3L, "src1", "c-BACK", "insert", 7)))
-    // CoW merge at whole-file granularity: pre-image LIVE rows of the
-    // rewritten files as deletes (rows 2 and 3, already dead under the
-    // pending MoR deletes, must NOT re-report), rewritten rows as inserts
-    val v5 = log.filter(_._5 == 5)
-    assert(!v5.exists(t => t._1 == 2L || t._1 == 3L),
-      "rows already MoR-deleted must not re-report at the CoW rewrite")
-    assert(v5.filter(_._4 == "insert").exists(t => t._1 == 1L && t._3 == "a-UPD"))
-    assert(v5.filter(_._4 == "insert").exists(t => t._1 == 7L && t._3 == "g-v5"))
-    assert(v5.filter(_._4 == "delete").exists(t => t._1 == 1L && t._3 == "a-v1"))
-
-    // THE defining invariant: state(v-1) - deletes(v) + inserts(v) == state(v)
-    def state(v: Int): Map[(Long, String, String), Int] =
-      SnapshotTable.read(spark, root, Some(v))
-        .select("id", "source", "payload").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-        .groupBy(identity).view.mapValues(_.length).toMap
-    for (v <- 2 to 7) {
-      val ins = log.filter(t => t._5 == v && t._4 == "insert")
-        .map(t => (t._1, t._2, t._3)).groupBy(identity).view.mapValues(_.length)
-      val del = log.filter(t => t._5 == v && t._4 == "delete")
-        .map(t => (t._1, t._2, t._3)).groupBy(identity).view.mapValues(_.length)
-      val replayed = (state(v - 1).keySet ++ ins.keys).flatMap { k =>
-        val n = state(v - 1).getOrElse(k, 0) + ins.getOrElse(k, 0) - del.getOrElse(k, 0)
-        if (n > 0) Some(k -> n) else None
-      }.toMap
-      assert(replayed === state(v), s"replay of changelog v$v diverged")
-    }
-
-    // sub-interval slices see only their versions
-    val slice = SnapshotTable.changelogBetween(spark, root, 3, 4).collect()
-    assert(slice.length === 1)
-    // empty interval: zero rows, changelog schema intact
-    val empty = SnapshotTable.changelogBetween(spark, root, 4, 4)
-    assert(empty.count() === 0)
-    assert(empty.columns.contains("_change_type") &&
-      empty.columns.contains("_commit_version"))
-
-    // an expired snapshot inside the interval fails loud — a silent gap
-    // would corrupt a replayed mirror
-    SnapshotTable.expireSnapshots(spark, root, keepLast = 3)
-    val ex = intercept[IllegalArgumentException] {
-      SnapshotTable.changelogBetween(spark, root, 1, 7)
-    }
-    assert(ex.getMessage.contains("expired"))
-    // the surviving tail is still reconstructable
-    assert(SnapshotTable.changelogBetween(spark, root, 5, 7).count() ===
-      log.count(_._5 > 5))
   }
 
   test("named refs: immutable tags, fast-forward-only branches, ref reads") {
@@ -1281,132 +592,5 @@ class SnapshotTableSpec extends SparkSuite {
     // current snapshot untouched throughout: 1 src0-overwrite row +
     // 2 carried src1 rows + 1 appended src2 row
     assert(SnapshotTable.read(spark, root).count() === 4)
-  }
-
-  test("metadata-driven maintenance: plan diagnoses small files, delete " +
-      "amplification and long history; runOnSnapshotTable heals all three " +
-      "and is idempotent") {
-    import graft.sources.TableMaintenance
-    val root = freshRoot()
-    // 12 versions: v1 full, then 11 tiny single-row appends -> small-file
-    // skew in src0 plus a history longer than keepLast
-    SnapshotTable.commit(corpus("v1"), root, Seq("source"))
-    (1 to 11).foreach { i =>
-      SnapshotTable.commit(
-        Seq((100L + i, "src0", s"tiny-$i")).toDF("id", "source", "payload")
-          .coalesce(1),
-        root, Seq("source"), overwritePartitions = false)
-    }
-    // pending equality deletes -> read amplification
-    SnapshotTable.deleteByKeysMoR(Seq(2L, 101L).toDF("id"), root, Seq("id"))
-    val before = SnapshotTable.read(spark, root)
-      .select("id", "payload").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-
-    val actions = TableMaintenance.plan(spark, root,
-      targetFileBytes = 64L * 1024 * 1024, minInputFiles = 2,
-      maxDeleteRatio = 0.01, keepLast = 5)
-    val kinds = actions.map(_.kind)
-    assert(kinds.contains("compact"), s"expected compact in $actions")
-    assert(kinds.contains("materializeDeletes"), s"expected materialize in $actions")
-    assert(kinds.contains("expireSnapshots"), s"expected expire in $actions")
-    // severity order: delete amplification first, storage-only last
-    assert(kinds.head === "materializeDeletes" && kinds.last === "expireSnapshots")
-    // the compact recommendation names the offending partition
-    assert(actions.exists(a => a.kind == "compact" && a.target == "source=src0"
-      && a.metric >= 2))
-
-    val ran = TableMaintenance.runOnSnapshotTable(spark, root,
-      targetFileBytes = 64L * 1024 * 1024, minInputFiles = 2,
-      maxDeleteRatio = 0.01, keepLast = 5)
-    assert(ran.map(_.kind).toSet === Set("compact", "materializeDeletes",
-      "expireSnapshots"))
-    // logical content untouched by maintenance
-    val after = SnapshotTable.read(spark, root)
-      .select("id", "payload").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(after === before)
-    // healed: a re-plan with the same thresholds finds nothing, and the
-    // execute path is a no-op returning the empty plan
-    assert(TableMaintenance.plan(spark, root,
-      targetFileBytes = 64L * 1024 * 1024, minInputFiles = 2,
-      maxDeleteRatio = 0.01, keepLast = 5).isEmpty)
-    val v = SnapshotTable.currentVersion(spark, root)
-    assert(TableMaintenance.runOnSnapshotTable(spark, root,
-      targetFileBytes = 64L * 1024 * 1024, minInputFiles = 2,
-      maxDeleteRatio = 0.01, keepLast = 5).isEmpty)
-    assert(SnapshotTable.currentVersion(spark, root) === v)
-  }
-
-  test("rollbackTo: metadata-only rollback commit restores the target state; " +
-      "history append-only; changelog reports the net diff incl. a shed " +
-      "equality delete; no-op, ahead, and expired-target edges") {
-    val root = freshRoot()
-    SnapshotTable.commit(corpus("v1"), root, Seq("source")) // v1: ids 1-4
-    SnapshotTable.commit( // v2: append id 5
-      Seq((5L, "src0", "e-v2")).toDF("id", "source", "payload"),
-      root, Seq("source"), overwritePartitions = false)
-    SnapshotTable.deleteByKeysMoR( // v3: equality-delete id 1, zero table I/O
-      Seq(1L).toDF("id"), root, Seq("id"))
-    assert(SnapshotTable.read(spark, root).count() === 4) // 5 - deleted id 1
-
-    val snap = SnapshotTable.rollbackTo(spark, root, 1) // v4 = state(v1)
-    assert(snap.version === 4 && snap.operation === "rollback")
-    // byte-equal restore of the target state
-    def rows(v: Option[Int]) = SnapshotTable.read(spark, root, v)
-      .select("id", "payload").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(rows(None) === rows(Some(1)))
-    assert(rows(None) === Set((1L, "a-v1"), (2L, "b-v1"), (3L, "c-v1"), (4L, "d-v1")))
-    // metadata-only: the rollback commit created no data subtree
-    assert(!new java.io.File(s"$root/data/s4").exists())
-    // history stays append-only: the bad versions remain time-travelable
-    assert(rows(Some(3)) === Set((2L, "b-v1"), (3L, "c-v1"), (4L, "d-v1"), (5L, "e-v2")))
-
-    // changelog across the rollback: NET diff — id 1 resurrects (the file
-    // is in BOTH versions; only the shed equality delete differs) and the
-    // rolled-back append's id 5 dies
-    val log = SnapshotTable.changelogBetween(spark, root, 3, 4)
-      .select("id", "payload", "_change_type", "_commit_version").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3))).toSet
-    assert(log === Set((1L, "a-v1", "insert", 4), (5L, "e-v2", "delete", 4)))
-    // replay invariant over the whole interval: state(1) + log(1..4) = state(4)
-    val replayed = SnapshotTable.changelogBetween(spark, root, 1, 4)
-      .select("id", "payload", "_change_type").collect()
-      .foldLeft(rows(Some(1)).toVector.groupBy(identity).view.mapValues(_.size).toMap) {
-        (acc, r) =>
-          val k = (r.getLong(0), r.getString(1))
-          if (r.getString(2) == "insert") acc + (k -> (acc.getOrElse(k, 0) + 1))
-          else acc + (k -> (acc.getOrElse(k, 0) - 1))
-      }.filter(_._2 > 0).keySet
-    assert(replayed === rows(None))
-
-    // the table keeps working after a rollback
-    SnapshotTable.commit( // v5
-      Seq((9L, "src1", "i-v5")).toDF("id", "source", "payload"),
-      root, Seq("source"), overwritePartitions = false)
-    assert(rows(None).contains(9L -> "i-v5") && rows(None).size === 5)
-
-    // no-op: rolling back to current returns it without a new commit
-    val cur = SnapshotTable.rollbackTo(spark, root, 5)
-    assert(cur.version === 5 &&
-      SnapshotTable.currentVersion(spark, root) === Some(5))
-    // ahead of current fails loud
-    intercept[IllegalArgumentException] {
-      SnapshotTable.rollbackTo(spark, root, 6)
-    }
-    // an expired target fails loud (manifests v1-v3 reaped; v4 pins v1's
-    // files live, so the current read is untouched)
-    SnapshotTable.expireSnapshots(spark, root, keepLast = 2)
-    intercept[IllegalArgumentException] {
-      SnapshotTable.rollbackTo(spark, root, 2)
-    }
-    assert(rows(None).size === 5)
-    // a version that never existed is reported as such, not as "expired"
-    val never = intercept[IllegalArgumentException] {
-      SnapshotTable.rollbackTo(spark, root, 0)
-    }
-    assert(never.getMessage.contains("never existed"))
-    assert(intercept[IllegalArgumentException] {
-      SnapshotTable.rollbackTo(spark, root, -3)
-    }.getMessage.contains("never existed"))
   }
 }

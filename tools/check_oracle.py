@@ -4,15 +4,69 @@
 Runs after `sbt "runMain graft.Verify <sfDir> <outDir>"`:
 for each query parquet in outDir, executes the matching oracle SQL in DuckDB
 against the sf parquet tables and compares values (columns sorted by name,
-rows sorted by all columns), like the driver does.
+rows sorted by all columns), like the driver does. Each WITH-clause CTE of
+the oracle SQL is declared `AS MATERIALIZED` before it runs (see
+`materialize_ctes`); the SQL is otherwise run as written.
 
 Usage: python3 tools/check_oracle.py <sfDir> <outDir>
 """
 import json
+import re
 import sys
 import glob
 import os
 import duckdb
+
+
+_TOKEN = re.compile(r"""'(?:[^']|'')*'|"(?:[^"]|"")*"|--[^\n]*|\s+|\w+|.""", re.S)
+
+
+def materialize_ctes(sql):
+    """Return `sql` with every WITH-clause CTE declared `AS MATERIALIZED`.
+
+    DuckDB 1.0 inlines each reference to a CTE. A chain of CTEs that each
+    read the previous one more than once (ta_bpe's merge rounds) then
+    expands far beyond its text and runs out of memory; materialized,
+    each CTE runs once and the result is the same. A named window
+    (`WINDOW w AS (...)`) has the same shape as a CTE and is left alone,
+    as are string literals, quoted identifiers and comments.
+    """
+    toks = [(m.start(), m.group()) for m in _TOKEN.finditer(sql)
+            if not m.group().isspace() and not m.group().startswith("--")]
+    words = [t.upper() for _, t in toks]
+
+    def close(i):  # index of the ")" matching the "(" at token i
+        depth = 0
+        for j in range(i, len(toks)):
+            depth += {"(": 1, ")": -1}.get(toks[j][1], 0)
+            if depth == 0:
+                return j
+        raise ValueError("unbalanced parentheses in oracle SQL")
+
+    inserts = []
+    for i, w in enumerate(words):
+        if w != "WITH":
+            continue
+        j = i + 1 + (words[i + 1:i + 2] == ["RECURSIVE"])
+        while j < len(toks):
+            j += 1  # the CTE name
+            if j < len(toks) and toks[j][1] == "(":
+                j = close(j) + 1  # its column list
+            if words[j:j + 1] != ["AS"]:
+                break
+            j += 1
+            if words[j:j + 1] == ["NOT"] or words[j:j + 1] == ["MATERIALIZED"]:
+                j += 1 + (words[j] == "NOT")
+            else:
+                inserts.append(toks[j][0])
+            j = close(j) + 1
+            if words[j:j + 1] != [","]:
+                break
+            j += 1
+    for pos in reversed(inserts):
+        sql = sql[:pos] + "MATERIALIZED " + sql[pos:]
+    return sql
+
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
 con = duckdb.connect()
@@ -40,7 +94,7 @@ for name, sql in sorted(oracles.items()):
         continue
     got = con.sql(f"SELECT * FROM '{got_dir}/*.parquet'").df()
     try:
-        exp = con.sql(sql).df()
+        exp = con.sql(materialize_ctes(sql)).df()
     except Exception as e:
         print(f"FAIL {name}: oracle SQL error: {e}")
         fails += 1
