@@ -94,18 +94,6 @@ object Curation {
     when(text.isNull, lit(0.0))
       .otherwise(bind1(split(text, "\n"))(dupLineFracOf))
 
-  /** Fraction of CHARACTERS sitting in repeated lines: 1 - chars of the
-   * distinct line set / total chars across lines. */
-  def dupLineCharFrac(text: Column): Column =
-    when(text.isNull, lit(0.0))
-      .otherwise(bind1(split(text, "\n"))(dupLineCharFracOf))
-
-  /** Fraction of word-n-gram slots taken by the single most frequent
-   * n-gram (the "top n-gram coverage" boilerplate signal). Computed
-   * per row with sort + one linear run-length pass — no shuffle. */
-  def topNgramFrac(text: Column, n: Int): Column =
-    bind1(wordNgrams(text, n))(topNgramFracOf)
-
   /** Fraction of word-n-gram occurrences that are repeats of an earlier
    * one: 1 - distinct/total. */
   def dupNgramFrac(text: Column, n: Int): Column =

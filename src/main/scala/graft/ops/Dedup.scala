@@ -26,12 +26,6 @@ object Dedup {
         sort_array(collect_list(idCol)).as("member_ids"))
       .filter(col("group_size") > 1)
 
-  /** Exact-dedup survivors: distinct-by-fingerprint keeping min id. */
-  def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val fp = df.select(col(idCol), TextAnalysis.fingerprint(col(textCol)).as("fingerprint"))
-    fp.groupBy("fingerprint").agg(min(idCol).as(idCol)).drop("fingerprint")
-  }
-
   /**
    * One-call corpus dedup — the composition a pipeline author actually
    * wants: (1) exact fingerprint dedup collapses byte-identical clones

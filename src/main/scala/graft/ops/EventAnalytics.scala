@@ -27,10 +27,7 @@ import org.apache.spark.sql.functions._
  */
 object EventAnalytics {
 
-  /** The funnel's semantics-bearing pieces, single-sourced so the batch
-   * fold ([[funnelLevels]]) and the streaming form
-   * ([[graft.streaming.StreamingFunnel]]) can never drift apart. */
-  private[graft] def validateFunnelArgs(steps: Seq[String],
+  private def validateFunnelArgs(steps: Seq[String],
       windowSeconds: Long): Unit = {
     require(steps.nonEmpty, "funnel needs at least one step")
     require(steps.distinct.size == steps.size, "funnel steps must be distinct")
@@ -40,11 +37,11 @@ object EventAnalytics {
   }
 
   /** Pre-shuffle filter: only the funnel's step types survive. */
-  private[graft] def stepFilter(typeCol: String, steps: Seq[String]): Column =
+  private def stepFilter(typeCol: String, steps: Seq[String]): Column =
     col(typeCol).isin(steps.map(x => x: Any): _*)
 
   /** step name -> 1-based slot; the when-chain is k terms, k is small. */
-  private[graft] def stepIndexCol(typeCol: String, steps: Seq[String]): Column =
+  private def stepIndexCol(typeCol: String, steps: Seq[String]): Column =
     steps.zipWithIndex.foldLeft(lit(null).cast("int")) {
       case (acc, (s, i)) => when(col(typeCol) === s, lit(i + 1)).otherwise(acc)
     }

@@ -1378,9 +1378,9 @@ object Catalog {
   }
 
   /** Morton (Z-order) sort key over (user_id, minute-of-day) for every
-   * event — the [[graft.ops.Layout.zorderBy]] clustering key, checked
-   * value-for-value: the oracle restates the bias + 5-step mask-shift bit
-   * dilation + interleave + sign flip as pure SQL arithmetic
+   * event — a 2-D clustering key, checked value-for-value: the oracle
+   * restates the bias + 5-step mask-shift bit dilation + interleave +
+   * sign flip as pure SQL arithmetic
    * ([[Oracles.qZorder]]). */
   def qZorder(spark: SparkSession, dir: String): DataFrame = {
     val e = spark.read.parquet(s"$dir/events.parquet")

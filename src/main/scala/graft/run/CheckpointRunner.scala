@@ -3,11 +3,13 @@ package graft.run
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 import graft.engine.Validator
 import graft.model.Checklist
+import graft.sources.SnapshotTable
 
 /**
  * Partition-granular checkpointed validation runs (north_rule: "resumable
@@ -83,45 +85,45 @@ object CheckpointRunner {
    * Partition values from FILESYSTEM METADATA when the input is laid out
    * hive-style on `partitionCol` (`.../col=value/`): one directory listing,
    * zero data read — the parquet stand-in for an Iceberg/catalog partition
-   * listing. Falls back to a `distinct()` scan only for inputs that are not
-   * physically partitioned on the column (where a scan is unavoidable).
-   * Round 1 always ran the distinct() scan — a full pass over 100 TB just
-   * to enumerate work units.
+   * listing. Directory names are unescaped with Spark's own partition-path
+   * codec, so each value equals what a scan of the column reads back.
+   * `None` when no directory is partitioned on the column: the caller then
+   * falls back to a `distinct()` scan (unavoidable there). A listing error
+   * propagates.
    */
   def discoverPartitions(spark: SparkSession, inputPath: String,
       partitionCol: String): Option[Seq[String]] = {
-    val prefix = partitionCol + "="
-    try {
-      val p = new org.apache.hadoop.fs.Path(inputPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val dirs = fs.listStatus(p).toSeq
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filter(_.startsWith(prefix))
-        .map(n => java.net.URLDecoder.decode(n.substring(prefix.length), "UTF-8"))
-      if (dirs.nonEmpty) Some(dirs.sorted) else None
-    } catch { case _: Exception => None }
+    val prefix = ExternalCatalogUtils.escapePathName(partitionCol) + "="
+    val p = new org.apache.hadoop.fs.Path(inputPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = fs.listStatus(p).toSeq
+      .filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith(prefix))
+      .map(n => ExternalCatalogUtils.unescapePathName(n.substring(prefix.length)))
+    if (dirs.nonEmpty) Some(dirs.sorted) else None
   }
 
   def run(spark: SparkSession, checklist: Checklist, cfg: Config,
       runId: String = java.util.UUID.randomUUID().toString): Seq[PartitionResult] = {
     val md5 = checklistMd5(checklist)
     // Input resolution order mirrors the north_rule's table-format shape:
-    // a snapshot-manifest table (graft.sources.SnapshotTable — the Iceberg
-    // access pattern) plans partitions AND per-partition file sets from
-    // pure metadata; plain hive-layout parquet falls back to directory
-    // discovery, then to a distinct() scan.
-    val isSnapshotTable =
-      graft.sources.SnapshotTable.currentVersion(spark, cfg.inputPath).isDefined
+    // a snapshot-manifest table (SnapshotTable — the Iceberg access
+    // pattern) plans partitions AND per-partition file sets from pure
+    // metadata; plain hive-layout parquet falls back to directory
+    // discovery, then to a distinct() scan. The table version is resolved
+    // ONCE: the plan and every slice read that one snapshot, even if a
+    // commit lands mid-run.
+    val version = SnapshotTable.currentVersion(spark, cfg.inputPath)
+    val isSnapshotTable = version.isDefined
     lazy val input = spark.read.parquet(cfg.inputPath)
     val partitions =
       if (isSnapshotTable) {
-        val specCols = graft.sources.SnapshotTable
-          .snapshot(spark, cfg.inputPath).partitionCols
-        require(specCols.contains(cfg.partitionCol),
+        val snap = SnapshotTable.snapshot(spark, cfg.inputPath, version)
+        require(snap.partitionCols.contains(cfg.partitionCol),
           s"partitionCol '${cfg.partitionCol}' is not a partition column of " +
-            s"the snapshot table (spec: $specCols) — a typo here would " +
-            "otherwise yield zero partitions and a silent no-op run")
-        graft.sources.SnapshotTable.partitions(spark, cfg.inputPath)
+            s"the snapshot table (spec: ${snap.partitionCols}) — a typo here " +
+            "would otherwise yield zero partitions and a silent no-op run")
+        SnapshotTable.partitions(spark, cfg.inputPath, version)
           .flatMap(_.get(cfg.partitionCol)).distinct.sorted
       }
       else discoverPartitions(spark, cfg.inputPath, cfg.partitionCol)
@@ -136,12 +138,14 @@ object CheckpointRunner {
       // layout pushes the partition filter down to the parquet scan
       val slice =
         if (isSnapshotTable)
-          graft.sources.SnapshotTable.read(spark, cfg.inputPath,
+          SnapshotTable.read(spark, cfg.inputPath, version,
             partitionFilter = Map(cfg.partitionCol -> p))
         else input.filter(col(cfg.partitionCol) === p)
+      // escaped as Spark's writer escapes it: a '/' in a value must not
+      // nest directories, and a read of the output gets `p` back
+      val dir = ExternalCatalogUtils.getPartitionPathString(cfg.partitionCol, p)
       val (nRows, nInvalid, nViol) = validateSlice(spark, checklist,
-        slice, p, s"${cfg.outputPath}/${cfg.partitionCol}=$p",
-        s"${cfg.violationsPath}/${cfg.partitionCol}=$p",
+        slice, p, s"${cfg.outputPath}/$dir", s"${cfg.violationsPath}/$dir",
         cfg.manifestPath, runId, md5, cfg.rowIdCol, cfg.contentCol)
       PartitionResult(p, nRows, nInvalid, nViol, skipped = false)
     }
@@ -221,7 +225,7 @@ object CheckpointRunner {
    * INCREMENTAL validation over a snapshot-table delta — the
    * table-format-native companion to [[run]]: instead of re-validating
    * partitions, validate exactly the rows ADDED between two snapshot
-   * versions ([[graft.sources.SnapshotTable.changesBetween]] — the
+   * versions ([[SnapshotTable.changesBetween]] — the
    * Iceberg incremental-append-scan shape), so a daily ingest validates
    * its delta, never the 100 TB table. Lineage rides the same manifest
    * table as [[run]] with the partition key `delta:v<from>..v<to>`: a
@@ -240,7 +244,7 @@ object CheckpointRunner {
     val key = s"delta:v$fromVersion..v$toVersion"
     if (completedPartitions(spark, manifestPath, md5).contains(key))
       return IncrementalResult(fromVersion, toVersion, 0, 0, 0, skipped = true)
-    val delta = graft.sources.SnapshotTable.changesBetween(
+    val delta = SnapshotTable.changesBetween(
       spark, tableRoot, fromVersion.toInt, toVersion.toInt)
     val (nRows, nInvalid, nViol) = validateSlice(spark, checklist, delta,
       key, s"$outputPath/delta=v${fromVersion}_v$toVersion",

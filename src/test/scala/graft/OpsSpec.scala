@@ -570,58 +570,6 @@ class OpsSpec extends SparkSuite {
     assert(Joins.joinSize(a.filter($"k" < 3), b.filter($"k" > 5), "k", "k") === BigDecimal(0))
   }
 
-  test("TrainingPipeline.prepare: stages compose — clones collapse, PII " +
-      "scrubs, repetition drops, contaminant drops, splits label, chunk " +
-      "arithmetic holds per shard group; deterministic across runs") {
-    import graft.ops.TrainingPipeline
-    val rnd = new scala.util.Random(97)
-    val vocab = Array("alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
-      "golf", "hotel", "india", "juliet")
-    def doc(i: Int): String =
-      Seq.fill(8 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.length)))
-        .mkString(" ") + s" unique$i"
-    val organic = (1L to 40L).map(i => (i, doc(i.toInt)))
-    val clone = (100L, organic.head._2) // exact clone of doc 1
-    val pii = (101L, "contact us at bob@example.com for details " + doc(101))
-    val junk = (102L, Seq.fill(12)("same line").mkString("\n")) // dup-line frac 11/12
-    val contam = (103L, doc(103))
-    val bench = graft.ops.Curation.benchmarkShingles(
-      Seq(contam._2).toDF("text"), "text")
-    val rows = organic ++ Seq(clone, pii, junk, contam)
-    def run() = TrainingPipeline.prepare(rows.toDF("id", "text"), "id", "text",
-      bench = Some(bench), estJaccard = 0.5,
-      splits = Seq("train" -> 0.8, "val" -> 0.2),
-      packBudget = 16, packShards = 2, lineDedup = false)
-    val out = run().collect().map(r => (r.getAs[Long]("id"),
-      r.getAs[String]("text"), r.getAs[String]("split"), r.getAs[Int]("shard"),
-      r.getAs[Long]("n_tokens"), r.getAs[Long]("chunk_first"),
-      r.getAs[Long]("chunk_last"), r.getAs[Long]("chunk_offset")))
-      .sortBy(_._1)
-    val ids = out.map(_._1).toSet
-    assert(ids(1L) && !ids(100L), "exact clone keeps the min id only")
-    assert(!ids(102L), "dup-line doc dropped by the repetition gate")
-    assert(!ids(103L), "benchmark contaminant dropped")
-    assert(ids(101L) && out.find(_._1 == 101L).get._2.contains("<EMAIL>"),
-      "PII scrubbed, doc kept")
-    assert(out.forall(r => Set("train", "val")(r._3)))
-    assert(out.forall(r => r._4 == 0 || r._4 == 1))
-    // chunk arithmetic: per (split, shard), cumulative sums in id order
-    out.groupBy(r => (r._3, r._4)).foreach { case (_, g) =>
-      var cum = 0L
-      g.sortBy(_._1).foreach { case (id, _, _, _, n, cf, cl, off) =>
-        assert(cf === cum / 16 && off === cum % 16, s"doc $id chunk_first/offset")
-        cum += n
-        assert(cl === math.max(cf, (cum - 1) / 16), s"doc $id chunk_last")
-      }
-    }
-    // deterministic end-to-end (incl. the lineDedup=true default path)
-    assert(run().collect().map(_.toString).sorted
-      === run().collect().map(_.toString).sorted)
-    val full = TrainingPipeline.prepare(rows.toDF("id", "text"), "id", "text",
-      bench = Some(bench), packBudget = 16, packShards = 2)
-    assert(full.count() > 0)
-  }
-
   test("dupSpanStats: per-doc shared-span fractions match a string-level " +
       "reference; within-doc repeats don't count; blank docs absent") {
     val docs = Seq(
@@ -1682,38 +1630,6 @@ class OpsSpec extends SparkSuite {
   }
 
   // --- z-order layout ------------------------------------------------------
-
-  test("Layout.zorderBy: every range covers a small rectangle of BOTH " +
-      "dimensions; a lexicographic range covers a full-width stripe") {
-    val grid = for (a <- 0 until 64; b <- 0 until 64) yield (a, b)
-    val df = grid.toDF("a", "b").repartition(8)
-
-    def spans(clustered: org.apache.spark.sql.DataFrame): Seq[(Int, Int)] =
-      clustered.select(spark_partition_id().as("p"), $"a", $"b")
-        .groupBy("p")
-        .agg((max("a") - min("a")).as("sa"), (max("b") - min("b")).as("sb"))
-        .collect().map(r => (r.getInt(1), r.getInt(2))).toSeq
-
-    val z = Layout.zorderBy(df, "a", "b", 16)
-    assert(z.count() === grid.size.toLong, "layout must preserve rows")
-    assert(z.columns.toSeq === Seq("a", "b"), "internal key must not leak")
-    val zs = spans(z)
-    assert(zs.size > 8, s"range partitioning collapsed: $zs")
-    val (avgA, avgB) = (zs.map(_._1).sum.toDouble / zs.size,
-      zs.map(_._2).sum.toDouble / zs.size)
-    // 16 ranges of a 64x64 grid ~ 16x16 z-tiles; far below the 64-wide
-    // stripe a lexicographic (a, b) sort leaves in b
-    assert(avgA < 32, s"a-span $avgA not local: $zs")
-    assert(avgB < 32, s"b-span $avgB not local: $zs")
-    val lex = df.repartitionByRange(16, $"a", $"b")
-    val lexB = spans(lex).map(_._2)
-    assert(lexB.sum.toDouble / lexB.size > 2 * avgB,
-      s"z-order must beat lexicographic on the trailing dim: lex=$lexB z=$avgB")
-    val exZ = intercept[IllegalArgumentException] {
-      Layout.zorderBy(df.withColumn("__z", lit(1L)), "a", "b", 4)
-    }
-    assert(exZ.getMessage.contains("__z"))
-  }
 
   // --- int8 quantization ---------------------------------------------------
 

@@ -250,44 +250,6 @@ class PlanSpec extends SparkSuite {
     assert(kwFilters.isEmpty, s"top-k array built in a filter:\n$kw")
   }
 
-  test("bucketed layout: join and aggregation on the bucket key are exchange-free") {
-    val a = (0L until 200L).map(i => (i, s"a$i")).toDF("k", "va")
-    val b = (0L until 200L).map(i => (i, s"b$i")).toDF("k", "vb")
-    graft.sources.BucketedTable.write(a, "bt_a", Seq("k"), 4)
-    graft.sources.BucketedTable.write(b, "bt_b", Seq("k"), 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    // force the sort-merge path: a broadcast join would trivially have no
-    // shuffle Exchange; the claim under test is bucket CO-LOCATION
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val j = graft.sources.BucketedTable.colocatedJoin(
-        spark, "bt_a", "bt_b", Seq("k"))
-      assert(j.count() === 200)
-      val jp = physical(j)
-      assert(jp.contains("SortMergeJoin") && !jp.contains("Exchange"),
-        s"co-located join must not shuffle:\n$jp")
-      val ap = physical(spark.table("bt_a").groupBy("k").count())
-      assert(!ap.contains("Exchange"),
-        s"bucket-key aggregation must not shuffle:\n$ap")
-      // declared-layout mismatches fail fast instead of silently shuffling
-      intercept[IllegalArgumentException] {
-        graft.sources.BucketedTable.colocatedJoin(spark, "bt_a", "bt_b", Seq("va"))
-      }
-      // joining on a PROPER SUBSET of the bucket key is NOT co-located
-      // (rows equal on k alone can sit in different (k, va) buckets) and
-      // must be rejected, not silently shuffled
-      graft.sources.BucketedTable.write(a, "bt_c", Seq("k", "va"), 4)
-      intercept[IllegalArgumentException] {
-        graft.sources.BucketedTable.colocatedJoin(spark, "bt_c", "bt_c", Seq("k"))
-      }
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS bt_a")
-      spark.sql("DROP TABLE IF EXISTS bt_b")
-      spark.sql("DROP TABLE IF EXISTS bt_c")
-    }
-  }
-
   test("rangeJoin plans an equi-join on the bucket — never a nested loop, " +
       "even keyless") {
     val pts = (0 until 200).map(i => (i.toLong, i.toLong * 7 % 1000))

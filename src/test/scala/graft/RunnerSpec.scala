@@ -4,11 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.model._
-import graft.model.FieldType._
 import graft.run.CheckpointRunner
 import graft.sources.CodeFiles
-import graft.streaming.StreamingValidator
 
 class RunnerSpec extends SparkSuite {
   import spark.implicits._
@@ -295,24 +292,76 @@ class RunnerSpec extends SparkSuite {
     assert(CheckpointRunner.discoverPartitions(spark, flat, "part") === None)
   }
 
-  test("streaming validation matches batch verdicts (memory sink)") {
-    val cl = Checklist("s", Seq(
-      FieldDef("k", IntT(min = Some(0)), required = true),
-      FieldDef("v", StrT(Some("^ok")), required = true)))
-    val batch = Seq((1L, "ok yes"), (2L, "bad"), (3L, null.asInstanceOf[String]))
-      .toDF("k", "v")
-    val dir = Files.createTempDirectory("graft_stream").toString + "/data"
-    batch.write.parquet(dir)
-    val stream = spark.readStream.schema(batch.schema).parquet(dir)
-    val validated = StreamingValidator.validateStream(stream, cl, "k")
-    val q = validated.writeStream.format("memory").queryName("sv")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.sql("select k, passed from sv").collect()
-        .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-      assert(got === Map(1L -> true, 2L -> false, 3L -> false))
-    } finally q.stop()
+  test("checkpoint run over a snapshot table validates the version it " +
+      "planned from, even when a commit lands mid-run") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.sources.SnapshotTable
+    val base = Files.createTempDirectory("graft_ckpt_pin").toString
+    val root = s"$base/table"
+    val v1 = CodeFiles.generate(spark, 1200)
+      .withColumn("part", (col("id") % 12).cast("string"))
+    SnapshotTable.commit(v1, root, Seq("part"))
+    // v2 overwrites every partition with ids >= 1,000,000
+    SnapshotTable.commit(v1.withColumn("id", col("id") + 1000000L), root,
+      Seq("part"))
+    val hint = java.nio.file.Paths.get(s"$root/metadata/version-hint.text")
+    // the local file system checks a hand-written file against its .crc
+    Files.deleteIfExists(java.nio.file.Paths.get(s"$root/metadata/.version-hint.text.crc"))
+    Files.write(hint, "1".getBytes("UTF-8"))
+    // a concurrent commit: the hint flips to v2 once the run's first job
+    // starts, while most partitions have not started yet
+    val group = "ckpt_pinned_version"
+    val flipped = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group) &&
+            flipped.compareAndSet(false, true))
+          Files.write(hint, "2".getBytes("UTF-8"))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val cfg = ckptConfig(root, base)
+    val res = try {
+      sc.setJobGroup(group, "pinned checkpoint run")
+      CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(flipped.get && SnapshotTable.currentVersion(spark, root) === Some(2))
+    assert(res.size === 12 && res.forall(r => !r.skipped && r.nRows === 100))
+    val ids = spark.read.parquet(cfg.outputPath).select("id").as[Long].collect()
+    assert(ids.length === 1200 && ids.forall(_ < 1000000L),
+      s"${ids.count(_ >= 1000000L)} validated rows came from v2")
+    val okRows = spark.read.parquet(cfg.manifestPath)
+      .filter(col("status") === "ok").select("n_rows").as[Long].collect()
+    assert(okRows.toSeq === Seq.fill(12)(100L))
+  }
+
+  test("hive-layout partition values round-trip through Spark's path codec: " +
+      "'+' is not a space, '/' does not nest directories") {
+    val base = Files.createTempDirectory("graft_ckpt_esc").toString
+    val input = s"$base/input"
+    CodeFiles.generate(spark, 90).drop("lang")
+      .withColumn("lang", when(col("id") % 6 === 0, "a/b")
+        .when(col("id") % 6 < 3, "x y").otherwise("c++"))
+      .write.partitionBy("lang").parquet(input)
+    val cfg = ckptConfig(input, base).copy(partitionCol = "lang")
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy("lang").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val want = counts(spark.read.parquet(input))
+    assert(want === Map("a/b" -> 15L, "x y" -> 30L, "c++" -> 45L))
+
+    val res = CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
+    assert(res.map(_.partition) === Seq("a/b", "c++", "x y"))
+    val ok = spark.read.parquet(cfg.manifestPath)
+      .filter(col("status") === "ok").collect()
+      .map(r => r.getAs[String]("partition") -> r.getAs[Long]("n_rows")).toMap
+    assert(ok === want)
+    assert(counts(spark.read.parquet(cfg.outputPath)) === want)
+    assert(counts(spark.read.parquet(cfg.violationsPath)).keySet
+      .subsetOf(want.keySet))
   }
 
   test("curation metrics run unchanged on a stream (stateless projection)") {
@@ -354,51 +403,6 @@ class RunnerSpec extends SparkSuite {
         .map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(got === Map(
         1L -> "good doc mailing <EMAIL> about the project details"))
-    } finally q.stop()
-  }
-
-  test("streaming first-seen dedup keeps one row per key across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    val deduped = graft.streaming.StreamingDedup.firstSeen[(Long, String)](
-      in.toDS(), _._2)
-    val q = deduped.toDF("id", "text").writeStream.format("memory")
-      .queryName("sd").outputMode("append").start()
-    try {
-      in.addData((1L, "aaa"), (2L, "bbb"), (3L, "aaa")) // dup inside batch
-      q.processAllAvailable()
-      in.addData((4L, "aaa"), (5L, "ccc")) // dup across batches
-      q.processAllAvailable()
-      val got = spark.sql("select id, text from sd").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(got === Set((1L, "aaa"), (2L, "bbb"), (5L, "ccc")))
-    } finally q.stop()
-  }
-
-  test("streaming line-level dedup: firstSeen over exploded lines across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // the streaming analogue of Curation.dedupLines: explode docs into
-    // (doc_id, idx, line), keep each line's first stream occurrence via
-    // the O(distinct-lines) flatMapGroupsWithState dedup — arrival order
-    // replaces (doc_id, idx) order as the first-wins tiebreak
-    val in = MemoryStream[(Long, String)]
-    val lines = in.toDS().flatMap { case (id, text) =>
-      text.split("\n", -1).zipWithIndex.map { case (l, i) => (id, i, l) }
-    }
-    val kept = graft.streaming.StreamingDedup.firstSeen[(Long, Int, String)](
-      lines, _._3)
-    val q = kept.toDF("doc_id", "idx", "line").writeStream.format("memory")
-      .queryName("sld").outputMode("append").start()
-    try {
-      in.addData((1L, "a\nb"), (2L, "b\nc")) // 'b' dups within the batch
-      q.processAllAvailable()
-      in.addData((3L, "c\nd")) // 'c' dups across batches
-      q.processAllAvailable()
-      val got = spark.sql("select doc_id, line from sld").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(got === Set((1L, "a"), (1L, "b"), (2L, "c"), (3L, "d")))
     } finally q.stop()
   }
 
@@ -482,64 +486,6 @@ class RunnerSpec extends SparkSuite {
     assert(graft.engine.Validator.report("f.csv", 0) === ("'f.csv' is valid", 0))
     assert(graft.engine.Validator.report("f.csv", 3) ===
       ("'f.csv' is invalid. Found 3 invalid rows", 1))
-  }
-
-  test("streaming near-dup == batch-incremental LSH on a planted stream") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.ops.Dedup
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val rnd = new scala.util.Random(31)
-    val vocab = Array("alpha", "beta", "gamma", "delta", "scan", "join",
-      "hash", "sort", "merge", "spill", "page", "tuple")
-    def doc(): String =
-      (0 until 30 + rnd.nextInt(20)).map(_ => vocab(rnd.nextInt(vocab.length)))
-        .mkString(" ")
-    // three micro-batches; batch 2 and 3 contain near-clones of batch-1
-    // docs (one token swapped) AND of docs within their own batch
-    val b1 = (1L to 20L).map(id => (id, doc()))
-    def clone1(t: String) = "zzz " + t.substring(t.indexOf(' ') + 1)
-    val b2 = (21L to 30L).map(id => (id, doc())) ++
-      b1.take(5).map { case (id, t) => (id + 100, clone1(t)) }
-    val b3 = (41L to 50L).map(id => (id, doc())) ++
-      b2.take(3).map { case (id, t) => (id + 200, clone1(t)) }
-    val batches = Seq(b1, b2, b3)
-
-    val in = MemoryStream[(Long, String)]
-    val cands = graft.streaming.StreamingNearDup.candidates(
-      in.toDS().toDF("doc_id", "text"), "doc_id", "text")
-    val q = cands.writeStream.format("memory").queryName("snd")
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-      val got = spark.sql(
-        "select distinct new_id, old_id, round(est_jaccard, 6) from snd")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-
-      // batch-incremental reference with the SAME parameters: per batch,
-      // in-batch pairs (later id = the "new" side) + the probe against
-      // the accumulated index of all earlier batches
-      val want = scala.collection.mutable.Set.empty[(Long, Long, Double)]
-      batches.zipWithIndex.foreach { case (b, t) =>
-        val bDf = b.toDF("doc_id", "text")
-        val inBatch = Dedup.minhashCandidates(bDf, "doc_id", "text")
-          .select(col("id_b"), col("id_a"), round(col("est_jaccard"), 6))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        want ++= inBatch
-        if (t > 0) {
-          val prior = batches.take(t).flatten.toDF("doc_id", "text")
-          val index = Dedup.minhashIndex(prior, "doc_id", "text")
-          val cross = Dedup.minhashCandidatesAgainst(bDf, "doc_id", "text", index)
-            .select(col("new_id"), col("old_id"), round(col("est_jaccard"), 6))
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          want ++= cross
-        }
-      }
-      assert(got === want.toSet)
-      // the planted clones were actually caught across batches
-      assert(got.exists { case (n, o, _) => n == 101L && o == 1L })
-      assert(got.nonEmpty)
-    } finally q.stop()
   }
 
   test("incremental validation over a snapshot delta: validates exactly " +

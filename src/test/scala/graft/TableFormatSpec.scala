@@ -7,8 +7,8 @@ import graft.sources.SnapshotTable
 /**
  * Conformance suite for [[graft.sources.SnapshotTable]]'s table-format
  * contract — the Iceberg-shaped surface (commit, time travel, pruned and
- * incremental scans, per-file stats, metadata-only partitions) the
- * checkpoint runner relies on. An Iceberg DSv2 replacement would have to pass these same
+ * incremental scans, metadata-only partitions) the checkpoint runner
+ * relies on. An Iceberg DSv2 replacement would have to pass these same
  * cases.
  */
 class TableFormatSpec extends SparkSuite {
@@ -62,17 +62,5 @@ class TableFormatSpec extends SparkSuite {
     // metadata-only partition discovery
     assert(SnapshotTable.partitions(spark, root).map(_("source")).sorted
       === Seq("src0", "src1"))
-  }
-
-  test("conformance: per-file stats at commit + range-filtered read") {
-    val root = freshRoot()
-    val df = (1L to 100L).map(i => (i, "src0", s"p$i"))
-      .toDF("id", "source", "payload")
-      .repartitionByRange(4, col("id"))
-    SnapshotTable.commit(df, root, Seq("source"), statsCols = Seq("id"))
-    val full = SnapshotTable.read(spark, root)
-    val skip = SnapshotTable.read(spark, root, rangeFilter = Map("id" -> (("10", "15"))))
-    assert(skip.inputFiles.length < full.inputFiles.length)
-    assert(skip.filter(col("id").between(10, 15)).count() === 6)
   }
 }
