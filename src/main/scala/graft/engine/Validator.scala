@@ -88,13 +88,17 @@ object Validator {
   }
 
   /** Exploded structured violation rows `(row_id, field, rule_id, message)`
-   * per the north_star output contract. */
-  def violationRows(validated: DataFrame): DataFrame =
+   * per the north_star output contract, then the `keep` columns. No filter
+   * (`!passed`, or the `size(..) > 0` Spark infers for an exploded
+   * attribute): one is pushed below the projection that builds the array,
+   * and builds it again. */
+  def violationRows(validated: DataFrame, keep: String*): DataFrame =
     validated
-      .filter(!col(PassedCol))
-      .select(col(RowId), explode(col(ViolationsCol)).as("v"))
-      .select(col(RowId), col("v.field").as("field"),
-        col("v.rule_id").as("rule_id"), col("v.message").as("message"))
+      .select(col(RowId) +: keep.map(col) :+
+        explode(when(!col(PassedCol), col(ViolationsCol))).as("v"): _*)
+      .select(Seq(col(RowId), col("v.field").as("field"),
+        col("v.rule_id").as("rule_id"), col("v.message").as("message")) ++
+        keep.map(col): _*)
 
   /** Validated-manifest CSV projection (reference: Manifest.pm:326-402
    * `get_csv`/`_get_csv_rows`): the checklist's columns in order plus the

@@ -2,10 +2,12 @@ package graft.run
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 import graft.engine.Validator
 import graft.model.Checklist
@@ -16,30 +18,33 @@ import graft.sources.SnapshotTable
  * from checkpoint with per-partition lineage + metrics").
  *
  * The work unit is one partition of the input table (hive-style
- * partition column, e.g. `source` or a date). Pending partitions run
- * concurrently, `min(pending, spark.sparkContext.defaultParallelism)` at
- * a time, so a small partition's jobs fill the cores a large one leaves
- * idle at its tail. After a partition's own outputs commit, one manifest
- * row is appended to the manifest table (appends are serialized; see
- * [[appendManifestRow]]):
+ * partition column, e.g. `source` or a date). Pending partitions run in
+ * WAVES of up to `WavePartitions` partitions and `WaveBytes` of input, one
+ * after another. A wave reads its input once (a snapshot table: the pinned
+ * version's file sets; a hive layout: a partition filter), validates it
+ * in one write job, so Spark's scheduler spreads every partition's splits
+ * over all cores, and stages it `partitionBy` each row's *slot* (its
+ * partition's index in the wave: a hive read may retype a value, `"007"`
+ * to 7). One `observe` keyed on the slot counts each partition; nothing is
+ * cached or recomputed. Violation rows derive from the staged output.
+ * Each slot directory is renamed to its partition's directory, replacing
+ * a previous run's (idempotent re-runs: no duplicated violation rows —
+ * risk register SURVEY.md §7.4), and the wave appends a manifest row per
+ * partition in one write:
  *
  *   (run_id, partition, checklist_md5, n_rows, n_invalid, n_violations,
  *    started_at, finished_at, status)
  *
- * On restart, partitions that already have an 'ok' manifest row FOR THE
- * SAME checklist_md5 are skipped — so a killed job resumes where it
- * stopped, and a *changed checklist* invalidates prior work automatically.
- * Outputs are written with partition-directory overwrite, making re-runs
- * idempotent (no duplicated violation rows — risk register SURVEY.md §7.4).
- * When a partition fails, no further partition starts; those already
- * running finish and commit their rows, and the run then throws the first
- * failure, naming its partition. A re-run resumes from the `ok` rows.
- *
- * Each partition is ONE compute pass: manifest metrics ride the validated
- * write as CollectMetrics (`observe`) accumulators, and the violations
- * table derives from the already-written columnar output with a
- * pushed-down `passed = false` filter — no caching (a 100 TB partition
- * doesn't fit executor memory) and no validation recompute.
+ * The partition column stays inside the data files; a null value is
+ * Spark's default partition name. On restart, partitions that already
+ * have an 'ok' manifest row FOR THE SAME checklist_md5 are skipped — so a
+ * killed run resumes, losing at most one wave, and a *changed checklist*
+ * invalidates prior work automatically. Failures stay per partition: a
+ * wave whose write fails (a corrupt input file, say) re-runs as waves of
+ * one, and a partition whose directories cannot move into place fails
+ * alone. The others commit, no further wave starts, and the run throws the
+ * first failure, naming its partition. No staging directory outlives a
+ * run or the start of the next.
  *
  * This generalizes the reference's manifest identity (file MD5 + UUID,
  * Reader.pm:86-88 / Manifest.pm:219-224) into run-level lineage.
@@ -59,6 +64,14 @@ object CheckpointRunner {
       rowIdCol: Option[String] = None,
       contentCol: Option[String] = None)
 
+  /** A larger partition is a wave alone. A killed run loses at most this. */
+  private val WaveBytes: Long = 4L << 30
+  /** A wave's `observe` carries three aggregates per partition. */
+  private val WavePartitions = 32
+  private val SlotCol = "graft_wave_slot"
+  /** Under each output root, hidden from Spark readers of that root. */
+  private val Staging = "_graft_staging"
+
   /** Stable fingerprint of the checklist definition — the lineage key that
    * ties completed work to the exact constraint set that produced it. */
   def checklistMd5(checklist: Checklist): String =
@@ -72,7 +85,7 @@ object CheckpointRunner {
    * "nothing done" and silently re-validate every partition. */
   private def completedPartitions(spark: SparkSession, manifestPath: String,
       md5: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(manifestPath)
+    val p = new Path(manifestPath)
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       Set.empty
     else spark.read.parquet(manifestPath)
@@ -81,194 +94,169 @@ object CheckpointRunner {
       .collect().map(_.getString(0)).toSet
   }
 
-  /**
-   * Partition values from FILESYSTEM METADATA when the input is laid out
-   * hive-style on `partitionCol` (`.../col=value/`): one directory listing,
-   * zero data read — the parquet stand-in for an Iceberg/catalog partition
-   * listing. Directory names are unescaped with Spark's own partition-path
-   * codec, so each value equals what a scan of the column reads back.
-   * `None` when no directory is partitioned on the column: the caller then
-   * falls back to a `distinct()` scan (unavoidable there). A listing error
-   * propagates.
-   */
-  def discoverPartitions(spark: SparkSession, inputPath: String,
-      partitionCol: String): Option[Seq[String]] = {
+  /** Partition values and their directories when the input is laid out
+   * hive-style on `partitionCol` (`.../col=value/`): one directory
+   * listing, zero data read. Names are unescaped with Spark's own
+   * partition-path codec, so each value equals what a scan of the column
+   * reads back. */
+  private def partitionDirs(spark: SparkSession, inputPath: String,
+      partitionCol: String): Seq[(String, Path)] = {
     val prefix = ExternalCatalogUtils.escapePathName(partitionCol) + "="
-    val p = new org.apache.hadoop.fs.Path(inputPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(p).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith(prefix))
-      .map(n => ExternalCatalogUtils.unescapePathName(n.substring(prefix.length)))
-    if (dirs.nonEmpty) Some(dirs.sorted) else None
+    val p = new Path(inputPath)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+      .map(st => ExternalCatalogUtils.unescapePathName(
+        st.getPath.getName.substring(prefix.length)) -> st.getPath)
+      .sortBy(_._1)
   }
+
+  /** Partition values from FILESYSTEM METADATA — the parquet stand-in for
+   * an Iceberg/catalog partition listing. `None` when no directory is
+   * partitioned on the column: the caller then falls back to a
+   * `distinct()` scan (unavoidable there). A listing error propagates. */
+  def discoverPartitions(spark: SparkSession, inputPath: String,
+      partitionCol: String): Option[Seq[String]] =
+    Some(partitionDirs(spark, inputPath, partitionCol).map(_._1)).filter(_.nonEmpty)
+
+  /** The rows of partition `p`; the default partition name is null. */
+  private def inPartition(partitionCol: String, p: String): Column =
+    if (p == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) col(partitionCol).isNull
+    else col(partitionCol) === p
 
   def run(spark: SparkSession, checklist: Checklist, cfg: Config,
       runId: String = java.util.UUID.randomUUID().toString): Seq[PartitionResult] = {
     val md5 = checklistMd5(checklist)
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
     // Input resolution order mirrors the north_rule's table-format shape:
     // a snapshot-manifest table (SnapshotTable — the Iceberg access
-    // pattern) plans partitions AND per-partition file sets from pure
-    // metadata; plain hive-layout parquet falls back to directory
-    // discovery, then to a distinct() scan. The table version is resolved
-    // ONCE: the plan and every slice read that one snapshot, even if a
-    // commit lands mid-run.
+    // pattern) plans partitions, sizes AND file sets from pure metadata;
+    // plain hive-layout parquet falls back to directory discovery, then to
+    // a distinct() scan. The table version is resolved ONCE: every wave
+    // reads that snapshot, even if a commit lands mid-run. `partitions`
+    // pairs each value with its input bytes (0 where unknown).
     val version = SnapshotTable.currentVersion(spark, cfg.inputPath)
-    val isSnapshotTable = version.isDefined
-    lazy val input = spark.read.parquet(cfg.inputPath)
-    val partitions =
-      if (isSnapshotTable) {
+    val (partitions, readWave) = version match {
+      case Some(_) =>
         val snap = SnapshotTable.snapshot(spark, cfg.inputPath, version)
         require(snap.partitionCols.contains(cfg.partitionCol),
           s"partitionCol '${cfg.partitionCol}' is not a partition column of " +
             s"the snapshot table (spec: ${snap.partitionCols}) — a typo here " +
             "would otherwise yield zero partitions and a silent no-op run")
-        SnapshotTable.partitions(spark, cfg.inputPath, version)
-          .flatMap(_.get(cfg.partitionCol)).distinct.sorted
-      }
-      else discoverPartitions(spark, cfg.inputPath, cfg.partitionCol)
-        .getOrElse(input.select(cfg.partitionCol).distinct()
-          .collect().map(_.get(0).toString).sorted.toSeq)
+        val valueOf = (fe: SnapshotTable.FileEntry) => fe.partition(cfg.partitionCol)
+        (snap.files.groupMapReduce(valueOf)(_.bytes)(_ + _).toSeq.sorted, (wave: Seq[String]) =>
+          SnapshotTable.scan(spark, snap, snap.files.filter(fe => wave.contains(valueOf(fe)))))
+      case None =>
+        lazy val input = spark.read.parquet(cfg.inputPath)
+        val dirs = partitionDirs(spark, cfg.inputPath, cfg.partitionCol)
+        (if (dirs.nonEmpty) dirs.map { case (v, dir) =>
+            v -> dir.getFileSystem(hadoopConf).getContentSummary(dir).getLength }
+          else input.select(cfg.partitionCol).distinct().collect()
+            .map(r => Option(r.get(0)).fold(
+              ExternalCatalogUtils.DEFAULT_PARTITION_NAME)(_.toString) -> 0L)
+            .toSeq.sorted,
+          (wave: Seq[String]) =>
+            input.filter(wave.map(inPartition(cfg.partitionCol, _)).reduce(_ || _)))
+    }
     val done = completedPartitions(spark, cfg.manifestPath, md5)
+    val pending = partitions.filterNot(p => done.contains(p._1))
 
-    val pending = partitions.filterNot(done.contains)
-    val results = forEachConcurrently(pending,
-        spark.sparkContext.defaultParallelism, cfg.partitionCol) { p =>
-      // snapshot tables prune the slice's FILE SET manifest-side; hive
-      // layout pushes the partition filter down to the parquet scan
-      val slice =
-        if (isSnapshotTable)
-          SnapshotTable.read(spark, cfg.inputPath, version,
-            partitionFilter = Map(cfg.partitionCol -> p))
-        else input.filter(col(cfg.partitionCol) === p)
+    def clearStaging(): Unit = Seq(cfg.outputPath, cfg.violationsPath)
+      .map(new Path(_, Staging)).foreach(p => p.getFileSystem(hadoopConf).delete(p, true))
+    def attempt(wave: Seq[String]): Seq[Either[(String, Throwable), PartitionResult]] =
+      try validateWave(spark, checklist, cfg, wave, readWave(wave))
+      catch {
+        case NonFatal(_) if wave.size > 1 => wave.flatMap(p => attempt(Seq(p)))
+        case NonFatal(e) => Seq(Left(wave.head -> e))
+      }
+    val results = scala.collection.mutable.Map.empty[String, PartitionResult]
+    if (pending.nonEmpty) {
+      clearStaging()
+      try waves(pending).foreach { wave =>
+        val startedAt = java.time.Instant.now().toString
+        val outcome = attempt(wave)
+        val ok = outcome.collect { case Right(r) => r }
+        if (ok.nonEmpty)
+          appendManifestRows(spark, cfg.manifestPath, runId, md5, ok, startedAt)
+        results ++= ok.map(r => r.partition -> r)
+        outcome.collectFirst { case Left((p, e)) => throw new RuntimeException(
+          s"partition ${cfg.partitionCol}=$p failed: ${e.getMessage}", e) }
+      } finally clearStaging()
+    }
+    partitions.map { case (p, _) =>
+      results.getOrElse(p, PartitionResult(p, 0, 0, 0, skipped = true)) }
+  }
+
+  /** Consecutive partitions grouped under the wave caps. */
+  private def waves(parts: Seq[(String, Long)]): Seq[Seq[String]] =
+    parts.foldLeft(Vector.empty[(Vector[String], Long)]) {
+      case (full :+ ((wave, bytes)), (p, n))
+          if wave.size < WavePartitions && bytes + n <= WaveBytes =>
+        full :+ ((wave :+ p, bytes + n))
+      case (full, (p, n)) => full :+ ((Vector(p), n))
+    }.map(_._1)
+
+  /** Validates, stages and promotes one wave: a result per partition whose
+   * directories moved into place, a failure per other one. Throws when a
+   * write job fails. */
+  private def validateWave(spark: SparkSession, checklist: Checklist,
+      cfg: Config, wave: Seq[String],
+      input: DataFrame): Seq[Either[(String, Throwable), PartitionResult]] = {
+    // a subdirectory, since a Spark reader skips a path named `_...`
+    val Seq(stageOut, stageViol) = Seq(cfg.outputPath, cfg.violationsPath)
+      .map(root => new Path(new Path(root, Staging), "wave"))
+    val slot = wave.indices.tail.foldLeft(when(inPartition(cfg.partitionCol, wave.head), 0))(
+      (c, i) => c.when(inPartition(cfg.partitionCol, wave(i)), i))
+    val staged = Validator.validate(input, checklist,
+      Validator.Options(cfg.rowIdCol, cfg.contentCol)).withColumn(SlotCol, slot)
+    // per slot: rows, invalid rows, violations
+    val metrics = wave.indices.flatMap { i =>
+      val in = col(SlotCol) === i
+      Seq(count(when(in, 1)), count(when(in && !col(Validator.PassedCol), 1)),
+        sum(when(in, size(col(Validator.ViolationsCol)))))
+    }.zipWithIndex.map { case (m, j) => m.as(s"m$j") }
+    val obs = Observation()
+    staged.observe(obs, metrics.head, metrics.tail: _*)
+      .write.mode(SaveMode.Overwrite).partitionBy(SlotCol).parquet(stageOut.toString)
+    val m = obs.get
+    def metric(j: Int): Long = Option(m(s"m$j")).fold(0L)(_.asInstanceOf[Long])
+    // the schema just written: re-reading it skips the footer-inference job
+    Validator.violationRows(
+        spark.read.schema(staged.schema).parquet(stageOut.toString), SlotCol)
+      .write.mode(SaveMode.Overwrite).partitionBy(SlotCol).parquet(stageViol.toString)
+    wave.zipWithIndex.map { case (p, i) =>
       // escaped as Spark's writer escapes it: a '/' in a value must not
       // nest directories, and a read of the output gets `p` back
       val dir = ExternalCatalogUtils.getPartitionPathString(cfg.partitionCol, p)
-      val (nRows, nInvalid, nViol) = validateSlice(spark, checklist,
-        slice, p, s"${cfg.outputPath}/$dir", s"${cfg.violationsPath}/$dir",
-        cfg.manifestPath, runId, md5, cfg.rowIdCol, cfg.contentCol)
-      PartitionResult(p, nRows, nInvalid, nViol, skipped = false)
+      try {
+        for ((stage, root) <- Seq(stageOut -> cfg.outputPath, stageViol -> cfg.violationsPath))
+          promote(spark, new Path(stage, s"$SlotCol=$i"), new Path(root, dir))
+        Right(PartitionResult(p, metric(3 * i), metric(3 * i + 1),
+          metric(3 * i + 2), skipped = false))
+      } catch { case NonFatal(e) => Left(p -> e) }
     }
-    partitions.map(p =>
-      results.getOrElse(p, PartitionResult(p, 0, 0, 0, skipped = true)))
   }
 
-  /** Runs `f` over `keys` on `min(keys.size, width)` threads. After the
-   * first failure no further key starts; keys already running finish (and
-   * commit), then that failure is rethrown naming its `partitionCol=key`. */
-  private def forEachConcurrently[R](keys: Seq[String], width: Int,
-      partitionCol: String)(f: String => R): Map[String, R] = {
-    if (keys.isEmpty) return Map.empty
-    val results = new java.util.concurrent.ConcurrentHashMap[String, R]()
-    val next = new java.util.concurrent.atomic.AtomicInteger(0)
-    val failure =
-      new java.util.concurrent.atomic.AtomicReference[(String, Throwable)]()
-    val worker: Runnable = () => {
-      var i = next.getAndIncrement()
-      while (failure.get == null && i < keys.size) {
-        val k = keys(i)
-        try results.put(k, f(k))
-        catch { case e: Throwable => failure.compareAndSet(null, (k, e)) }
-        i = next.getAndIncrement()
-      }
-    }
-    val threads = math.min(keys.size, width)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    try Seq.fill(threads)(pool.submit(worker)).foreach(_.get())
-    finally pool.shutdown()
-    Option(failure.get).foreach { case (k, e) =>
-      throw new RuntimeException(
-        s"partition $partitionCol=$k failed: ${e.getMessage}", e)
-    }
-    results.asScala.toMap
+  /** Moves a staged slot directory to `dst`, replacing what a previous run
+   * left there, and marks it `_SUCCESS` as a write of its own would; a
+   * slot without rows becomes an empty directory. */
+  private def promote(spark: SparkSession, src: Path, dst: Path): Unit = {
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(dst, true)
+    fs.mkdirs(dst.getParent)
+    if (!(if (fs.exists(src)) fs.rename(src, dst) else fs.mkdirs(dst)))
+      throw new java.io.IOException(s"cannot create $dst")
+    fs.create(new Path(dst, "_SUCCESS")).close()
   }
 
-  /** ONE compute pass over a work unit (a partition or a snapshot delta),
-   * shared by [[run]] and [[runIncremental]] so the metrics contract and
-   * manifest schema live in a single place: metrics ride the validated
-   * write as CollectMetrics (observe) accumulators — no second
-   * aggregation job, nothing cached (a 100 TB slice cannot be pinned in
-   * executor memory) — and violation rows derive from the just-written
-   * columnar output with a pushed-down passed=false filter, so only the
-   * invalid fraction is re-read, never recomputed. */
-  private def validateSlice(spark: SparkSession, checklist: Checklist,
-      slice: DataFrame, manifestKey: String, outDir: String,
-      violationsDir: String, manifestPath: String, runId: String,
-      md5: String, rowIdCol: Option[String],
-      contentCol: Option[String]): (Long, Long, Long) = {
-    val startedAt = java.time.Instant.now().toString
-    val validated = Validator.validate(slice, checklist,
-      Validator.Options(rowIdCol, contentCol))
-    val obs = org.apache.spark.sql.Observation(
-      s"graft_metrics_${manifestKey.replaceAll("[^A-Za-z0-9_.]", "_")}")
-    validated.observe(obs,
-      count(lit(1)).as("n_rows"),
-      count(when(!col(Validator.PassedCol), 1)).as("n_invalid"),
-      sum(size(col(Validator.ViolationsCol))).as("n_violations"))
-      .write.mode(SaveMode.Overwrite).parquet(outDir)
-    val m = obs.get
-    val nRows = m("n_rows").asInstanceOf[Long]
-    val nInvalid = m("n_invalid").asInstanceOf[Long]
-    val nViol = Option(m("n_violations")).fold(0L)(_.asInstanceOf[Long])
-    // the schema just written: re-reading it skips the footer-inference job
-    Validator.violationRows(spark.read.schema(validated.schema).parquet(outDir))
-      .write.mode(SaveMode.Overwrite).parquet(violationsDir)
-    appendManifestRow(spark, manifestPath, runId, manifestKey, md5,
-      nRows, nInvalid, nViol, startedAt, "ok")
-    (nRows, nInvalid, nViol)
-  }
-
-  final case class IncrementalResult(fromVersion: Long, toVersion: Long,
-      nRows: Long, nInvalid: Long, nViolations: Long, skipped: Boolean)
-
-  /**
-   * INCREMENTAL validation over a snapshot-table delta — the
-   * table-format-native companion to [[run]]: instead of re-validating
-   * partitions, validate exactly the rows ADDED between two snapshot
-   * versions ([[SnapshotTable.changesBetween]] — the
-   * Iceberg incremental-append-scan shape), so a daily ingest validates
-   * its delta, never the 100 TB table. Lineage rides the same manifest
-   * table as [[run]] with the partition key `delta:v<from>..v<to>`: a
-   * completed (delta, checklist_md5) pair skips on re-run, and a changed
-   * checklist invalidates prior work automatically, exactly like the
-   * partition runner. One compute pass (metrics ride the write as
-   * `observe` accumulators); violation rows derive from the written
-   * output with a pushed-down `passed = false` filter.
-   */
-  def runIncremental(spark: SparkSession, checklist: Checklist,
-      tableRoot: String, fromVersion: Long, toVersion: Long,
-      outputPath: String, violationsPath: String, manifestPath: String,
-      rowIdCol: Option[String] = None, contentCol: Option[String] = None,
-      runId: String = java.util.UUID.randomUUID().toString): IncrementalResult = {
-    val md5 = checklistMd5(checklist)
-    val key = s"delta:v$fromVersion..v$toVersion"
-    if (completedPartitions(spark, manifestPath, md5).contains(key))
-      return IncrementalResult(fromVersion, toVersion, 0, 0, 0, skipped = true)
-    val delta = SnapshotTable.changesBetween(
-      spark, tableRoot, fromVersion.toInt, toVersion.toInt)
-    val (nRows, nInvalid, nViol) = validateSlice(spark, checklist, delta,
-      key, s"$outputPath/delta=v${fromVersion}_v$toVersion",
-      s"$violationsPath/delta=v${fromVersion}_v$toVersion",
-      manifestPath, runId, md5, rowIdCol, contentCol)
-    IncrementalResult(fromVersion, toVersion, nRows, nInvalid, nViol,
-      skipped = false)
-  }
-
-  /** Serializes manifest appends: concurrent `SaveMode.Append` jobs into
-   * one directory share its `_temporary/0`, which the first job commit
-   * deletes under the others. */
-  private val manifestLock = new Object
-
-  private def appendManifestRow(spark: SparkSession, path: String,
-      runId: String, partition: String, md5: String, nRows: Long,
-      nInvalid: Long, nViolations: Long, startedAt: String,
-      status: String): Unit = {
+  private def appendManifestRows(spark: SparkSession, path: String,
+      runId: String, md5: String, results: Seq[PartitionResult],
+      startedAt: String): Unit = {
     import spark.implicits._
-    val row = Seq((runId, partition, md5, nRows, nInvalid, nViolations,
-      startedAt, java.time.Instant.now().toString, status))
+    val finishedAt = java.time.Instant.now().toString
+    results.map(r => (runId, r.partition, md5, r.nRows, r.nInvalid,
+        r.nViolations, startedAt, finishedAt, "ok"))
       .toDF("run_id", "partition", "checklist_md5", "n_rows", "n_invalid",
         "n_violations", "started_at", "finished_at", "status")
-      .coalesce(1)
-    manifestLock.synchronized(row.write.mode(SaveMode.Append).parquet(path))
+      .coalesce(1).write.mode(SaveMode.Append).parquet(path)
   }
 }

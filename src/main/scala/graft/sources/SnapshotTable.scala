@@ -48,6 +48,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *   snapshot(version)               table.snapshot(id)
  *   commit(overwritePartitions)     writeTo(t).overwritePartitions() | append()
  *   read(version, partitionFilter)  VERSION AS OF v + manifest-pruned scan
+ *   scan(snapshot, files)           a scan of planned FileScanTasks
  *   changesBetween(a, b)            incremental append scan (start/end-snapshot-id)
  *   partitions                      the t.partitions metadata table
  * }}}
@@ -296,14 +297,17 @@ object SnapshotTable {
     scan(spark, to, to.files.filterNot(fe => before.contains(fe.path)))
   }
 
-  /** Scan `files` with the snapshot's recorded schema, one relation per
-   * snapshot subtree (its `basePath` reattaches the partition columns,
-   * typed as recorded) and the union of those. */
-  private def scan(spark: SparkSession, snap: Snapshot,
+  /** Scan `files` of `snap` with its recorded schema: the union of one
+   * relation per snapshot subtree (its `basePath` reattaches the partition
+   * columns, typed as recorded) and per as many files as a relation lists
+   * without a Spark job. */
+  def scan(spark: SparkSession, snap: Snapshot,
       files: Seq[FileEntry]): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[Row](), snap.schema)
-    else files.groupBy(fe => fe.path.replaceAll("(/data/s\\d+)/.*$", "$1"))
+    else files.groupBy(fe => fe.path.replaceAll("(/data/s\\d+)/.*$", "$1")).toSeq
+      .flatMap { case (basePath, fes) => fes.grouped(spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold").toInt).map(basePath -> _) }
       .map { case (basePath, fes) =>
         spark.read.schema(snap.schema).option("basePath", basePath)
           .parquet(fes.map(_.path): _*)

@@ -43,6 +43,23 @@ class PlanSpec extends SparkSuite {
     assert(plan.contains("Generate"), "expected explode Generate node")
   }
 
+  test("violation rows build the violations array once") {
+    val v = Validator.validate(docs, graft.queries.Catalog.docsChecklist.copy(
+      fields = graft.queries.Catalog.docsChecklist.fields.filterNot(_.name == "lang2")),
+      Validator.Options(rowIdCol = Some("doc_id")))
+    val plan = Validator.violationRows(v).queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions)
+    val arrays = exprs.flatMap(_.collect {
+      case a: org.apache.spark.sql.catalyst.expressions.Alias
+        if a.name == Validator.ViolationsCol => a.child
+    })
+    assert(arrays.size === 1, s"expected one `violations` alias:\n$plan")
+    // a pushed-down `!passed` or inferred `size(..) > 0` filter would copy it
+    val builds = exprs.map(_.collect {
+      case e if e.semanticEquals(arrays.head) => e }.size).sum
+    assert(builds === 1, s"the violations array is built $builds times:\n$plan")
+  }
+
   test("column pruning: a projection that skips text reads only needed columns") {
     val q = docs.select("doc_id", "lang").filter($"lang" === "en")
     val scan = physical(q)

@@ -364,6 +364,126 @@ class RunnerSpec extends SparkSuite {
       .subsetOf(want.keySet))
   }
 
+  /** Runs `body` in job group `group` and counts the Spark jobs it
+   * starts; a sentinel job in another group marks the end of the run's
+   * job-start events. */
+  private def jobsIn[T](group: String)(body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sentinel = s"${group}_end"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val res = body
+      sc.setJobGroup(sentinel, "end of run")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (res, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("checkpoint run: a fresh snapshot-table run makes as many Spark jobs " +
+      "for 12 partitions as for 6, at most 8") {
+    val jobs = Seq(6, 12).map { parts =>
+      val base = Files.createTempDirectory(s"graft_ckpt_wave$parts").toString
+      val root = s"$base/table"
+      graft.sources.SnapshotTable.commit(
+        CodeFiles.generate(spark, 1200)
+          .withColumn("part", (col("id") % parts).cast("string")),
+        root, Seq("part"))
+      val (res, n) = jobsIn(s"ckpt_wave_jobs_$parts") {
+        CheckpointRunner.run(spark, CodeFiles.checklist, ckptConfig(root, base))
+      }
+      assert(res.size === parts &&
+        res.forall(r => !r.skipped && r.nRows === 1200 / parts))
+      n
+    }
+    assert(jobs(0) === jobs(1) && jobs(0) <= 8,
+      s"${jobs(0)} jobs for 6 partitions, ${jobs(1)} for 12")
+  }
+
+  test("checkpoint run: a corrupt input file fails only its partition, and " +
+      "a re-run validates only that one") {
+    val base = Files.createTempDirectory("graft_ckpt_corrupt").toString
+    val input = hiveInput(base, 300, 6)
+    val cfg = ckptConfig(input, base)
+    // a copy of one of the partition's files with its data pages zeroed:
+    // the footer still reads, so schema inference may pick it; its pages
+    // do not
+    val dir = java.nio.file.Paths.get(s"$input/part=5")
+    val good = Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".parquet")).head
+    val bytes = Files.readAllBytes(good)
+    val footer = java.nio.ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    java.util.Arrays.fill(bytes, 4, bytes.length - 8 - footer, 0.toByte)
+    val corrupt = dir.resolve("corrupt.parquet")
+    Files.write(corrupt, bytes)
+    // the output and violation roots hold partition directories only
+    def onlyPartitionDirs(): Unit =
+      for (root <- Seq(cfg.outputPath, cfg.violationsPath)) {
+        val names = Files.list(java.nio.file.Paths.get(root)).toArray
+          .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        assert(names.forall(_.startsWith("part=")), names.mkString(", "))
+      }
+
+    val err = intercept[Exception] {
+      CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
+    }
+    assert(err.getMessage.contains("partition part=5"), err.getMessage)
+    val ok = spark.read.parquet(cfg.manifestPath)
+      .filter(col("status") === "ok").select("partition").collect()
+      .map(_.getString(0)).toSet
+    assert(ok === Set("0", "1", "2", "3", "4"))
+    onlyPartitionDirs()
+
+    Files.delete(corrupt)
+    val again = CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
+    assert(again.filterNot(_.skipped).map(_.partition) === Seq("5"))
+    assert(again.find(_.partition == "5").get.nRows === 50)
+    onlyPartitionDirs()
+  }
+
+  test("checkpoint run: a null partition value is validated once, under " +
+      "Spark's default partition name, in a hive layout, a snapshot table " +
+      "and an unpartitioned input") {
+    val base = Files.createTempDirectory("graft_ckpt_null").toString
+    val df = CodeFiles.generate(spark, 60).withColumn("part",
+      when(col("id") % 3 =!= 2, (col("id") % 3).cast("string")))
+    df.write.partitionBy("part").parquet(s"$base/hive")
+    graft.sources.SnapshotTable.commit(df, s"$base/table", Seq("part"))
+    df.write.parquet(s"$base/flat")
+    val nullPart = "__HIVE_DEFAULT_PARTITION__"
+    for (layout <- Seq("hive", "table", "flat")) {
+      val cfg = ckptConfig(s"$base/$layout", s"$base/$layout-run")
+      val res = CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
+      assert(res.map(_.partition) === Seq("0", "1", nullPart), layout)
+      val ids = spark.read.parquet(cfg.outputPath).select("id").as[Long]
+        .collect().sorted
+      assert(ids.toSeq === (0L until 60L), layout)
+      val manifest = spark.read.parquet(cfg.manifestPath).collect()
+        .map(r => r.getAs[String]("partition") -> r.getAs[Long]("n_rows")).toMap
+      assert(manifest === Map("0" -> 20L, "1" -> 20L, nullPart -> 20L), layout)
+      assert(Files.isDirectory(
+        java.nio.file.Paths.get(s"${cfg.outputPath}/part=$nullPart")), layout)
+      assert(CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
+        .forall(_.skipped), layout)
+    }
+  }
+
   test("curation metrics run unchanged on a stream (stateless projection)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -486,43 +606,5 @@ class RunnerSpec extends SparkSuite {
     assert(graft.engine.Validator.report("f.csv", 0) === ("'f.csv' is valid", 0))
     assert(graft.engine.Validator.report("f.csv", 3) ===
       ("'f.csv' is invalid. Found 3 invalid rows", 1))
-  }
-
-  test("incremental validation over a snapshot delta: validates exactly " +
-      "the added rows, skips completed deltas, checklist change re-runs") {
-    import graft.sources.{CodeFiles, SnapshotTable}
-    val base = Files.createTempDirectory("graft_inc").toString
-    val root = s"$base/table"
-    val all = CodeFiles.generate(spark, 300)
-      .withColumn("part", (col("id") % 2).cast("string"))
-    SnapshotTable.commit(all.filter(col("id") < 200), root, Seq("part"))
-    SnapshotTable.commit(all.filter(col("id") >= 200), root, Seq("part"),
-      overwritePartitions = false) // v2 appends 100 rows
-    val r1 = CheckpointRunner.runIncremental(spark, CodeFiles.checklist,
-      root, 1L, 2L, s"$base/out", s"$base/viol", s"$base/manifest",
-      rowIdCol = Some("id"))
-    assert(!r1.skipped && r1.nRows === 100)
-    // metrics match a direct validation of the same delta
-    val direct = graft.engine.Validator.validate(
-      SnapshotTable.changesBetween(spark, root, 1, 2), CodeFiles.checklist,
-      graft.engine.Validator.Options(rowIdCol = Some("id")))
-    val nInvalidDirect = direct
-      .filter(!col(graft.engine.Validator.PassedCol)).count()
-    assert(r1.nInvalid === nInvalidDirect)
-    // violation rows landed, derived from the written output
-    val viols = spark.read.parquet(s"$base/viol/delta=v1_v2")
-    assert(viols.count() > 0)
-    // re-run: skipped via the manifest lineage
-    val r2 = CheckpointRunner.runIncremental(spark, CodeFiles.checklist,
-      root, 1L, 2L, s"$base/out", s"$base/viol", s"$base/manifest",
-      rowIdCol = Some("id"))
-    assert(r2.skipped)
-    // a changed checklist invalidates the delta and re-validates
-    val changed = CodeFiles.checklist.copy(
-      fields = CodeFiles.checklist.fields.filterNot(_.name == "lang"))
-    val r3 = CheckpointRunner.runIncremental(spark, changed,
-      root, 1L, 2L, s"$base/out", s"$base/viol", s"$base/manifest",
-      rowIdCol = Some("id"))
-    assert(!r3.skipped && r3.nRows === 100)
   }
 }
