@@ -56,8 +56,6 @@ object ChecklistCompiler {
       array_compact(array(elems: _*))
     }
 
-    def passed: Column = size(violations) === 0
-
     /** Reference-format accumulated error string:
      * `[errors found on row N] ...` (reference: Validator.pm:136-145 —
      * messages concatenated with their original padding, then trimmed and

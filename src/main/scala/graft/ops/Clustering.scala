@@ -120,23 +120,4 @@ object Clustering {
     labels.select(col("id"), col("comp").as("component"))
   }
 
-  /** Canonical-per-cluster selection: one row per component — the member
-   * with the smallest id (the component label itself, by construction).
-   * The rest of the cluster is the drop set of a dedup pass. */
-  def canonicalIds(components: DataFrame): DataFrame =
-    components.filter(col("id") === col("component")).select(col("id"))
-
-  /** Apply the dedup: drop every NON-canonical cluster member from `df`.
-   * The drop set (components where id != component) is cluster-member
-   * scale, typically a small fraction of the corpus; at dimension scale
-   * Spark broadcasts the anti-join side, and past the broadcast threshold
-   * AQE falls back to a shuffled anti-join on the id key — both shapes
-   * keep the corpus side single-scan. Rows absent from `components`
-   * (singletons — no near-dup pair found) are kept. */
-  def dropDuplicateMembers(df: DataFrame, idCol: String,
-      components: DataFrame): DataFrame = {
-    val drops = components.filter(col("id") =!= col("component"))
-      .select(col("id").as("__drop_id"))
-    df.join(drops, df(idCol) === col("__drop_id"), "left_anti")
-  }
 }

@@ -33,11 +33,6 @@ import org.apache.spark.sql.functions._
  */
 object Curation {
 
-  /** Evaluate `c` once and hand it to `f` as a lambda-bound variable —
-   * the array-of-one binding trick (see [[Dedup.shingles]]). */
-  private def bind1(c: Column)(f: Column => Column): Column =
-    element_at(transform(array(c), x => f(x)), 1)
-
   /** Word n-grams as strings (space-joined); empty array when the doc has
    * fewer than n tokens or the text is NULL/blank. String n-grams (not
    * hashes) so the DuckDB oracle comparison is exact by construction, no
@@ -86,18 +81,7 @@ object Curation {
       .otherwise(round(lit(1.0) -
         size(array_distinct(ng)).cast("double") / size(ng), 6))
 
-  // --- public per-metric Columns (standalone use; arrays bound once) --------
-
-  /** Fraction of lines that repeat an earlier line: 1 - distinct/total
-   * (0 for single-line or NULL docs). */
-  def dupLineFrac(text: Column): Column =
-    when(text.isNull, lit(0.0))
-      .otherwise(bind1(split(text, "\n"))(dupLineFracOf))
-
-  /** Fraction of word-n-gram occurrences that are repeats of an earlier
-   * one: 1 - distinct/total. */
-  def dupNgramFrac(text: Column, n: Int): Column =
-    bind1(wordNgrams(text, n))(dupNgramFracOf)
+  // --- repetition profile ---------------------------------------------------
 
   /** The curated repetition profile, one shuffle-free pass:
    * (id, n_lines, dup_line_frac, dup_line_char_frac, top_bigram_frac,
@@ -174,8 +158,7 @@ object Curation {
    * scale the join key can additionally be salted by (line, doc-hash
    * band) with the winner table replicated per band. The explode also
    * evaluates on both join sides (two scans of `df`) — callers composing
-   * this after expensive lineage should checkpoint first, as
-   * [[curateCorpus]] does.
+   * this after expensive lineage should checkpoint first.
    */
   def dedupLines(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val lines = df
@@ -245,17 +228,12 @@ object Curation {
    * Enum validator); domains bind once at a projection boundary so the
    * extract-all runs once per row, not once per output column.
    */
-  /** Domains of every URL in `text` — THE extraction expression; both
-   * [[urlAudit]] and [[urlKeep]] must stay on this single definition so
-   * the audit columns and the standalone keep predicate can't drift. */
-  private def urlDomains(text: Column): Column =
-    transform(regexp_extract_all(text, lit(UrlRe), lit(0)),
-      u => regexp_extract(u, "https?://([^/]+)", 1))
-
   def urlAudit(df: DataFrame, idCol: String, textCol: String,
       blocklist: Seq[String]): DataFrame = {
     require(blocklist.nonEmpty, "urlAudit needs a non-empty blocklist")
-    df.select(col(idCol), urlDomains(col(textCol)).as("__d"))
+    val domains = transform(regexp_extract_all(col(textCol), lit(UrlRe), lit(0)),
+      u => regexp_extract(u, "https?://([^/]+)", 1))
+    df.select(col(idCol), domains.as("__d"))
       .select(col(idCol),
         size(col("__d")).cast("int").as("n_urls"),
         size(filter(col("__d"), d => d.isin(blocklist: _*)))
@@ -263,11 +241,6 @@ object Curation {
         get(col("__d"), lit(0)).as("first_domain"))
       .withColumn("keep", col("n_blocked") === 0)
   }
-
-  /** True when `text` contains no URL whose domain is in `blocklist` —
-   * the [[urlAudit]] keep verdict as a standalone predicate Column. */
-  def urlKeep(text: Column, blocklist: Seq[String]): Column =
-    size(filter(urlDomains(text), d => d.isin(blocklist: _*))) === 0
 
   /**
    * Blocked-term gate ([[graft.functions.AcMultiLiteralStats]]): one
@@ -334,59 +307,5 @@ object Curation {
           array_sort(collect_list(when(col("__keep"),
             struct(col("__idx"), col("__line"))))),
           s => s.getField("__line")), "\n").as("text_clean"))
-  }
-
-  /**
-   * The one-call curation pipeline — the corpus-hygiene counterpart of
-   * [[Dedup.dedupCorpus]], composing this module's gates in the order a
-   * 100 TB pass wants them:
-   *
-   *  1. shuffle-free row gates FIRST (quality floor, repetition ceilings,
-   *     URL blocklist) — one codegen'd filter over the scan, shrinking the
-   *     corpus before anything that shuffles;
-   *  2. PII scrub (in-place projection on the survivors);
-   *  3. benchmark decontamination (broadcast-join gate) when a benchmark
-   *     shingle set is supplied;
-   *  4. corpus-wide line-level dedup LAST (the only big shuffle), with the
-   *     surviving text replacing `textCol`.
-   *
-   * All other columns of `df` pass through. Each stage's semantics (and
-   * its oracle) live with the underlying operator; this is deliberately
-   * just the composition.
-   */
-  def curateCorpus(df: DataFrame, idCol: String, textCol: String,
-      minQuality: Double = 0.3,
-      maxDupLineFrac: Double = 0.3,
-      maxDup5gramFrac: Double = 0.3,
-      blocklist: Seq[String] = Nil,
-      bench: Option[DataFrame] = None,
-      maxContam: Double = 0.8,
-      lineDedup: Boolean = true): DataFrame = {
-    val t = col(textCol)
-    var cur = df.filter(
-      TextAnalysis.qualityScore(t) >= minQuality &&
-        dupLineFrac(t) <= maxDupLineFrac &&
-        dupNgramFrac(t, 5) <= maxDup5gramFrac)
-    if (blocklist.nonEmpty) cur = cur.filter(urlKeep(t, blocklist))
-    cur = cur.withColumn(textCol, piiRedact(t))
-    bench.foreach { b =>
-      val dirty = contamination(cur, idCol, textCol, b)
-        .filter(col("contam_frac") > maxContam).select(col(idCol))
-      cur = cur.join(dirty, Seq(idCol), "left_anti")
-    }
-    if (lineDedup) {
-      // Cut the gate/scrub/decontam lineage before the dedup stage: its
-      // result feeds THREE subplans (the exploded probe side, the winner
-      // aggregate, and the final join's left side) whose exchanges differ,
-      // so exchange reuse cannot dedupe them — without this checkpoint the
-      // regex-heavy gates would execute three times over the corpus. Lazy
-      // (eager=false): materializes on first action, reused thereafter.
-      cur = cur.localCheckpoint(false)
-      val survivors = dedupLines(cur, idCol, textCol)
-        .select(col(idCol), col("text_dedup"))
-      cur = cur.drop(textCol).join(survivors, Seq(idCol))
-        .withColumnRenamed("text_dedup", textCol)
-    }
-    cur
   }
 }

@@ -26,35 +26,6 @@ object Dedup {
         sort_array(collect_list(idCol)).as("member_ids"))
       .filter(col("group_size") > 1)
 
-  /**
-   * One-call corpus dedup — the composition a pipeline author actually
-   * wants: (1) exact fingerprint dedup collapses byte-identical clones
-   * without any signature work; (2) MinHash-LSH candidate pairs at
-   * `estJaccard` or above over the survivors; (3) pairs close into
-   * clusters ([[Clustering.connectedComponents]] — transitive, so A~B~C
-   * collapses even without a direct A~C pair); (4) each cluster keeps its
-   * smallest id. Returns the deduplicated corpus with original columns.
-   *
-   * Scale shape: every stage is the bounded form documented on its
-   * operator — fingerprint groupBy (32-byte keys), capped LSH buckets,
-   * O(log n) clustering rounds, anti-join application. Nothing here is
-   * more than the sum of its audited parts.
-   */
-  def dedupCorpus(df: DataFrame, idCol: String, textCol: String,
-      estJaccard: Double = 0.8, k: Int = 3, numHashes: Int = 32,
-      bands: Int = 8, maxBucketSize: Int = 200): DataFrame = {
-    val exactDrops = exactGroups(df, idCol, textCol)
-      .select(col("keep_id"), explode(col("member_ids")).as("__m"))
-      .filter(col("__m") =!= col("keep_id"))
-      .select(col("__m").as(idCol))
-    val afterExact = df.join(exactDrops, Seq(idCol), "left_anti")
-    val pairs = minhashCandidates(afterExact, idCol, textCol,
-      k, numHashes, bands, maxBucketSize)
-      .filter(col("est_jaccard") >= estJaccard)
-    Clustering.dropDuplicateMembers(afterExact, idCol,
-      Clustering.connectedComponents(pairs, "id_a", "id_b"))
-  }
-
   // --- shingling + MinHash + LSH ------------------------------------------
 
   /** Word k-shingles of the lowercased text as distinct strings (the
@@ -278,21 +249,6 @@ object Dedup {
     }
   }
 
-  /** Exact n-gram Jaccard similarity for candidate pairs: joins the pairs
-   * back to per-id shingle sets (broadcast-sized at test scale; co-hashed
-   * join at cluster scale) and computes |A∩B| / |A∪B| with array ops. */
-  def ngramJaccard(pairs: DataFrame, df: DataFrame, idCol: String,
-      textCol: String, k: Int = 3): DataFrame = {
-    val sh = df.select(col(idCol).as("id"),
-      shingleHashes(col(textCol), k).as("sh"))
-    val withA = pairs.join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-    val withB = withA.join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-    withB.withColumn("jaccard",
-      round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-        size(array_union(col("sh_a"), col("sh_b"))), 6))
-      .select(pairs.columns.map(col).toSeq :+ col("jaccard"): _*)
-  }
-
   // --- SimHash -------------------------------------------------------------
 
   /**
@@ -368,7 +324,7 @@ object Dedup {
    * Embedding near-duplicate pairs with cosine >= threshold, blocked by a
    * coarse partition key (e.g. a cluster/label id) so the pairwise check is
    * block-local, never a global cross join. At cluster scale the blocking
-   * key comes from an ANN index pass (see [[Similarity.lshBuckets]]).
+   * key comes from an ANN index pass (see [[Similarity.lshBucket]]).
    */
   /**
    * Embedding near-dup pairs WITHOUT a natural blocking column — the
@@ -613,48 +569,5 @@ object Dedup {
     fp.join(winners, Seq("fingerprint", idCol)) // first-wins within the delta
       .join(seen.select(col(fingerprintCol).as("fingerprint")).distinct(),
         Seq("fingerprint"), "left_anti")
-  }
-
-  /**
-   * The persistable LSH index of a corpus: one (bucket, id, sig) row per
-   * band — [[minhashCandidates]]'s intermediate, exposed so it can be
-   * written once and probed by every future delta.
-   */
-  def minhashIndex(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, numHashes: Int = 32, bands: Int = 8): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
-    val sh = df.select(col(idCol).as("id"), shingleHashes(col(textCol), k).as("sh"))
-    sh.select(col("id"), minhashSignature(col("sh"), numHashes).as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("id"), col("sig"),
-        explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bucket"))
-  }
-
-  /**
-   * Incremental MinHash-LSH: near-dup candidate pairs of `newDocs`
-   * AGAINST a stored [[minhashIndex]] — (new_id, old_id, est_jaccard),
-   * never a delta×corpus cross join: the equi-join key is the band
-   * bucket, so shuffle volume is delta-bands + the matching index slice.
-   * Degenerate buckets are capped on BOTH sides (an index bucket holding
-   * > maxBucketSize ids is non-discriminative, same contract as the batch
-   * path). Parameters must match the ones the index was built with.
-   */
-  def minhashCandidatesAgainst(newDocs: DataFrame, idCol: String,
-      textCol: String, index: DataFrame, k: Int = 3, numHashes: Int = 32,
-      bands: Int = 8, maxBucketSize: Int = 200): DataFrame = {
-    val newBands = minhashIndex(newDocs, idCol, textCol, k, numHashes, bands)
-      .withColumnRenamed("id", "new_id").withColumnRenamed("sig", "new_sig")
-    val okBuckets = index.groupBy("bucket")
-      .agg(count(lit(1)).as("__n")).filter(col("__n") <= maxBucketSize)
-      .select("bucket")
-    val oldSide = index.join(okBuckets, Seq("bucket"))
-      .select(col("bucket"), col("id").as("old_id"), col("sig").as("old_sig"))
-    newBands.join(oldSide, Seq("bucket"))
-      .filter(col("new_id") =!= col("old_id"))
-      .select(col("new_id"), col("old_id"),
-        (graft.functions.VectorKernels.sigAgreement(col("new_sig"), col("old_sig"))
-          .cast("double") / numHashes).as("est_jaccard"))
-      .dropDuplicates("new_id", "old_id")
   }
 }

@@ -364,21 +364,4 @@ object Joins {
       .select(col("key"), col("n_a"), col("n_b"),
         col("__n_out_exact").cast("double").as("n_out"))
   }
-
-  /** Exact total inner-join cardinality — Σ n_a·n_b over matching keys —
-   * as a driver scalar (one extra aggregate over [[joinSizeProfile]]'s
-   * intermediate; 0 for no matches). BigDecimal because the total of a
-   * pathological join overflows a long exactly when this pre-flight
-   * matters most. */
-  def joinSize(a: DataFrame, b: DataFrame, keyA: String,
-      keyB: String): BigDecimal = {
-    val ca = a.filter(col(keyA).isNotNull)
-      .groupBy(col(keyA).as("key")).agg(count(lit(1)).as("n_a"))
-    val cb = b.filter(col(keyB).isNotNull)
-      .groupBy(col(keyB).as("key")).agg(count(lit(1)).as("n_b"))
-    BigDecimal(ca.join(cb, "key")
-      .agg(coalesce(sum(col("n_a").cast("decimal(38,0)") * col("n_b")),
-        lit(0).cast("decimal(38,0)")))
-      .head().getDecimal(0))
-  }
 }

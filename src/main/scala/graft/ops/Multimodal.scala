@@ -1,19 +1,19 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /**
  * Multimodal-column plumbing: image/audio/video payloads ride as opaque
  * `binary` columns with a typed metadata struct; decode / feature-extract /
- * resize / frame-sample run as per-partition batch transforms.
+ * frame-sample run as per-partition batch transforms.
  *
  * The IMAGE modality uses a REAL codec with no external dependency
  * ([[Codec]]): a hand-rolled PNG encoder AND decoder ([[PngDecode]],
  * pinned pixel-equal to `ImageIO.read` cross-implementation in
  * PngDecodeSpec, with `javax.imageio` as the runtime fallback for PNG
  * variants outside the fast subset) — `mm_features` width/height are true
- * pixel dimensions and the resize path really rescales pixels. The AUDIO modality is real too: WAV/RIFF PCM16 is
+ * pixel dimensions. The AUDIO modality is real too: WAV/RIFF PCM16 is
  * a public byte format the JDK needs no library for — [[Codec.encodeWav]] /
  * [[Codec.wavMeta]] write and chunk-walk real RIFF containers. VIDEO has no
  * in-container codec (ffmpeg-class), so it rides a minimal documented frame
@@ -114,31 +114,6 @@ object Multimodal {
       wrapPng(width, height, colorType = 2, raw)
     }
 
-    /** Packed-RGB variant of [[encodePng]]: same filter-0 + zlib + chunk
-     * tail, pixels supplied as 0xRRGGBB ints (the [[PngDecode.RawImage]]
-     * layout) — lets resize re-encode without `ImageIO.write` (~3 ms per
-     * call) on the loop. */
-    def encodePngPixels(width: Int, height: Int, rgb: Array[Int]): Array[Byte] = {
-      require(rgb.length == width * height, "pixel array does not match dims")
-      val stride = 1 + width * 3
-      val raw = new Array[Byte](height * stride)
-      var y = 0
-      while (y < height) {
-        var src = y * width
-        var o = y * stride + 1
-        val end = src + width
-        while (src < end) {
-          val v = rgb(src)
-          raw(o) = ((v >> 16) & 0xff).toByte
-          raw(o + 1) = ((v >> 8) & 0xff).toByte
-          raw(o + 2) = (v & 0xff).toByte
-          src += 1; o += 3
-        }
-        y += 1
-      }
-      wrapPng(width, height, colorType = 2, raw)
-    }
-
     /** Deflate pre-filtered scanlines and wrap them in signature +
      * IHDR/IDAT/IEND. `raw` is the PNG "filtered" byte stream (one filter
      * byte then `width * channels` data bytes per scanline); `colorType`
@@ -200,7 +175,6 @@ object Multimodal {
           reader.read(0)
         } finally iis.close()
       }
-      def dispose(): Unit = reader.dispose()
     }
 
     /**
@@ -409,27 +383,6 @@ object Multimodal {
         width = first.width, height = first.height,
         duration_ms = idx.durationMs, feature = feature)
     }
-
-    /** Real rescale: decode, Graphics2D bilinear draw into the target
-     * canvas, re-encode with the hand-rolled writer (`ImageIO.write` cost
-     * ~3 ms per call; [[encodePngPixels]] shares [[encodePng]]'s tail). */
-    def resizePng(payload: Array[Byte], width: Int, height: Int,
-        dec: ImageDecoder): Array[Byte] = {
-      val raw = dec.decode(payload)
-      val src = new java.awt.image.BufferedImage(
-        raw.width, raw.height, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      src.setRGB(0, 0, raw.width, raw.height, raw.rgb, 0, raw.width)
-      val dst = new java.awt.image.BufferedImage(
-        width, height, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g = dst.createGraphics()
-      try {
-        g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g.drawImage(src, 0, 0, width, height, null)
-      } finally g.dispose()
-      encodePngPixels(width, height,
-        dst.getRGB(0, 0, width, height, null, 0, width).map(_ & 0xffffff))
-    }
   }
 
   /** Deterministic synthetic PNG corpus: one REAL encoded PNG per id with
@@ -562,44 +515,4 @@ object Multimodal {
    * parquet column pruning skips the heavy binary column entirely. */
   def metadata(assets: Dataset[Asset]): DataFrame =
     assets.toDF().select("asset_id", "modality", "mime", "n_bytes", "sha256")
-
-  /**
-   * Per-partition batched resize: REAL decode-scale-reencode for
-   * `image/png` payloads ([[Codec.resizePng]]); for modalities without a
-   * codec in this container, a deterministic stub payload with the byte
-   * budget of the target dimensions. Metadata (n_bytes/sha256) is
-   * recomputed over the NEW payload on both paths.
-   */
-  def resize(assets: Dataset[Asset], width: Int, height: Int): Dataset[Asset] = {
-    import assets.sparkSession.implicits._
-    require(width > 0 && height > 0, "resize dims must be positive")
-    val outLen = math.max(16, (width.toLong * height / 64).toInt)
-    assets.mapPartitions { it =>
-      // per-partition handles, never per row: the digest AND the image
-      // decoder (ImageIO.read would pay registry/stream setup per image)
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-      val dec = new Codec.ImageDecoder
-      it.map { a =>
-        val out =
-          if (a.mime == "image/png") Codec.resizePng(a.payload, width, height, dec)
-          else {
-            // --- stub scale step (audio/video): FNV-1a byte stream ---
-            var h = a.payload.foldLeft(1469598103934665603L)((acc, b) =>
-              (acc ^ (b & 0xff)) * 1099511628211L)
-            val bytes = new Array[Byte](outLen)
-            var i = 0
-            while (i < outLen) {
-              h = (h ^ i) * 1099511628211L
-              bytes(i) = (h >>> 56).toByte
-              i += 1
-            }
-            bytes
-          }
-        // --- real metadata recompute over the NEW payload ---
-        digest.reset()
-        val sha = digest.digest(out).map("%02x".format(_)).mkString
-        a.copy(payload = out, n_bytes = out.length.toLong, sha256 = sha)
-      }
-    }
-  }
 }

@@ -41,12 +41,6 @@ object Similarity {
   def lshBucket(vec: Column, planes: Array[Array[Double]]): Column =
     graft.functions.VectorKernels.hyperplaneLsh(vec, planes)
 
-  /** Assign every vector its LSH bucket — the index-build pass. */
-  def lshBuckets(df: DataFrame, idCol: String, vecCol: String,
-      planes: Array[Array[Double]]): DataFrame =
-    df.select(col(idCol), col(vecCol),
-      lshBucket(col(vecCol), planes).as("bucket"))
-
   /** ANN top-k: score only vectors in the query's bucket. Exactness is
    * traded for scanning ~1/2^bits of the data; rerank is exact cosine. */
   def annTopK(df: DataFrame, idCol: String, vecCol: String,

@@ -354,27 +354,6 @@ object TextAnalysis {
         round(col("__kw.score"), 6).as("score"))
   }
 
-  /** Auto-dispatching front door: ONE cheap HyperLogLog aggregation
-   * estimates the distinct-token count (sketch merge — no token shuffle),
-   * then picks the broadcast-map path (small vocab: zero joins, fastest)
-   * or the join path (open vocab: driver-safe). The 0.9 haircut is ~2
-   * sigma of approx_count_distinct's default 5% rsd — a borderline
-   * estimate errs toward the join path, never into [[idfMap]]'s hard
-   * require (whose maxVocab this dispatcher FORWARDS, so a caller-raised
-   * budget raises both the dispatch threshold and the guard). */
-  def tfidfKeywordsAuto(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, maxVocab: Int = DefaultMaxVocab): DataFrame = {
-    val base = df.filter(col(textCol).isNotNull)
-    val est = base
-      .select(explode(array_distinct(tokensLower(col(textCol)))).as("token"))
-      .agg(approx_count_distinct(col("token")).as("v"))
-      .head().getLong(0)
-    if (est <= (maxVocab * 0.9).toLong)
-      tfidfKeywords(df, idCol, textCol, k,
-        idf = Some(idfMap(df, idCol, textCol, maxVocab = maxVocab)))
-    else tfidfKeywordsJoin(df, idCol, textCol, k)
-  }
-
   /** All text features in one projection over (idCol, textCol). */
   def features(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val t = col(textCol)
@@ -572,9 +551,8 @@ object TextAnalysis {
    * shuffle-free projection — no global sort, no ntile window (an
    * `ntile(3)` would funnel the corpus through a single-partition Window;
    * thresholds-then-filter is the distributed form of the same cut). At
-   * the 10^10-row regime swap the exact percentile for
-   * [[graft.quality.ColumnStats.approxPercentiles]]; the cut stays a
-   * projection.
+   * the 10^10-row regime swap the exact percentile for Spark's
+   * `percentile_approx`; the cut stays a projection.
    */
   def lmBuckets(scored: DataFrame, idCol: String,
       nllCol: String = "avg_nll"): DataFrame = {
@@ -652,20 +630,6 @@ object TextAnalysis {
       .agg(count(lit(1)).cast("int").as("n_tokens"),
         round(-sum(coalesce(col("logp"), lit(oov))) / count(lit(1)), 6)
           .as("avg_nll"))
-  }
-
-  /** Auto-dispatching LM scorer (the [[tfidfKeywordsAuto]] contract): one
-   * HLL estimate of the training vocabulary picks broadcast-map scoring
-   * (small vocab) or the join path (open vocab). */
-  def lmScoreAuto(train: DataFrame, score: DataFrame, idCol: String,
-      textCol: String, maxVocab: Int = DefaultMaxVocab): DataFrame = {
-    val est = train.filter(col(textCol).isNotNull)
-      .select(explode(array_distinct(tokensLower(col(textCol)))).as("token"))
-      .agg(approx_count_distinct(col("token")).as("v"))
-      .head().getLong(0)
-    if (est <= (maxVocab * 0.9).toLong)
-      lmScore(score, idCol, textCol, lmModel(train, textCol, maxVocab))
-    else lmScoreJoin(score, idCol, textCol, lmModelDf(train, textCol))
   }
 
   /**
@@ -810,29 +774,5 @@ object TextAnalysis {
     state.unpersist()
     merges.toSeq.toDF("merge_rank", "lhs", "rhs", "n")
       .orderBy("merge_rank")
-  }
-
-  /** Segment text with a TRAINED merge table: each word splits to
-   * characters + `</w>` and every merge applies in rank order — the
-   * inference half of [[bpeTrain]], a pure shuffle-free projection (the
-   * merge table is a handful of rows, inlined as literals). */
-  def bpeSegment(df: DataFrame, textCol: String,
-      merges: Seq[(String, String)], outCol: String = "bpe_tokens"): Column = {
-    // one transform LAYER per merge over the array-of-symbol-arrays — the
-    // lambda variable is a leaf, so the expression tree grows LINEARLY in
-    // the merge count (a per-merge function composition would reference
-    // its input subtree three times per level and blow up exponentially)
-    val base = transform(tokensLower(col(textCol)),
-      w => concat(split(w, ""), array(lit("</w>"))))
-    val mergedAll = merges.foldLeft(base) { case (cur, (a, b)) =>
-      transform(cur, syms =>
-        aggregate(slice(syms, lit(2), size(syms) - 1),
-          array(element_at(syms, 1)),
-          (acc, s) => when(
-            element_at(acc, -1) === lit(a) && s === lit(b),
-            concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-            .otherwise(concat(acc, array(s)))))
-    }
-    flatten(mergedAll).as(outCol)
   }
 }

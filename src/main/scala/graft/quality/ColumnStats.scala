@@ -135,7 +135,7 @@ object ColumnStats {
    *
    * Exact percentiles buffer each group's values — fine for per-group
    * profiling (groups of 10^6s), wrong for a 10^10-row group; that regime
-   * is [[approxPercentiles]].
+   * needs Spark's `percentile_approx`.
    */
   def percentiles(df: DataFrame, valueCol: String, groupCols: Seq[String],
       ps: Seq[Double]): DataFrame = {
@@ -148,29 +148,6 @@ object ColumnStats {
     grouped.agg(exact.as("__ps"))
       .select(groupCols.map(col) ++ ps.zipWithIndex.map { case (p, i) =>
         round(element_at(col("__ps"), i + 1), 6).as(pName(p))
-      }: _*)
-  }
-
-  /**
-   * Bounded-memory per-group percentiles — the 100 TB path: Spark's
-   * `percentile_approx` (Greenwald–Khanna summaries, mergeable partials of
-   * O(accuracy) size, map-side combined like any aggregate). Guarantee:
-   * the returned value's RANK is within n/accuracy of the target — it is
-   * always an actual data value, not an interpolation, so results are
-   * deterministic but not oracle-equatable to `quantile_cont`; the spec
-   * pins the rank-error contract against the exact path instead.
-   */
-  def approxPercentiles(df: DataFrame, valueCol: String,
-      groupCols: Seq[String], ps: Seq[Double],
-      accuracy: Int = 10000): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1), "ps must be in [0,1]")
-    val arr = percentile_approx(col(valueCol).cast("double"),
-      array(ps.map(lit): _*), lit(accuracy))
-    val grouped = if (groupCols.isEmpty) df.groupBy() else
-      df.groupBy(groupCols.map(col): _*)
-    grouped.agg(arr.as("__ps"))
-      .select(groupCols.map(col) ++ ps.zipWithIndex.map { case (p, i) =>
-        element_at(col("__ps"), i + 1).as(pName(p))
       }: _*)
   }
 

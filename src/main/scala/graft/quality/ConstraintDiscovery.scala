@@ -1,10 +1,10 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.model.{Checklist, FieldDef, FieldType}
+import graft.model.FieldType
 import graft.compile.ChecklistCompiler.{isEmptyCell, stripQuotes, typePredicate}
 
 /**
@@ -66,22 +66,6 @@ object ConstraintDiscovery {
         .as("coefficient"))
   }
 
-  /** The distinct fact values NOT contained in the dimension, with their
-   * fact-side occurrence counts — the row-level evidence behind
-   * [[inclusionStats]]'s coefficient (feeds the violations sink the same
-   * way [[Referential.violationSummary]] does for declared FKs). */
-  def inclusionViolations(fact: DataFrame, factKey: String,
-      dim: DataFrame, dimKey: String,
-      broadcastDim: Boolean = true): DataFrame = {
-    val d0 = dim.filter(col(dimKey).isNotNull)
-      .select(col(dimKey).as(factKey)).distinct()
-    val d = if (broadcastDim) broadcast(d0) else d0
-    fact.filter(col(factKey).isNotNull)
-      .join(d, Seq(factKey), "left_anti")
-      .groupBy(col(factKey))
-      .agg(count(lit(1)).as("n_rows"))
-  }
-
   /**
    * Functional-dependency violations: groups of `determinant` columns whose
    * rows carry MORE than one distinct `dependent` value — the FD
@@ -96,18 +80,6 @@ object ConstraintDiscovery {
       .agg(countDistinct(col(dependent)).as("n_dependent"),
         count(lit(1)).as("n_rows"))
       .filter(col("n_dependent") > 1)
-
-  /** One-row FD summary: total determinant groups, violating groups, and
-   * the FD satisfaction ratio (1.0 = the dependency holds). */
-  def fdStats(df: DataFrame, determinant: Seq[String], dependent: String): DataFrame =
-    df.groupBy(determinant.map(col): _*)
-      .agg(countDistinct(col(dependent)).as("n_dependent"))
-      .agg(count(lit(1)).as("n_groups"),
-        sum(when(col("n_dependent") > 1, 1L).otherwise(0L)).as("n_violating"))
-      .select(col("n_groups"), col("n_violating"),
-        round((col("n_groups") - col("n_violating")) /
-          when(col("n_groups") === 0, lit(1)).otherwise(col("n_groups")), 6)
-          .as("fd_ratio"))
 
   /**
    * Profile-driven constraint suggestion (Deequ's ConstraintSuggestion,
@@ -321,14 +293,6 @@ object ConstraintDiscovery {
       InferredField(n, ftype, required = ne == nRows && nRows > 0)
     }
   }
-
-  /** [[inferFields]] materialized as a runnable [[graft.model.Checklist]]
-   * (field order = `df` column order — violation order is load-bearing,
-   * reference Validator.pm:219-279). */
-  def inferChecklist(df: DataFrame, name: String = "inferred",
-      enumMaxCard: Int = 16): Checklist =
-    Checklist(name, inferFields(df, enumMaxCard).map(f =>
-      FieldDef(f.name, f.ftype, required = f.required)))
 
   /** [[inferFields]] as a (column, ftype, required, detail) frame sorted by
    * column — the query/oracle surface of checklist inference. */

@@ -1183,8 +1183,8 @@ object Catalog {
    * .percentiles]]): p25/p50/p75/p95 of n_chars — the doc-length profile
    * every curation recipe thresholds on. Exact percentiles share DuckDB
    * `quantile_cont`'s R-7 interpolation contract, so the oracle is
-   * full-value; the 10^10-row-group regime is `approxPercentiles`
-   * (Greenwald–Khanna, rank-error-bounded, spec-pinned). */
+   * full-value; the 10^10-row-group regime would need Spark's
+   * `percentile_approx`. */
   def qPct(spark: SparkSession, dir: String): DataFrame =
     graft.quality.ColumnStats.percentiles(docs(spark, dir),
       "n_chars", Seq("lang"), Seq(0.25, 0.5, 0.75, 0.95))

@@ -110,14 +110,6 @@ object CheckpointRunner {
       .sortBy(_._1)
   }
 
-  /** Partition values from FILESYSTEM METADATA — the parquet stand-in for
-   * an Iceberg/catalog partition listing. `None` when no directory is
-   * partitioned on the column: the caller then falls back to a
-   * `distinct()` scan (unavoidable there). A listing error propagates. */
-  def discoverPartitions(spark: SparkSession, inputPath: String,
-      partitionCol: String): Option[Seq[String]] =
-    Some(partitionDirs(spark, inputPath, partitionCol).map(_._1)).filter(_.nonEmpty)
-
   /** The rows of partition `p`; the default partition name is null. */
   private def inPartition(partitionCol: String, p: String): Column =
     if (p == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) col(partitionCol).isNull

@@ -12,8 +12,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * Iceberg dependency (this sandbox ships no Iceberg jars; the north_rule
  * input is "an Iceberg table of source-code repositories"). One writer
  * and one reader: what a checkpointed validation run needs to plan and
- * resume partition by partition, and to validate the delta between two
- * versions.
+ * resume partition by partition.
  *
  *  - **Metadata-driven scans**: the file list comes from a versioned
  *    manifest document, never from recursive directory listing — at
@@ -49,7 +48,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *   commit(overwritePartitions)     writeTo(t).overwritePartitions() | append()
  *   read(version, partitionFilter)  VERSION AS OF v + manifest-pruned scan
  *   scan(snapshot, files)           a scan of planned FileScanTasks
- *   changesBetween(a, b)            incremental append scan (start/end-snapshot-id)
  *   partitions                      the t.partitions metadata table
  * }}}
  * The partition spec and the table schema are fixed at the first commit;
@@ -276,25 +274,6 @@ object SnapshotTable {
       s"'$k' is not a partition column (spec: ${snap.partitionCols})"))
     scan(spark, snap, snap.files.filter(fe =>
       partitionFilter.forall { case (k, v) => fe.partition(k) == v }))
-  }
-
-  /**
-   * Incremental scan: read exactly the files ADDED between two snapshot
-   * versions — the Iceberg incremental-read pattern that lets a
-   * validation pass process only a snapshot delta instead of re-scanning
-   * the table. Data files are immutable and no commit rewrites them, so
-   * the file-path set difference IS the change set; under a
-   * dynamic-partition overwrite the rewritten partitions' new files
-   * appear here. `from == to` (or nothing added) returns an empty frame
-   * with the table schema.
-   */
-  def changesBetween(spark: SparkSession, root: String, fromVersion: Int,
-      toVersion: Int): DataFrame = {
-    require(fromVersion <= toVersion,
-      s"fromVersion $fromVersion must be <= toVersion $toVersion")
-    val before = snapshot(spark, root, Some(fromVersion)).files.map(_.path).toSet
-    val to = snapshot(spark, root, Some(toVersion))
-    scan(spark, to, to.files.filterNot(fe => before.contains(fe.path)))
   }
 
   /** Scan `files` of `snap` with its recorded schema: the union of one

@@ -49,9 +49,6 @@ object TaxTree {
     Tree(root, ns, order.toSeq)
   }
 
-  def fromFiles(namesPath: String, nodesPath: String): Tree =
-    build(LookupSources.nodes(nodesPath), LookupSources.scientificNames(namesPath))
-
   /** (tax_id, name, lft, rgt, parent_tax_id) rows, DFS order or tax-id
    * (file) order (reference: TaxTree.pm:253-289). */
   def nodeValues(tree: Tree, dfs: Boolean = false): Seq[(Long, String, Long, Long, Long)] = {
@@ -64,12 +61,6 @@ object TaxTree {
     import spark.implicits._
     nodeValues(tree).toDF("tax_id", "name", "lft", "rgt", "parent_tax_id")
   }
-
-  /** Nested-set descendant predicate: node d is inside ancestor a iff
-   * a.lft < d.lft && d.rgt < a.rgt — the point of the numbering: subtree
-   * membership becomes a range test usable in a broadcast range join. */
-  def isDescendant(dLft: Long, aLft: Long, aRgt: Long): Boolean =
-    aLft < dLft && dLft < aRgt
 
   /**
    * DISTRIBUTED nested-set build — for hierarchies past broadcast scale

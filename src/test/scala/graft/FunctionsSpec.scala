@@ -367,10 +367,6 @@ class FunctionsSpec extends SparkSuite {
           org.apache.spark.sql.graftbridge.ColumnBridge.expression($"s"))).as("k"),
       sha2($"s", 256).as("r")).collect()
     both.foreach(r => assert(r.getString(0) === r.getString(1)))
-    // SQL surface
-    graft.functions.GraftFunctions.register(spark)
-    val sql = spark.sql("SELECT sha256_hex('abc') = sha2('abc', 256)").head().getBoolean(0)
-    assert(sql)
   }
 
   test("MinHashSig.coefficients(32, 42) is the pinned sequence the DuckDB oracle inlines") {
@@ -875,5 +871,59 @@ class FunctionsSpec extends SparkSuite {
     // the plan must NOT contain a 20k-literal IN list
     val plan = v.queryExecution.optimizedPlan.toString
     assert(plan.contains("in_broadcast_set") || !plan.contains("T:19999"))
+  }
+
+  test("scalar kernels: hand values and NULL in, NULL out") {
+    import graft.functions._
+    val r = Seq(1).toDF("one").select(
+      Iso8601.valid(lit("2014-W49-3")), Iso8601.valid(lit("2014-13-04")),
+      Iso8601.valid(lit(null).cast("string")),
+      VectorKernels.cosine(typedLit(Seq(1.0, 0.0)), typedLit(Seq(1.0, 0.0))),
+      VectorKernels.cosine(typedLit(Seq(1.0, 0.0)), typedLit(Seq(0.0, 2.0))),
+      VectorKernels.sigAgreement(typedLit(Seq(1L, 2L, 3L)), typedLit(Seq(1L, 9L, 3L))),
+      VectorKernels.simhashPack(typedLit(Seq(5L))),
+      IsBlank(lit("")), IsBlank(lit(" \t")), IsBlank(lit("x")),
+      ZOrder64.zorder(lit(3), lit(5)), ZOrder64.zorder(lit(null).cast("int"), lit(1)),
+      AcMultiLiteralStats.stats(lit("aba bad abab"), Seq("ab", "bad")),
+      AcMultiLiteralStats.stats(lit(null).cast("string"), Seq("x")),
+      round(CharEntropy.entropy(lit("aabb")), 6)).collect().head
+    assert(r.getBoolean(0) && !r.getBoolean(1) && r.isNullAt(2))
+    assert(r.getDouble(3) === 1.0 && r.getDouble(4) === 0.0)
+    assert(r.getInt(5) === 2)
+    assert(r.getLong(6) === 5L) // single hash: sign vector == the hash itself
+    assert(r.getBoolean(7) && r.getBoolean(8) && !r.getBoolean(9))
+    assert(r.getLong(10) === ZOrder64.compute(3, 5) && r.isNullAt(11))
+    // both literals present; 'ab' x3 (greedy non-overlap) + 'bad' x1
+    assert(r.getStruct(12).getInt(0) === 2 && r.getStruct(12).getLong(1) === 4L)
+    assert(r.isNullAt(13))
+    assert(r.getDouble(14) === 1.0)
+  }
+
+  test("aggregate kernels: top-k over partial aggregation and int input; " +
+      "capped collect NULLs out an oversized group") {
+    import graft.functions.{CollectSigsCapped, TopKByScore}
+    def pairs(r: org.apache.spark.sql.Row, i: Int) =
+      r.getSeq[org.apache.spark.sql.Row](i).map(x => (x.getDouble(0), x.getLong(1)))
+    val scored = Seq((1, 0.5, 10L), (1, 0.9, 4L), (1, 0.7, 1L), (2, 0.1, 7L),
+      (2, 0.3, 9L)).toDF("g", "s", "id").repartition(3)
+    val tk = scored.groupBy("g").agg(TopKByScore.topK($"s", $"id", 2).as("tk"))
+      .orderBy("g").collect().map(r => r.getInt(0) -> pairs(r, 1))
+    assert(tk.toSeq === Seq(
+      1 -> Seq((0.9, 4L), (0.7, 1L)),
+      2 -> Seq((0.3, 9L), (0.1, 7L))))
+    // int score and id cast like doubles and longs
+    val ints = Seq((5, 10), (9, 4), (7, 1)).toDF("s", "id")
+      .agg(TopKByScore.topK($"s", $"id", 2)).collect().head
+    assert(pairs(ints, 0) === Seq((9.0, 4L), (7.0, 1L)))
+    // group 1 (2 members, sorted by id) kept; group 2 (3 > cap) is NULL
+    val got = Seq((1, 5L, Seq(1L, 2L)), (1, 3L, Seq(9L)),
+      (2, 1L, Seq(0L)), (2, 2L, Seq(0L)), (2, 3L, Seq(0L)))
+      .toDF("g", "id", "sig").repartition(2)
+      .groupBy("g").agg(CollectSigsCapped.collect($"id", $"sig", 2).as("m"))
+      .orderBy("g").collect()
+    val m1 = got(0).getSeq[org.apache.spark.sql.Row](1)
+      .map(x => (x.getLong(0), x.getSeq[Long](1)))
+    assert(m1 === Seq((3L, Seq(9L)), (5L, Seq(1L, 2L))))
+    assert(got(1).isNullAt(1))
   }
 }

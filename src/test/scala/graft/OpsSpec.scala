@@ -70,7 +70,7 @@ class OpsSpec extends SparkSuite {
 
   test("ngramJaccard exact similarity on candidates") {
     val cands = Seq((1L, 2L), (1L, 3L)).toDF("id_a", "id_b")
-    val j = Dedup.ngramJaccard(cands, dupDocs, "doc_id", "text", k = 2)
+    val j = References.ngramJaccard(cands, dupDocs, "doc_id", "text", k = 2)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getAs[Double]("jaccard"))).toMap
     assert(j((1L, 2L)) === 1.0)
     assert(j((1L, 3L)) > 0.5 && j((1L, 3L)) < 1.0) // 4 of 6 bigrams shared
@@ -223,27 +223,6 @@ class OpsSpec extends SparkSuite {
       assert(ids.toSeq === Seq(3L, 5L) && rt.total === 2)
       assert(sigs.map(_.toSeq).toSeq === Seq(Seq(9L), Seq(1L, 2L)))
     }
-  }
-
-  test("dedupCorpus end-to-end: exact clones, transitive near-dups, unique docs") {
-    val uniq = Seq(
-      (1L, "completely distinct sentence about penguins in antarctica today"),
-      (2L, "another unrelated document describing volcanic rock formations"))
-    val exactPair = Seq( // byte-identical after normalization -> exact pass
-      (10L, "shared exact duplicate text body one two three four five"),
-      (11L, "shared exact duplicate text body one two three four five"))
-    // NOT byte-identical (the exact pass must not see them): appended
-    // tokens keep 3-shingle jaccard ~0.9-0.95, well over the 0.8 default
-    val base20 = ("alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-      "mu nu xi omicron pi rho sigma tau upsilon phi")
-    val nearTriple = Seq(
-      (20L, base20),
-      (21L, base20 + " lambda"),
-      (22L, base20 + " lambda chi"))
-    val df = (uniq ++ exactPair ++ nearTriple).toDF("doc_id", "text")
-    val kept = Dedup.dedupCorpus(df, "doc_id", "text")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept === Set(1L, 2L, 10L, 20L))
   }
 
   test("minhashCandidates fused guard == two-pass guard semantics") {
@@ -433,30 +412,6 @@ class OpsSpec extends SparkSuite {
     assert(reused === got)
   }
 
-  test("curateCorpus: quality/repetition/blocklist/contam gates, PII scrub, line dedup compose") {
-    import graft.ops.Curation
-    val df = Seq(
-      (1L, "alpha beta gamma delta\ncontact bob@x.io for more details"),
-      (2L, "!!!! !!!! !!!! !!!! !!!!"),  // punctuation soup, no diversity -> quality gate
-      (3L, "x\nx\nx"),                   // dup_line_frac 2/3 -> repetition gate
-      (4L, "go to https://spam.example.com/offer now please friend"), // blocklist gate
-      (5L, "the quick brown fox jumps over the lazy dog again"),      // = the benchmark
-      (6L, "alpha beta gamma delta\na unique tail line here")         // line 1 loses to doc 1
-    ).toDF("doc_id", "text")
-    val bench = Curation.benchmarkShingles(
-      Seq("the quick brown fox jumps over the lazy dog again").toDF("text"), "text")
-    val got = Curation.curateCorpus(df, "doc_id", "text",
-      blocklist = Seq("spam.example.com"), bench = Some(bench))
-      .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("text")).toMap
-    assert(got.keySet === Set(1L, 6L))
-    assert(got(1L) === "alpha beta gamma delta\ncontact <EMAIL> for more details")
-    assert(got(6L) === "a unique tail line here")
-    // stages are individually optional
-    val noDedup = Curation.curateCorpus(df, "doc_id", "text", lineDedup = false)
-      .collect().map(r => r.getAs[Long]("doc_id")).toSet
-    assert(noDedup === Set(1L, 4L, 5L, 6L)) // no blocklist/bench -> 4 and 5 survive
-  }
-
   test("cosineNearDupsLsh: exact clones always found; pairs subset of unblocked truth") {
     val rnd = new scala.util.Random(23)
     def unit(d: Int): Array[Float] = {
@@ -565,9 +520,6 @@ class OpsSpec extends SparkSuite {
     prof.foreach { case (_, na, nb, out) => assert(na * nb === out) }
     // descending n_out, key-asc ties
     assert(prof.map(p => (-p._4, p._1)).toSeq === prof.map(p => (-p._4, p._1)).sorted)
-    assert(Joins.joinSize(a, b, "k", "k") === BigDecimal(a.join(b, "k").count()))
-    // disjoint keys -> zero
-    assert(Joins.joinSize(a.filter($"k" < 3), b.filter($"k" > 5), "k", "k") === BigDecimal(0))
   }
 
   test("dupSpanStats: per-doc shared-span fractions match a string-level " +
@@ -754,16 +706,6 @@ class OpsSpec extends SparkSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(7L -> 7L, 10L -> 7L, 22L -> 7L, 31L -> 7L,
       90L -> 90L, 100L -> 90L))
-    val canon = Clustering.canonicalIds(
-      Clustering.connectedComponents(edges, "id_a", "id_b"))
-      .collect().map(_.getLong(0)).toSet
-    assert(canon === Set(7L, 90L))
-    // applying the dedup keeps canonical members AND untouched singletons
-    val corpus = Seq(7L, 10L, 22L, 31L, 90L, 100L, 555L).toDF("doc_id")
-    val kept = Clustering.dropDuplicateMembers(corpus, "doc_id",
-      Clustering.connectedComponents(edges, "id_a", "id_b"))
-      .collect().map(_.getLong(0)).toSet
-    assert(kept === Set(7L, 90L, 555L))
     // empty pair graph (and self-loop-only input) -> empty components, no NPE
     val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Clustering.connectedComponents(none, "id_a", "id_b").count() === 0)
@@ -905,24 +847,6 @@ class OpsSpec extends SparkSuite {
     assert(probed === brute.map(_._1).filter(id => id >= 100L && id < 200L).take(probed.size))
   }
 
-  test("multimodal resize: deterministic payload, metadata recomputed, identity kept") {
-    val df = Seq((1L, "hello world"), (2L, "payload two")).toDF("doc_id", "text")
-    val assets = Multimodal.toAssets(df, "doc_id", "text", "image", "image/x-test")
-    val r1 = Multimodal.resize(assets, 64, 64).collect().sortBy(_.asset_id)
-    val r2 = Multimodal.resize(assets, 64, 64).collect().sortBy(_.asset_id)
-    assert(r1.map(_.payload.toSeq).toSeq === r2.map(_.payload.toSeq).toSeq) // deterministic
-    assert(r1.map(_.asset_id).toSeq === Seq(1L, 2L)) // identity preserved
-    assert(r1.forall(_.n_bytes === 64L * 64 / 64)) // target byte budget
-    // sha256 matches the NEW payload, not the source
-    val d = java.security.MessageDigest.getInstance("SHA-256")
-    assert(r1.forall(a => a.sha256 === d.digest(a.payload).map("%02x".format(_)).mkString))
-    // different sources -> different resized payloads
-    assert(r1(0).payload.toSeq !== r1(1).payload.toSeq)
-    // different target dims -> different payloads
-    val r3 = Multimodal.resize(assets, 32, 32).collect().sortBy(_.asset_id)
-    assert(r3.forall(_.n_bytes === 32L * 32 / 64))
-  }
-
   test("multimodal plumbing: metadata without payload, deterministic stub features") {
     val df = Seq((1L, "hello world"), (2L, "payload two")).toDF("doc_id", "text")
     val assets = Multimodal.toAssets(df, "doc_id", "text", "image", "image/x-test")
@@ -1045,7 +969,7 @@ class OpsSpec extends SparkSuite {
     val df = corpus.toDF("doc_id", "text")
     val cands = Dedup.minhashCandidates(df, "doc_id", "text",
       k = 3, numHashes = 32, bands = 8)
-    val withExact = Dedup.ngramJaccard(
+    val withExact = References.ngramJaccard(
       cands.select("id_a", "id_b", "est_jaccard"), df, "doc_id", "text", k = 3)
       .select("id_a", "id_b", "est_jaccard", "jaccard")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
@@ -1186,20 +1110,6 @@ class OpsSpec extends SparkSuite {
       "gap+1s must split user 1 while the exact-gap event merges")
     // the first session really absorbed the exact-gap event (4 events)
     assert(got.exists(s => s._1 == 1L && s._4 === 4L))
-  }
-
-  test("multimodal PNG resize: really rescales pixels to the target dims") {
-    import spark.implicits._
-    val assets = Multimodal.pngAssets(Seq(3L, 17L).toDS())
-    val resized = Multimodal.resize(assets, 24, 20).collect().sortBy(_.asset_id)
-    resized.foreach { a =>
-      val img = Multimodal.Codec.decode(a.payload)
-      assert(img.getWidth === 24 && img.getHeight === 20)
-      // metadata recomputed over the NEW payload
-      val d = java.security.MessageDigest.getInstance("SHA-256")
-      assert(a.sha256 === d.digest(a.payload).map("%02x".format(_)).mkString)
-      assert(a.n_bytes === a.payload.length.toLong)
-    }
   }
 
   // --- range join / salted join -------------------------------------------
@@ -1594,41 +1504,6 @@ class OpsSpec extends SparkSuite {
     assert(again.count() === 0, "re-running against the appended catalog is empty")
   }
 
-  test("minhashCandidatesAgainst == batch candidates restricted to " +
-      "new-vs-index pairs; planted near-dup clones are found") {
-    val rnd = new scala.util.Random(71)
-    val words = Array("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
-      "eta", "theta", "iota", "kappa")
-    val corpus = (0 until 80).map { i =>
-      (i.toLong, Seq.fill(30)(words(rnd.nextInt(words.length))).mkString(" "))
-    }
-    // delta: token-swapped clones of corpus docs (high jaccard) + fresh noise
-    val delta = corpus.take(15).map { case (id, t) =>
-      val toks = t.split(" "); toks(7) = "swapped"
-      (id + 1000, toks.mkString(" "))
-    } ++ (0 until 10).map(i =>
-      ((2000 + i).toLong, Seq.fill(30)(s"w${rnd.nextInt(1000)}").mkString(" ")))
-    val corpusDf = corpus.toDF("id", "text").repartition(4)
-    val deltaDf = delta.toDF("id", "text").repartition(3)
-    val index = Dedup.minhashIndex(corpusDf, "id", "text")
-    val got = Dedup.minhashCandidatesAgainst(deltaDf, "id", "text", index,
-      maxBucketSize = 10000)
-      .select("new_id", "old_id").as[(Long, Long)].collect().toSet
-    // every planted clone must surface against its source
-    for ((id, _) <- corpus.take(15))
-      assert(got.contains((id + 1000, id)), s"planted pair ($id) missing")
-    // equivalence with the batch path on the union, restricted to
-    // (delta, corpus) pairs — same bands, cap high enough to be inert
-    val batch = Dedup.minhashCandidates(
-      corpusDf.unionByName(deltaDf), "id", "text", maxBucketSize = 10000)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val batchCross = batch.collect {
-      case (a, b) if a < 1000 && b >= 1000 => (b, a)
-      case (a, b) if b < 1000 && a >= 1000 => (a, b)
-    }
-    assert(got === batchCross)
-  }
-
   // --- z-order layout ------------------------------------------------------
 
   // --- int8 quantization ---------------------------------------------------
@@ -1725,10 +1600,6 @@ class OpsSpec extends SparkSuite {
     val joinPath = TextAnalysis.tfidfKeywordsJoin(d, "doc_id", "text", k = 3)
       .orderBy("doc_id", "rank").collect().toSeq
     assert(joinPath === mapPath)
-    // the auto dispatcher picks SOME path and returns the same rows
-    val auto = TextAnalysis.tfidfKeywordsAuto(d, "doc_id", "text", k = 3)
-      .orderBy("doc_id", "rank").collect().toSeq
-    assert(auto === mapPath)
     // guard: a vocabulary larger than maxVocab dies with the named error,
     // and the limit-bounded collect means it dies FAST, not at OOM
     val err = intercept[IllegalArgumentException] {
@@ -1751,9 +1622,6 @@ class OpsSpec extends SparkSuite {
       TextAnalysis.lmModelDf(d, "text"))
       .orderBy("doc_id").collect().toSeq
     assert(joinPath === mapPath)
-    val auto = TextAnalysis.lmScoreAuto(d, batch, "doc_id", "text")
-      .orderBy("doc_id").collect().toSeq
-    assert(auto === mapPath)
     val err = intercept[IllegalArgumentException] {
       TextAnalysis.lmModel(d, "text", maxVocab = 10)
     }
@@ -2084,19 +1952,6 @@ class OpsSpec extends SparkSuite {
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toSeq
     assert(got === want)
-    // segmentation with the learned merges reproduces a hand-check:
-    // enough merges to fuse "low</w>" into one token
-    val merges = got.map(t => (t._2, t._3))
-    val seg = corpus.toDF("doc_id", "text")
-      .select(col("doc_id"), TextAnalysis.bpeSegment(
-        corpus.toDF("doc_id", "text"), "text", merges))
-      .filter(col("doc_id") === 1L).head().getSeq[String](1)
-    // every token of doc 1 segments into learned symbols; the flattened
-    // segmentation must reconstruct the original text exactly
-    assert(seg.mkString("").replace("</w>", " ").trim ===
-      "low lower lowest low low")
-    // and the corpus's hottest word ends fully merged
-    assert(seg.contains("low</w>"))
   }
 
   test("bpeTrain driver-merged pair counts keep the exact tie order " +

@@ -43,7 +43,7 @@ class PngDecodeSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     for ((w, h) <- Seq((1, 1), (5, 9), (33, 17))) {
       val px = Array.fill(w * h)(rnd.nextInt() & 0xffffff)
-      val png = Codec.encodePngPixels(w, h, px)
+      val png = References.encodePngPixels(w, h, px)
       val RawImage(gw, gh, got) = dec.decode(png)
       assert((gw, gh) === (w, h))
       assert(got.toSeq === px.toSeq)

@@ -219,22 +219,6 @@ class QualitySpec extends SparkSuite {
       assert(math.abs(got(g)(i) - want) < 1e-9, s"g=$g p=$p")
     }
 
-    // approx: value IS a member of the group, rank within n/accuracy of target
-    val acc = 100
-    val approx = ColumnStats.approxPercentiles(df, "v", Seq("g"), ps, acc)
-      .collect().map(r => r.getString(0) ->
-        ps.indices.map(i => r.getDouble(i + 1))).toMap
-    for ((g, sorted) <- byG; (p, i) <- ps.zipWithIndex) {
-      val v = approx(g)(i)
-      assert(sorted.contains(v.toLong), s"approx must return a data value: $v")
-      val n = sorted.size
-      val rankLo = sorted.indexWhere(_ >= v.toLong)
-      val rankHi = sorted.lastIndexWhere(_ <= v.toLong)
-      val target = p * (n - 1)
-      val tol = n.toDouble / acc + 1
-      assert(target >= rankLo - tol && target <= rankHi + tol,
-        s"g=$g p=$p v=$v ranks [$rankLo,$rankHi] target $target tol $tol")
-    }
     // ungrouped surface works too
     val all = ColumnStats.percentiles(df, "v", Seq.empty, Seq(0.5))
       .collect().head.getDouble(0)
@@ -328,9 +312,6 @@ class QualitySpec extends SparkSuite {
     assert(s.getAs[Long]("n_distinct") === 4L)
     assert(s.getAs[Long]("n_missing") === 2L)
     assert(s.getAs[Double]("coefficient") === 0.5)
-    val v = ConstraintDiscovery.inclusionViolations(fact, "k", dim, "d")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(v === Map(3L -> 2L, 4L -> 1L)) // occurrence counts, NULL skipped
 
     // full containment: coefficient exactly 1, no violations
     val s2 = ConstraintDiscovery.inclusionStats(
@@ -350,10 +331,6 @@ class QualitySpec extends SparkSuite {
     assert(viol(0).getString(0) === "a")
     assert(viol(0).getAs[Long]("n_dependent") === 2L)
     assert(viol(0).getAs[Long]("n_rows") === 2L)
-    val st = ConstraintDiscovery.fdStats(df, Seq("k"), "v").collect()(0)
-    assert(st.getAs[Long]("n_groups") === 4L)
-    assert(st.getAs[Long]("n_violating") === 1L)
-    assert(st.getAs[Double]("fd_ratio") === 0.75)
   }
 
   test("ConstraintDiscovery.suggestConstraints: rules fire deterministically from the profile") {
@@ -428,7 +405,7 @@ class QualitySpec extends SparkSuite {
     assert(f.ftype === FieldType.IntT(None, None))
     // the round-trip zero-violation guarantee holds: the unbounded Int
     // rule accepts every value, including the one the carrier dropped
-    val cl = ConstraintDiscovery.inferChecklist(df, name = "big")
+    val cl = References.inferChecklist(df, name = "big")
     assert(Validator.validate(df, cl)
       .filter(!col(Validator.PassedCol)).count() === 0L)
   }
@@ -441,7 +418,7 @@ class QualitySpec extends SparkSuite {
       ("2", "no",  "2024-06-15", "blue", "world"),
       ("3", "",    "2024-12-31", "red",  "again"))
       .toDF("id", "ok", "day", "color", "note").repartition(2)
-    val cl = ConstraintDiscovery.inferChecklist(df, name = "auto")
+    val cl = References.inferChecklist(df, name = "auto")
     assert(cl.validateConfig().isRight)
     assert(cl.fieldNames === Seq("id", "ok", "day", "color", "note")) // df order
     // the defining property: the data satisfies its own inferred checklist

@@ -279,17 +279,28 @@ class RunnerSpec extends SparkSuite {
     val base = Files.createTempDirectory("graft_disc").toString
     val input = s"$base/input"
     CodeFiles.generate(spark, 100)
-      .withColumn("part", (col("id") % 2).cast("string"))
+      .withColumn("part", concat(lit("p"), col("id") % 2))
       .write.partitionBy("part").parquet(input)
     // a data-free partition directory: a distinct() scan can NEVER return
-    // it, so its presence in the result proves the listing path was used
+    // it, so its ok row proves the listing path was used
     Files.createDirectory(java.nio.file.Paths.get(s"$input/part=empty"))
-    assert(CheckpointRunner.discoverPartitions(spark, input, "part")
-      === Some(Seq("0", "1", "empty")))
-    // non-hive layout -> None (caller falls back to the distinct() scan)
-    val flat = s"$base/flat"
-    CodeFiles.generate(spark, 50).write.parquet(flat)
-    assert(CheckpointRunner.discoverPartitions(spark, flat, "part") === None)
+    val res = CheckpointRunner.run(spark, CodeFiles.checklist, ckptConfig(input, base))
+    assert(res.map(_.partition) === Seq("empty", "p0", "p1"))
+    assert(res.map(_.nRows).sum === 100L)
+    val empty = spark.read.parquet(s"$base/manifest")
+      .filter(col("partition") === "empty").collect()
+    assert(empty.map(r => (r.getAs[String]("status"), r.getAs[Long]("n_rows")))
+      .toSeq === Seq(("ok", 0L)))
+    // non-hive layout: the distinct() fallback still validates every row
+    val flatBase = Files.createTempDirectory("graft_disc_flat").toString
+    val flat = s"$flatBase/flat"
+    CodeFiles.generate(spark, 50)
+      .withColumn("part", concat(lit("p"), col("id") % 3))
+      .write.parquet(flat)
+    val flatRes = CheckpointRunner.run(spark, CodeFiles.checklist,
+      ckptConfig(flat, flatBase))
+    assert(flatRes.map(_.partition) === Seq("p0", "p1", "p2"))
+    assert(flatRes.map(_.nRows).sum === 50L)
   }
 
   test("checkpoint run over a snapshot table validates the version it " +
@@ -499,30 +510,6 @@ class RunnerSpec extends SparkSuite {
         .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
       // identical values to the batch spec (OpsSpec repetitionMetrics)
       assert(got === Map(1L -> ((0.4, 0.0)), 2L -> ((0.5, 0.333333))))
-    } finally q.stop()
-  }
-
-  test("curation gates + PII scrub run unchanged on a stream (lineDedup off)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    // without the line-dedup shuffle stage the pipeline is a pure
-    // filter+projection — legal on an unbounded stream as-is
-    val curated = graft.ops.Curation.curateCorpus(
-      in.toDS().toDF("doc_id", "text"), "doc_id", "text",
-      blocklist = Seq("spam.example.com"), lineDedup = false)
-    val q = curated.writeStream.format("memory").queryName("scg")
-      .outputMode("append").start()
-    try {
-      in.addData(
-        (1L, "good doc mailing bob@x.io about the project details"),
-        (2L, "!!!! !!!! !!!! !!!! !!!!"),
-        (3L, "visit https://spam.example.com/x for offers today"))
-      q.processAllAvailable()
-      val got = spark.sql("select doc_id, text from scg").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(got === Map(
-        1L -> "good doc mailing <EMAIL> about the project details"))
     } finally q.stop()
   }
 

@@ -83,32 +83,6 @@ class SnapshotTableSpec extends SparkSuite {
     assert(cur.filter($"source" === "src0").count() === 3)
   }
 
-  test("incremental scan: changesBetween reads exactly the files added after `from`") {
-    val root = freshRoot()
-    SnapshotTable.commit(corpus("v1"), root, Seq("source"))
-    SnapshotTable.commit(
-      Seq((5L, "src1", "e-v2"), (6L, "src2", "f-v2")).toDF("id", "source", "payload"),
-      root, Seq("source"), overwritePartitions = false)
-    val delta = SnapshotTable.changesBetween(spark, root, 1, 2)
-    assert(delta.orderBy("id").select("payload").collect().map(_.getString(0)).toSeq
-      === Seq("e-v2", "f-v2"), "only the appended rows")
-    assert(delta.inputFiles.forall(_.contains("/data/s2/")),
-      "delta scan must touch only snapshot-2 files")
-    // no change between identical versions: empty frame, right schema
-    val none = SnapshotTable.changesBetween(spark, root, 2, 2)
-    assert(none.count() === 0)
-    assert(none.columns.toSeq.sorted === Seq("id", "payload", "source"))
-    // dynamic overwrite of src1: its rewritten files are the delta
-    SnapshotTable.commit(
-      Seq((3L, "src1", "c-v3")).toDF("id", "source", "payload"),
-      root, Seq("source"))
-    val ow = SnapshotTable.changesBetween(spark, root, 2, 3)
-    assert(ow.select("payload").collect().map(_.getString(0)).toSeq === Seq("c-v3"))
-    intercept[IllegalArgumentException] {
-      SnapshotTable.changesBetween(spark, root, 3, 1)
-    }
-  }
-
   test("partition values with '+' and escaped chars round-trip (no URLDecoder corruption)") {
     val root = freshRoot()
     val df = Seq((1L, "c++", "x"), (2L, "f#", "y"), (3L, "a b", "z"))
@@ -179,7 +153,6 @@ class SnapshotTableSpec extends SparkSuite {
     assert(langs(all) === Seq("007", "007", "010"))
     assert(langs(SnapshotTable.read(spark, root,
       partitionFilter = Map("lang" -> "007"))) === Seq("007", "007"))
-    assert(langs(SnapshotTable.changesBetween(spark, root, 1, 2)) === Seq("007"))
 
     val longRoot = freshRoot()
     SnapshotTable.commit(Seq((1L, 7L), (2L, 10L)).toDF("id", "bucket"),

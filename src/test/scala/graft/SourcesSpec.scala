@@ -164,8 +164,6 @@ class SourcesSpec extends SparkSuite {
     assert(dfs(11) === ((10L, "leaf 3", 21L, 22L, 5L))) // t/08_tax_tree.t:60
     // node two golden (t/08_tax_tree.t:42-50)
     assert(byId(1) === ((2L, "node two", 2L, 5L, 1L)))
-    // nested-set descendant predicate
-    assert(TaxTree.isDescendant(dLft = 3, aLft = 2, aRgt = 5)) // leaf5 under node two
   }
 
   test("TaxTree.buildDistributed == driver DFS numbering on the reference " +

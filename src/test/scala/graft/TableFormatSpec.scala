@@ -51,14 +51,6 @@ class TableFormatSpec extends SparkSuite {
     assert(now === Seq("c-v1", "d-v1", "x-v2"))
     // time travel: v1 stays fully readable
     assert(SnapshotTable.read(spark, root, version = Some(v1)).count() === 4)
-    // incremental: exactly the delta's rows
-    val delta = SnapshotTable.changesBetween(spark, root, v1, v2)
-    assert(delta.select("payload").collect().map(_.getString(0)).toSeq
-      === Seq("x-v2"))
-    // empty range keeps the schema
-    val none = SnapshotTable.changesBetween(spark, root, v2, v2)
-    assert(none.count() === 0 && none.columns.toSeq.sorted
-      === Seq("id", "payload", "source"))
     // metadata-only partition discovery
     assert(SnapshotTable.partitions(spark, root).map(_("source")).sorted
       === Seq("src0", "src1"))
