@@ -8,10 +8,20 @@ import graft.model._
 
 /**
  * Compiles a [[graft.model.Checklist]] into Catalyst `Column` expressions:
- * per-field tri-state verdicts, a structured violations array, the row-level
- * pass/fail verdict and the reference-format error string — all evaluated in
- * a SINGLE narrow projection (no shuffle, whole-stage-codegen'd, Catalyst
- * CSE dedups the shared field-state subexpressions).
+ * per-field tri-state verdicts and the checklist's rules, each rule a fire
+ * condition plus its reference message.
+ *
+ * The rules meet the row through ONE value, the failure mask
+ * ([[Compiled.masks]]): bit *i* is set when rule *i* fires, so every
+ * rule's condition is evaluated exactly once per row. The engine projects
+ * the mask and derives the verdict, the violations array and the error
+ * string from its bits; a passing row (mask 0) builds neither. The
+ * conditions must not be evaluated again, once for the violations and
+ * once for the error string: that doubles the per-row code, and the
+ * validate stage's generated method then outgrows the 8,000 bytes of
+ * bytecode above which HotSpot does not JIT-compile a method
+ * (`DontCompileHugeMethods`), so the whole per-row loop runs in the
+ * interpreter. `PlanSpec` pins both.
  *
  * This replaces the reference's row-at-a-time interpreter
  * (reference: lib/Bio/Metadata/Validator.pm:109-156 outer loop, 200-290 field
@@ -22,8 +32,6 @@ import graft.model._
  * — are preserved.
  */
 object ChecklistCompiler {
-
-  private val ViolSchema = "struct<field:string,rule_id:string,message:string>"
 
   /** One potential violation: fire condition, identity, clean message, and
    * the exact reference-padded message fragment used to rebuild the
@@ -38,6 +46,14 @@ object ChecklistCompiler {
       paddedAfter: String // literal spacing after the message
   )
 
+  /** Rules per mask word. Bit 63, the sign bit, stays clear. */
+  private val RulesPerWord = 63
+
+  /** Whether rule `i` fired, read from the projected [[Compiled.masks]]
+   * words. */
+  def fired(words: Seq[Column], i: Int): Column =
+    words(i / RulesPerWord).bitwiseAND(lit(1L << (i % RulesPerWord))) =!= 0L
+
   final case class Compiled(
       checklist: Checklist,
       /** field name -> tri-state state expression (FieldState byte). */
@@ -45,31 +61,14 @@ object ChecklistCompiler {
       rules: Seq[Rule]
   ) {
 
-    /** array<struct<field,rule_id,message>> in reference emission order. */
-    def violations: Column = {
-      val elems = rules.map { r =>
-        when(r.cond,
-          struct(lit(r.field).as("field"), lit(r.ruleId).as("rule_id"),
-            r.message.as("message")))
-          .otherwise(lit(null).cast(ViolSchema))
-      }
-      array_compact(array(elems: _*))
-    }
-
-    /** Reference-format accumulated error string:
-     * `[errors found on row N] ...` (reference: Validator.pm:136-145 —
-     * messages concatenated with their original padding, then trimmed and
-     * prefixed; inner double-spaces between field- and dependency-level
-     * messages are faithfully preserved). NULL when the row passes. */
-    def errorString(rowNum: Column): Column = {
-      val parts = rules.map { r =>
-        when(r.cond, concat(lit(r.paddedBefore), r.message, lit(r.paddedAfter)))
-          .otherwise(lit(""))
-      }
-      val acc = trim(concat(parts: _*))
-      when(acc =!= "",
-        concat(lit("[errors found on row "), rowNum.cast(StringType), lit("] "), acc))
-    }
+    /** The per-row failure mask, one non-null `Long` per [[RulesPerWord]]
+     * rules: bit `i % 63` of word `i / 63` is set when rule `i` fires (a
+     * NULL condition does not fire). Each rule's condition occurs here
+     * once and nowhere else. */
+    def masks: Seq[Column] =
+      rules.grouped(RulesPerWord).map(_.zipWithIndex.map { case (r, b) =>
+        when(r.cond, lit(1L << b)).otherwise(lit(0L))
+      }.reduce(_ bitwiseOR _)).toSeq
   }
 
   /** Strip one pair of wrapping double quotes, as the plugin wrapper does

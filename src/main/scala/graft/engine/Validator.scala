@@ -2,16 +2,20 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 
 import graft.compile.ChecklistCompiler
 import graft.model.Checklist
 
 /**
  * The engine's core entry point: validate a DataFrame against a compiled
- * checklist in ONE narrow projection — the Spark-native replacement for the
+ * checklist in one narrow pass — the Spark-native replacement for the
  * reference's row-at-a-time `validate` loop
- * (reference: lib/Bio/Metadata/Validator.pm:109-156).
+ * (reference: lib/Bio/Metadata/Validator.pm:109-156). A first projection
+ * evaluates every rule once into the failure mask
+ * ([[graft.compile.ChecklistCompiler.Compiled.masks]]); a second derives
+ * `passed`, `violations` and `error` from its bits and drops it, building
+ * the array and the string only for rows that fail.
  *
  * Output schema = input columns + `row_id`, `violations`
  * (array<struct<field,rule_id,message>>), `passed`, `error`
@@ -19,8 +23,9 @@ import graft.model.Checklist
  * `content_sha256` (the per-row identity invariant generalizing the
  * reference's whole-file MD5, Reader.pm:86-88, per BASELINE.json input_hint).
  *
- * No shuffle is introduced: the projection is whole-stage-codegen'd and
- * pipelined with the scan; filters/pruning still push down past it.
+ * No shuffle is introduced: both projections are whole-stage-codegen'd
+ * into one stage, pipelined with the scan; filters/pruning still push
+ * down past them.
  */
 object Validator {
 
@@ -39,6 +44,7 @@ object Validator {
   val PassedCol = "passed"
   val ErrorCol = "error"
   val ShaCol = "content_sha256"
+  private val ViolSchema = "struct<field:string,rule_id:string,message:string>"
 
   def validate(df: DataFrame, checklist: Checklist,
       opts: Options = Options()): DataFrame = {
@@ -72,7 +78,34 @@ object Validator {
           schema.add(RowId, "long", nullable = false))
     }
 
-    val violations = compiled.violations
+    // the failure mask, projected once; everything below reads its bits
+    val masks = compiled.masks
+    val maskCols = masks.indices.map(w => s"graft_fail_mask_$w")
+    val masked = withId.select(withId.columns.map(col).toSeq ++
+      masks.zip(maskCols).map { case (m, n) => m.as(n) }: _*)
+    val words = maskCols.map(col)
+    def fired(i: Int): Column = ChecklistCompiler.fired(words, i)
+    val failed = words.map(_ =!= 0L).reduceOption(_ || _).getOrElse(lit(false))
+    val rules = compiled.rules.zipWithIndex
+
+    // array<struct<field,rule_id,message>> in reference emission order;
+    // a passing row's empty array has the same type, element nullability
+    // included
+    val none = array().cast(ArrayType(DataType.fromDDL(ViolSchema), containsNull = false))
+    val violations = when(failed, array_compact(array(rules.map { case (r, i) =>
+      when(fired(i), struct(lit(r.field).as("field"), lit(r.ruleId).as("rule_id"),
+        r.message.as("message"))).otherwise(lit(null).cast(ViolSchema))
+    }: _*))).otherwise(none)
+    // Reference-format accumulated error string `[errors found on row N] ...`
+    // (reference: Validator.pm:136-145 — messages concatenated with their
+    // original padding, then trimmed and prefixed; inner double-spaces
+    // between field- and dependency-level messages are faithfully
+    // preserved). NULL when the row passes.
+    val error = when(failed, concat(lit("[errors found on row "),
+      col(RowId).cast(StringType), lit("] "), trim(concat(rules.map { case (r, i) =>
+        when(fired(i), concat(lit(r.paddedBefore), r.message, lit(r.paddedAfter)))
+          .otherwise(lit(""))
+      }: _*))))
     // per-row identity via the Sha256Hex kernel: value-identical to
     // sha2(.., 256) but without the per-row MessageDigest.getInstance —
     // sha runs on EVERY validated row, so its allocations set the
@@ -80,11 +113,8 @@ object Validator {
     val shaCols: Seq[Column] = opts.contentCol.toSeq.map(c =>
       graft.functions.Sha256Hex.column(col(c).cast(StringType)).as(ShaCol))
 
-    withId.select(
-      (withId.columns.map(col).toSeq :+
-        violations.as(ViolationsCol)) ++ shaCols: _*)
-      .withColumn(PassedCol, size(col(ViolationsCol)) === 0)
-      .withColumn(ErrorCol, compiled.errorString(col(RowId)))
+    masked.select((withId.columns.map(col).toSeq :+ violations.as(ViolationsCol)) ++
+      shaCols ++ Seq((!failed).as(PassedCol), error.as(ErrorCol)): _*)
   }
 
   /** Exploded structured violation rows `(row_id, field, rule_id, message)`

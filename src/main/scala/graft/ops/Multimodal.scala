@@ -164,9 +164,8 @@ object Multimodal {
      * bench at ~40k decodes); one reader instance per partition amortizes
      * that exactly like a native codec handle would. NOT thread-safe —
      * one per partition iterator, never shared. */
-    final class PngReader {
-      private val reader =
-        javax.imageio.ImageIO.getImageReadersByFormatName("png").next()
+    final class PngReader(reader: javax.imageio.ImageReader =
+        javax.imageio.ImageIO.getImageReadersByFormatName("png").next()) {
       def decode(payload: Array[Byte]): java.awt.image.BufferedImage = {
         val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
           new java.io.ByteArrayInputStream(payload))
@@ -175,6 +174,8 @@ object Multimodal {
           reader.read(0)
         } finally iis.close()
       }
+      /** Releases the reader's resources; it decodes nothing after this. */
+      def dispose(): Unit = reader.dispose()
     }
 
     /**
@@ -186,15 +187,17 @@ object Multimodal {
      * and for any other format `ImageIO` claims. Both paths return the
      * same packed-0xRRGGBB [[PngDecode.RawImage]]; PngDecodeSpec pins
      * them pixel-equal cross-implementation. NOT thread-safe — one per
-     * partition iterator.
+     * partition iterator, which [[closing]] wraps so that the fallback's
+     * `ImageReader` is disposed when the partition ends.
      */
-    final class ImageDecoder {
+    final class ImageDecoder(newFallback: () => PngReader = () => new PngReader) {
       private val fast = new PngDecode.PngDecoder
-      private lazy val fallback = new PngReader
+      private var fallback: PngReader = null
       def decode(payload: Array[Byte]): PngDecode.RawImage =
         try fast.decode(payload)
         catch {
           case _: PngDecode.UnsupportedPng =>
+            if (fallback == null) fallback = newFallback()
             val img = fallback.decode(payload)
             val (w, h) = (img.getWidth, img.getHeight)
             val px = img.getRGB(0, 0, w, h, null, 0, w)
@@ -202,6 +205,22 @@ object Multimodal {
             while (i < px.length) { px(i) &= 0xffffff; i += 1 }
             PngDecode.RawImage(w, h, px)
         }
+
+      /** `it`, disposing the fallback reader, if one was built, once `it`
+       * is exhausted or the task ends, whichever comes first. */
+      def closing[A](it: Iterator[A]): Iterator[A] = {
+        Option(org.apache.spark.TaskContext.get())
+          .foreach(_.addTaskCompletionListener[Unit](_ => close()))
+        new Iterator[A] {
+          def hasNext: Boolean = it.hasNext || { close(); false }
+          def next(): A = it.next()
+        }
+      }
+
+      private def close(): Unit = if (fallback != null) {
+        fallback.dispose()
+        fallback = null
+      }
     }
 
     /** Real decode + feature extraction: true pixel dimensions and a small
@@ -464,13 +483,13 @@ object Multimodal {
     import spark.implicits._
     assets.filter(_.modality == "video").mapPartitions { it =>
       val dec = new Codec.ImageDecoder // per-partition codec handle
-      it.flatMap { a =>
+      dec.closing(it.flatMap { a =>
         val idx = Codec.videoIndex(a.payload)
         (0 until idx.nFrames by stride).iterator.map { k =>
           val img = dec.decode(idx.frame(a.payload, k))
           (a.asset_id, k, img.width, img.height)
         }
-      }
+      })
     }.toDF("asset_id", "frame_idx", "width", "height")
   }
 
@@ -500,14 +519,14 @@ object Multimodal {
       // the per-partition codec handle: hand-rolled PNG fast path with
       // one reusable Inflater; ImageIO fallback for exotic variants
       val dec = new Codec.ImageDecoder
-      it.map { a =>
+      dec.closing(it.map { a =>
         a.mime match {
           case "image/png"    => Codec.imageFeatures(a, dec)
           case "audio/wav"    => Codec.audioFeatures(a)
           case "video/x-gvf"  => Codec.videoFeatures(a, dec)
           case _              => DecodeStub(a)
         }
-      }
+      })
     }
   }
 

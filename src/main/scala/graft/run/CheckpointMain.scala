@@ -19,14 +19,17 @@ import org.apache.spark.sql.SparkSession
  *   [--row-id <col>] [--content <col>]
  * }}}
  *
- * Partitions are validated concurrently, up to the session's
- * `defaultParallelism` at a time; each commits its own outputs and then
- * its manifest row (manifest appends are serialized). Re-running the same
- * command after a kill resumes at partition granularity; changing the
+ * Pending partitions are validated in waves, one wave after another: a
+ * wave of up to 32 partitions and 4 GiB of input is read once and
+ * validated in one write job that spreads its partitions over every core.
+ * Each partition's outputs then move into place, and the wave appends one
+ * manifest row per partition. Re-running the same command after a kill
+ * resumes at partition granularity, losing at most one wave; changing the
  * checklist re-validates everything (the lineage rows are keyed by the
  * checklist fingerprint). Exit code 0 when every partition committed, 1
- * otherwise: after a partition fails, no new partition starts, the ones
- * in flight still commit, and the error names the failed partition.
+ * otherwise: after a partition fails, the other partitions of its wave
+ * still commit, no further wave starts, and the error names the failed
+ * partition.
  */
 object CheckpointMain {
 

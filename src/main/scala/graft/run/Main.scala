@@ -1,7 +1,6 @@
 package graft.run
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.engine.Validator
 import graft.model.ChecklistConfig

@@ -60,6 +60,43 @@ class PlanSpec extends SparkSuite {
     assert(builds === 1, s"the violations array is built $builds times:\n$plan")
   }
 
+  test("validation evaluates each rule once, and every generated method " +
+      "fits the JIT's 8,000-byte limit") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_mask").toString
+    CodeFiles.generate(spark, 100, 1L).write.parquet(s"$dir/t")
+    val in = spark.read.parquet(s"$dir/t")
+    val v = Validator.validate(in, CodeFiles.checklist,
+      Validator.Options(rowIdCol = Some("id"), contentCol = Some("content")))
+
+    // HotSpot interprets any method over 8,000 bytes of bytecode
+    // (DontCompileHugeMethods): the per-row loop must stay under it
+    val sizes = codegenStringSeq(v.queryExecution.executedPlan)
+      .map(_._3.maxMethodCodeSize)
+    assert(sizes.nonEmpty && sizes.max < 8000,
+      s"largest generated method: ${sizes.max} bytes of bytecode")
+
+    // a reference plan holding each rule's condition exactly once: a
+    // condition may also sit inside another (a field's state), so each is
+    // counted against its count there
+    val conds = graft.compile.ChecklistCompiler.compile(CodeFiles.checklist)
+      .rules.map(_.cond)
+    val ref = in.select(conds.zipWithIndex.map { case (c, i) => c.as(s"c$i") }: _*)
+      .queryExecution.optimizedPlan
+    val optimized: Seq[Expression] = ref.expressions.map(_.children.head)
+    def count(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+        e: Expression): Int =
+      plan.flatMap(_.expressions).map(_.collect {
+        case x if x.semanticEquals(e) => x }.size).sum
+    val plan = v.queryExecution.optimizedPlan
+    optimized.zipWithIndex.foreach { case (e, i) =>
+      assert(count(plan, e) === count(ref, e),
+        s"rule $i's condition is evaluated ${count(plan, e)} times, not " +
+          s"${count(ref, e)}:\n$plan")
+    }
+  }
+
   test("column pruning: a projection that skips text reads only needed columns") {
     val q = docs.select("doc_id", "lang").filter($"lang" === "en")
     val scan = physical(q)

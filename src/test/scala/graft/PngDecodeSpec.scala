@@ -189,6 +189,37 @@ class PngDecodeSpec extends AnyFunSuite {
     assert(got.toSeq === expect.toSeq)
   }
 
+  test("ImageDecoder disposes its fallback ImageReader when the partition's " +
+      "iterator ends") {
+    val img = new java.awt.image.BufferedImage(
+      4, 4, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED)
+    val bos = new java.io.ByteArrayOutputStream()
+    assert(javax.imageio.ImageIO.write(img, "png", bos))
+    val palette = bos.toByteArray // outside the fast path's subset
+    val png = javax.imageio.ImageIO.getImageReadersByFormatName("png").next()
+    var disposed = 0
+    // the JDK's PNG reader, counting its dispose calls
+    val reader = new javax.imageio.ImageReader(png.getOriginatingProvider) {
+      override def setInput(in: Any, seekForwardOnly: Boolean,
+          ignoreMetadata: Boolean): Unit =
+        png.setInput(in, seekForwardOnly, ignoreMetadata)
+      override def dispose(): Unit = { disposed += 1; png.dispose() }
+      def read(i: Int, p: javax.imageio.ImageReadParam) = png.read(i, p)
+      def getNumImages(allowSearch: Boolean) = png.getNumImages(allowSearch)
+      def getWidth(i: Int) = png.getWidth(i)
+      def getHeight(i: Int) = png.getHeight(i)
+      def getImageTypes(i: Int) = png.getImageTypes(i)
+      def getStreamMetadata() = png.getStreamMetadata()
+      def getImageMetadata(i: Int) = png.getImageMetadata(i)
+    }
+    val dec = new Codec.ImageDecoder(() => new Codec.PngReader(reader))
+    val it = dec.closing(Iterator(palette, palette).map(dec.decode))
+    assert(it.next().width === 4 && it.hasNext && disposed === 0)
+    assert(it.next().width === 4 && !it.hasNext)
+    assert(disposed === 1, "the fallback reader was not disposed")
+    assert(!it.hasNext && disposed === 1, "disposed twice")
+  }
+
   test("feature extraction over the synthetic corpus is unchanged by the fast path") {
     // belt-and-braces: the luminance embeddings must be bit-identical
     // whether pixels come from PngDecode or from ImageIO

@@ -145,7 +145,7 @@ class PropertySpec extends SparkSuite {
     }
 
   /** Expected (field, rule_id) violations in reference emission order. */
-  def oracle(row: Map[String, String]): Seq[(String, String)] = {
+  def oracle(row: Map[String, String], cl: Checklist = this.cl): Seq[(String, String)] = {
     val st: Map[String, Byte] = cl.fields.map(f => f.name -> stateOf(f, row(f.name))).toMap
     def notValid(n: String) = st(n) == FieldState.Invalid || st(n) == FieldState.Skipped
     val out = Seq.newBuilder[(String, String)]
@@ -223,6 +223,49 @@ class PropertySpec extends SparkSuite {
         assert(got(i + 1L) === want,
           s"round $round row ${i + 1}: cells=${cl.fieldNames.map(row).mkString("|")}")
       }
+    }
+  }
+
+  test("property: a checklist of 65 rules, two mask words, agrees with the " +
+      "in-memory oracle; a row can fail every rule") {
+    // 64 optional Str fields give rules 0-63 (field invalid), the one_of
+    // over all of them rule 64: rule 62 is word 0's last bit, rules 63 and
+    // 64 are bits 0 and 1 of word 1
+    val names = (0 until 64).map(i => f"w$i%02d")
+    val wide = Checklist("wide", names.map(FieldDef(_, StrT(Some("^[a-z]+$")))),
+      dependencies = Dependencies(oneOf = Seq(GroupDep("all", names))))
+    val pool = Seq("abc", "7", "\"abc\"", "", " ", null)
+    val rnd = new scala.util.Random(20261020L)
+    def only(bad: Int*): Map[String, String] =
+      names.zipWithIndex.map { case (n, i) => n -> (if (bad.contains(i)) "7" else null) }.toMap
+    val rows: Seq[Map[String, String]] =
+      Seq(names.map(_ -> "7").toMap, names.map(_ -> "abc").toMap,
+        only(62), only(63), only(62, 63), names.map(_ -> (null: String)).toMap) ++
+        (1 to 200).map(_ => names.map(n => n -> pool(rnd.nextInt(pool.size))).toMap)
+    val schema = org.apache.spark.sql.types.StructType(names.map(n =>
+      org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.StringType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map(r => org.apache.spark.sql.Row.fromSeq(names.map(r))), 4), schema)
+
+    val got = Validator.validate(df, wide)
+      .select(Validator.RowId, Validator.ViolationsCol, Validator.PassedCol,
+        Validator.ErrorCol)
+      .collect().map { r =>
+        val viols = r.getSeq[org.apache.spark.sql.Row](1)
+          .map(v => (v.getString(0), v.getString(1), v.getString(2)))
+        r.getLong(0) -> ((viols, r.getBoolean(2), Option(r.getString(3))))
+      }.toMap
+    assert(got(1L)._1.size === 65, "the all-invalid row fails every rule")
+    rows.zipWithIndex.foreach { case (row, i) =>
+      val (viols, passed, error) = got(i + 1L)
+      assert(viols.map(v => (v._1, v._2)) === oracle(row, wide), s"row ${i + 1}")
+      assert(passed === viols.isEmpty, s"row ${i + 1}")
+      // field messages carry a trailing space, dependency messages a
+      // leading one (Validator.pm:136-145)
+      val acc = viols.map { case (_, id, m) =>
+        if (id == RuleIds.FieldInvalid) m + " " else " " + m }.mkString.trim
+      assert(error === Some(acc).filter(_.nonEmpty)
+        .map(a => s"[errors found on row ${i + 1}] $a"), s"row ${i + 1}")
     }
   }
 

@@ -118,7 +118,7 @@ class RunnerSpec extends SparkSuite {
     manifestPath = s"$base/manifest", rowIdCol = Some("id"),
     contentCol = Some("content"))
 
-  test("concurrent checkpoint run: one ok row per partition with its input " +
+  test("checkpoint run: one ok row per partition with its input " +
       "count, no _temporary left, verdicts equal one whole-input validate") {
     val base = Files.createTempDirectory("graft_ckpt_conc").toString
     val input = hiveInput(base, 1200, 12)
@@ -157,7 +157,7 @@ class RunnerSpec extends SparkSuite {
     assert(verdicts(spark.read.parquet(cfg.outputPath)) === verdicts(whole))
   }
 
-  test("concurrent checkpoint run: a failed partition is named, the others " +
+  test("checkpoint run: a failed partition is named, the others " +
       "commit, and a re-run validates only the failed one") {
     val base = Files.createTempDirectory("graft_ckpt_fail").toString
     val input = hiveInput(base, 300, 6)

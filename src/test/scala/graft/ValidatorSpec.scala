@@ -454,6 +454,20 @@ class ValidatorSpec extends SparkSuite {
     assert(got === expect)
   }
 
+  test("output schema: input columns, then row_id, violations, " +
+      "content_sha256, passed and error, with their nullability") {
+    import org.apache.spark.sql.types._
+    val df = manifest(Seq("one", "two"), Seq(Seq(S("1"), S("hello"))))
+    val v = validate(df, checklist04, Options(contentCol = Some("two")))
+    val viol = StructType(Seq("field", "rule_id", "message").map(StructField(_, StringType)))
+    assert(v.schema.drop(2) === Seq(
+      StructField(RowId, LongType, nullable = false),
+      StructField(ViolationsCol, ArrayType(viol, containsNull = false), nullable = false),
+      StructField(ShaCol, StringType),
+      StructField(PassedCol, BooleanType, nullable = false),
+      StructField(ErrorCol, StringType)))
+  }
+
   test("verdicts invariant under partition count") {
     val rows = csv06if
     val a = errorsByRow(validate(manifest(checklist06if.fieldNames, rows), checklist06if))
