@@ -17,7 +17,8 @@ import graft.model.Checklist
  * `passed`, `violations` and `error` from its bits and drops it, building
  * the array and the string only for rows that fail.
  *
- * Output schema = input columns + `row_id`, `violations`
+ * Output schema = input columns + `row_id` (taken from the input, see
+ * [[Options.rowIdCol]]; never synthesized), `violations`
  * (array<struct<field,rule_id,message>>), `passed`, `error`
  * (reference-format accumulated message, NULL when passed) and optionally
  * `content_sha256` (the per-row identity invariant generalizing the
@@ -30,9 +31,10 @@ import graft.model.Checklist
 object Validator {
 
   final case class Options(
-      /** Column used as the row identity in messages and violation rows.
-       * At cluster scale pass a natural key; None = synthesize a 1-based
-       * input-order id (only sensible for small manifest-style inputs). */
+      /** Column copied to `row_id`, the row identity in messages and
+       * violation rows. None = the input already has a `row_id` column, as
+       * [[graft.sources.ManifestReader]]'s 1-based manifest row numbers;
+       * an input with neither fails at analysis, naming `row_id`. */
       rowIdCol: Option[String] = None,
       /** Column to fingerprint with sha256 (input_hint invariant). */
       contentCol: Option[String] = None,
@@ -50,33 +52,7 @@ object Validator {
       opts: Options = Options()): DataFrame = {
     val compiled = ChecklistCompiler.compile(checklist, opts.verboseErrors)
 
-    val withId: DataFrame = opts.rowIdCol match {
-      case Some(c) => df.withColumn(RowId, col(c))
-      case None =>
-        // 1-based input-order row number, matching the reference's row
-        // numbering (Validator.pm:140). zipWithIndex keeps partition-local
-        // counting + a tiny driver-side offset scan — no global shuffle —
-        // but it de-columnarizes (RDD round-trip: no codegen or pushdown
-        // below it), so it is ONLY for manifest-sized inputs. Fail fast on
-        // anything bigger instead of silently running 100x slower; the
-        // size check is plan statistics, not a data scan.
-        val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        // plans without statistics report conf.defaultSizeInBytes
-        // (Long.MaxValue unless tuned) — "unknown" must not trip the guard
-        val unknown =
-          estBytes >= BigInt(df.sparkSession.sessionState.conf.defaultSizeInBytes)
-        require(unknown || estBytes < (1L << 30),
-          s"rowIdCol=None synthesizes input-order ids via RDD zipWithIndex, " +
-            s"intended for manifest-sized inputs only (estimated input " +
-            s"$estBytes bytes >= 1 GiB). Pass Options(rowIdCol = Some(<key>)) " +
-            s"to keep the validation pass columnar.")
-        val schema = df.schema
-        val rdd = df.rdd.zipWithIndex.map { case (row, i) =>
-          org.apache.spark.sql.Row.fromSeq(row.toSeq :+ (i + 1L))
-        }
-        df.sparkSession.createDataFrame(rdd,
-          schema.add(RowId, "long", nullable = false))
-    }
+    val withId = opts.rowIdCol.fold(df)(c => df.withColumn(RowId, col(c)))
 
     // the failure mask, projected once; everything below reads its bits
     val masks = compiled.masks
@@ -135,15 +111,16 @@ object Validator {
    * accumulated error message appended as an extra trailing column (empty
    * string when the row passed, as the reference emits no cell content);
    * `invalidOnly` keeps only rows that have errors (Manifest.pm:391-396).
-   * Rows come back in manifest order. Write with
+   * Rows come back in the input's partition order, which for
+   * [[graft.sources.ManifestReader]]'s frame is manifest order; nothing
+   * re-sorts them, so `coalesce(1)` keeps it. Write with
    * `.write.option("header", true).csv(path)` for the reference's
    * header-first file shape. */
   def manifestCsv(validated: DataFrame, checklist: Checklist,
       invalidOnly: Boolean = false): DataFrame = {
     val base = if (invalidOnly) validated.filter(!col(PassedCol)) else validated
-    base.orderBy(RowId)
-      .select(checklist.fieldNames.map(col) :+
-        coalesce(col(ErrorCol), lit("")).as("errors"): _*)
+    base.select(checklist.fieldNames.map(col) :+
+      coalesce(col(ErrorCol), lit("")).as("errors"): _*)
   }
 
   /** Count of invalid rows (reference: Manifest.pm:288-302). */

@@ -19,6 +19,11 @@ import org.apache.spark.sql.SparkSession
  *   [--row-id <col>] [--content <col>]
  * }}}
  *
+ * Row identity comes from the input: `--row-id` names a key column, copied
+ * to `row_id` in messages and violation rows. Without it the input must
+ * carry a `row_id` column; a run over an input with neither fails before
+ * its first wave, naming `--row-id`.
+ *
  * Pending partitions are validated in waves, one wave after another: a
  * wave of up to 32 partitions and 4 GiB of input is read once and
  * validated in one write job that spreads its partitions over every core.

@@ -61,7 +61,7 @@ object CheckpointRunner {
       outputPath: String, // validated rows (partitioned)
       violationsPath: String, // exploded violation rows (partitioned)
       manifestPath: String, // lineage + metrics table
-      rowIdCol: Option[String] = None,
+      rowIdCol: Option[String] = None, // None: the input's `row_id` column
       contentCol: Option[String] = None)
 
   /** A larger partition is a wave alone. A killed run loses at most this. */
@@ -127,7 +127,7 @@ object CheckpointRunner {
     // reads that snapshot, even if a commit lands mid-run. `partitions`
     // pairs each value with its input bytes (0 where unknown).
     val version = SnapshotTable.currentVersion(spark, cfg.inputPath)
-    val (partitions, readWave) = version match {
+    val (partitions, schema, readWave) = version match {
       case Some(_) =>
         val snap = SnapshotTable.snapshot(spark, cfg.inputPath, version)
         require(snap.partitionCols.contains(cfg.partitionCol),
@@ -135,10 +135,19 @@ object CheckpointRunner {
             s"the snapshot table (spec: ${snap.partitionCols}) — a typo here " +
             "would otherwise yield zero partitions and a silent no-op run")
         val valueOf = (fe: SnapshotTable.FileEntry) => fe.partition(cfg.partitionCol)
-        (snap.files.groupMapReduce(valueOf)(_.bytes)(_ + _).toSeq.sorted, (wave: Seq[String]) =>
-          SnapshotTable.scan(spark, snap, snap.files.filter(fe => wave.contains(valueOf(fe)))))
+        (snap.files.groupMapReduce(valueOf)(_.bytes)(_ + _).toSeq.sorted, () => snap.schema,
+          (wave: Seq[String]) =>
+            SnapshotTable.scan(spark, snap, snap.files.filter(fe => wave.contains(valueOf(fe)))))
       case None =>
-        lazy val input = spark.read.parquet(cfg.inputPath)
+        // partition values stay the directory names `partitionDirs` lists:
+        // typed, a value "007" would read as 7 and a directory `empty`
+        // next to numeric ones would fail its filter's cast
+        lazy val input = {
+          val inference = "spark.sql.sources.partitionColumnTypeInference.enabled"
+          val was = spark.conf.get(inference)
+          spark.conf.set(inference, false)
+          try spark.read.parquet(cfg.inputPath) finally spark.conf.set(inference, was)
+        }
         val dirs = partitionDirs(spark, cfg.inputPath, cfg.partitionCol)
         (if (dirs.nonEmpty) dirs.map { case (v, dir) =>
             v -> dir.getFileSystem(hadoopConf).getContentSummary(dir).getLength }
@@ -146,6 +155,7 @@ object CheckpointRunner {
             .map(r => Option(r.get(0)).fold(
               ExternalCatalogUtils.DEFAULT_PARTITION_NAME)(_.toString) -> 0L)
             .toSeq.sorted,
+          () => input.schema,
           (wave: Seq[String]) =>
             input.filter(wave.map(inPartition(cfg.partitionCol, _)).reduce(_ || _)))
     }
@@ -162,6 +172,11 @@ object CheckpointRunner {
       }
     val results = scala.collection.mutable.Map.empty[String, PartitionResult]
     if (pending.nonEmpty) {
+      // ids come from the input, never from a wave (its schema reads no data)
+      val rowId = cfg.rowIdCol.getOrElse(Validator.RowId)
+      require(schema().fieldNames.exists(spark.sessionState.conf.resolver(_, rowId)),
+        s"the input has no row-id column '$rowId': pass --row-id <column> " +
+          "naming a key of the input")
       clearStaging()
       try waves(pending).foreach { wave =>
         val startedAt = java.time.Instant.now().toString

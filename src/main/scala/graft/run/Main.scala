@@ -1,6 +1,7 @@
 package graft.run
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, when}
 
 import graft.engine.Validator
 import graft.model.ChecklistConfig
@@ -52,20 +53,21 @@ object Main {
     val manifest = ManifestReader.readCsv(spark, input, checklist)
     manifest.warnings.foreach(w => System.err.println(s"WARNING: $w"))
 
+    // ManifestReader's frame carries `row_id`, in manifest order
     val validated = Validator.validate(manifest.df, checklist,
-      Validator.Options(rowIdCol = Some("row_id"), verboseErrors = args.verbose))
-      .cache() // manifest-sized input: feeds the count and the CSV write
-    val invalid = Validator.invalidRowCount(validated)
+      Validator.Options(verboseErrors = args.verbose))
+    val invalid = args.output.fold(Validator.invalidRowCount(validated)) { out =>
+      // CSV with the error message appended as an extra trailing column; the
+      // invalid count rides its one write job, observed below the
+      // invalid-only filter so that it sees every row
+      val obs = Observation()
+      Validator.manifestCsv(validated.observe(obs,
+          count(when(!col(Validator.PassedCol), 1)).as("invalid")), checklist, args.invalidOnly)
+        .coalesce(1).write.mode("overwrite").option("header", "true").csv(out)
+      obs.get("invalid").asInstanceOf[Long]
+    }
     val (report, exit) = Validator.report(input, invalid)
     println(report)
-
-    args.output.foreach { out =>
-      // CSV with the error message appended as an extra trailing column
-      Validator.manifestCsv(validated, checklist, args.invalidOnly)
-        .coalesce(1)
-        .write.mode("overwrite").option("header", "true").csv(out)
-    }
-    validated.unpersist()
     exit
   }
 

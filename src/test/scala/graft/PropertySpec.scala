@@ -19,6 +19,17 @@ import graft.model.FieldType._
  */
 class PropertySpec extends SparkSuite {
 
+  /** String columns `names` over `rows`, plus the 1-based `row_id` in row
+   * order that ManifestReader appends. */
+  private def manifest(names: Seq[String], rows: Seq[Seq[String]],
+      slices: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(names.map(StructField(_, StringType)) :+
+      StructField(Validator.RowId, LongType, nullable = false))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.zipWithIndex.map {
+      case (r, i) => org.apache.spark.sql.Row.fromSeq(r :+ (i + 1L)) }, slices), schema)
+  }
+
   // --- the checklist under test: all interacting features at once ---------
   val unknowns = Seq("unknown", "not available")
   val cl = Checklist("prop",
@@ -205,11 +216,7 @@ class PropertySpec extends SparkSuite {
       val rows: Seq[Map[String, String]] = (1 to 500).map { _ =>
         cl.fieldNames.map(n => n -> pools(n)(rnd.nextInt(pools(n).size))).toMap
       }
-      val schema = org.apache.spark.sql.types.StructType(cl.fieldNames.map(n =>
-        org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.StringType)))
-      val rdd = spark.sparkContext.parallelize(
-        rows.map(r => org.apache.spark.sql.Row.fromSeq(cl.fieldNames.map(r))), 4)
-      val df = spark.createDataFrame(rdd, schema)
+      val df = manifest(cl.fieldNames, rows.map(r => cl.fieldNames.map(r)), 4)
 
       val got = Validator.validate(df, cl)
         .select(Validator.RowId, Validator.ViolationsCol)
@@ -242,10 +249,7 @@ class PropertySpec extends SparkSuite {
       Seq(names.map(_ -> "7").toMap, names.map(_ -> "abc").toMap,
         only(62), only(63), only(62, 63), names.map(_ -> (null: String)).toMap) ++
         (1 to 200).map(_ => names.map(n => n -> pool(rnd.nextInt(pool.size))).toMap)
-    val schema = org.apache.spark.sql.types.StructType(names.map(n =>
-      org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.StringType)))
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(
-      rows.map(r => org.apache.spark.sql.Row.fromSeq(names.map(r))), 4), schema)
+    val df = manifest(names, rows.map(r => names.map(r)), 4)
 
     val got = Validator.validate(df, wide)
       .select(Validator.RowId, Validator.ViolationsCol, Validator.PassedCol,
@@ -320,13 +324,7 @@ class PropertySpec extends SparkSuite {
   }
 
   test("manifest CSV sink: error column appended, invalid-only filter") {
-    val df = {
-      val schema = org.apache.spark.sql.types.StructType(Seq("one", "two").map(n =>
-        org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.StringType)))
-      spark.createDataFrame(spark.sparkContext.parallelize(Seq(
-        org.apache.spark.sql.Row("1", "two"),
-        org.apache.spark.sql.Row("not_a_bool", "two")), 2), schema)
-    }
+    val df = manifest(Seq("one", "two"), Seq(Seq("1", "two"), Seq("not_a_bool", "two")), 2)
     val cl04 = Checklist("one", Seq(FieldDef("one", BoolT), FieldDef("two", StrT())))
     val v = Validator.validate(df, cl04)
     val all = Validator.manifestCsv(v, cl04).collect().map(_.toSeq)

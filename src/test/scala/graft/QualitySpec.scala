@@ -406,7 +406,7 @@ class QualitySpec extends SparkSuite {
     // the round-trip zero-violation guarantee holds: the unbounded Int
     // rule accepts every value, including the one the carrier dropped
     val cl = References.inferChecklist(df, name = "big")
-    assert(Validator.validate(df, cl)
+    assert(Validator.validate(df, cl, Validator.Options(rowIdCol = Some("c")))
       .filter(!col(Validator.PassedCol)).count() === 0L)
   }
 
@@ -422,7 +422,8 @@ class QualitySpec extends SparkSuite {
     assert(cl.validateConfig().isRight)
     assert(cl.fieldNames === Seq("id", "ok", "day", "color", "note")) // df order
     // the defining property: the data satisfies its own inferred checklist
-    val rt = Validator.validate(df, cl)
+    val byId = Validator.Options(rowIdCol = Some("id"))
+    val rt = Validator.validate(df, cl, byId)
     assert(rt.filter(!col(Validator.PassedCol)).count() === 0L)
     // new rows breaking the inferred rules ARE violations under it
     val bad = Seq(
@@ -432,7 +433,7 @@ class QualitySpec extends SparkSuite {
       ("11", "no",    "2024-01-01", "green", "fine"), // color not in enum
       ("12", "no",    "2024-01-01", "red",   ""))     // note required, empty
       .toDF("id", "ok", "day", "color", "note")
-    val checked = Validator.validate(bad, cl)
+    val checked = Validator.validate(bad, cl, byId)
     assert(checked.filter(!col(Validator.PassedCol)).count() === 5L)
     // bounds travel: id outside [1,3] is invalid under the inferred IntT
     assert(checked.filter(col("id") === "9")

@@ -185,7 +185,6 @@ class RunnerSpec extends SparkSuite {
 
   test("checkpoint run: at most 4 Spark jobs per partition on a fresh " +
       "snapshot-table run") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val base = Files.createTempDirectory("graft_ckpt_jobs").toString
     val root = s"$base/table"
     graft.sources.SnapshotTable.commit(
@@ -193,34 +192,11 @@ class RunnerSpec extends SparkSuite {
         .withColumn("part", (col("id") % 6).cast("string")),
       root, Seq("part"))
     val cfg = ckptConfig(root, base)
-    // job groups are inherited by the runner's worker threads; a sentinel
-    // job in another group marks the end of this run's job-start events
-    val group = "ckpt_job_count"
-    val sentinel = "ckpt_job_count_end"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`sentinel`) => drained.countDown()
-          case _ =>
-        }
+    val (res, jobs) = jobsIn("ckpt_job_count") {
+      CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "checkpoint run")
-      val res = CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
-      assert(res.size === 6 && res.forall(!_.skipped))
-      sc.setJobGroup(sentinel, "end of run")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get > 0 && jobs.get <= 4 * 6, s"${jobs.get} jobs for 6 partitions")
+    assert(res.size === 6 && res.forall(!_.skipped))
+    assert(jobs > 0 && jobs <= 4 * 6, s"$jobs jobs for 6 partitions")
   }
 
   test("CheckpointMain: spark-submit arg surface drives a resumable run end-to-end") {
@@ -495,6 +471,56 @@ class RunnerSpec extends SparkSuite {
     }
   }
 
+  test("CheckpointMain: an input without a row_id column and no --row-id " +
+      "fails before any write, naming --row-id; with --row-id every row " +
+      "keeps its own id across waves") {
+    import graft.engine.Validator
+    import graft.run.CheckpointMain
+    val base = Files.createTempDirectory("graft_ckpt_rowid").toString
+    // 40 partitions: two waves (32 + 8)
+    CodeFiles.generate(spark, 400)
+      .withColumn("part", (col("id") % 40).cast("string"))
+      .write.partitionBy("part").parquet(s"$base/input")
+    val args = CheckpointMain.parseArgs(List(
+      "--input", s"$base/input", "--partition-col", "part",
+      "--output", s"$base/out", "--violations", s"$base/viol",
+      "--manifest", s"$base/manifest", "--builtin", "code_files"),
+      CheckpointMain.Args())
+    val err = intercept[IllegalArgumentException](CheckpointMain.run(spark, args))
+    assert(err.getMessage.contains("--row-id") && err.getMessage.contains("row_id"),
+      err.getMessage)
+    for (dir <- Seq("out", "viol", "manifest"))
+      assert(!Files.exists(java.nio.file.Paths.get(s"$base/$dir")), dir)
+
+    val res = CheckpointMain.run(spark, args.copy(rowId = Some("id")))
+    assert(res.size === 40 && res.map(_.nRows).sum === 400)
+    val out = spark.read.parquet(s"$base/out")
+      .select(Validator.RowId, "id", Validator.ErrorCol).collect()
+    assert(out.map(_.getLong(0)).distinct.length === 400)
+    assert(out.forall(r => r.getLong(0) == r.getLong(1)))
+    val errors = out.filter(!_.isNullAt(2))
+    assert(errors.nonEmpty && errors.forall(r =>
+      r.getString(2).startsWith(s"[errors found on row ${r.getLong(0)}] ")))
+  }
+
+  test("checkpoint run: a hive input keeps its partition values as the " +
+      "directory names: \"007\" stays a string next to an empty `empty`") {
+    val base = Files.createTempDirectory("graft_ckpt_hive_typing").toString
+    val input = s"$base/input"
+    CodeFiles.generate(spark, 100)
+      .withColumn("part", when(col("id") % 2 === 0, "0").otherwise("007"))
+      .write.partitionBy("part").parquet(input)
+    Files.createDirectory(java.nio.file.Paths.get(s"$input/part=empty"))
+    val cfg = ckptConfig(input, base)
+    val res = CheckpointRunner.run(spark, CodeFiles.checklist, cfg)
+    assert(res.map(r => r.partition -> r.nRows) ===
+      Seq("0" -> 50L, "007" -> 50L, "empty" -> 0L))
+    assert(res.forall(!_.skipped))
+    val parts = spark.read.parquet(s"${cfg.outputPath}/part=007")
+      .select("part").distinct().collect().map(_.get(0))
+    assert(parts.toSeq === Seq("007"))
+  }
+
   test("curation metrics run unchanged on a stream (stateless projection)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -587,6 +613,54 @@ class RunnerSpec extends SparkSuite {
       "[errors found on row 2] [value in field 'one' is not valid]")
     // missing config -> exit 1
     assert(Main.run(Main.Args(input = Some(good.toString)), spark) === 1)
+  }
+
+  test("CLI: a manifest of 3 slices validates in 1 Spark job with -o and " +
+      "at most 2 without; the CSV lists rows in input order") {
+    import graft.run.Main
+    val dir = Files.createTempDirectory("graft_cli_jobs")
+    val conf = dir.resolve("m.conf")
+    Files.writeString(conf,
+      """<checklist one>
+        |  header_row "one,two"
+        |  <field>
+        |    name one
+        |    type Bool
+        |  </field>
+        |  <field>
+        |    name two
+        |    type Str
+        |  </field>
+        |</checklist>""".stripMargin)
+    // 30,000 rows: ManifestReader parallelizes them in 3 slices
+    val n = 30000
+    val bad = (1 to n).filter(_ % 7 == 0).toSet
+    val csv = dir.resolve("big.csv")
+    Files.writeString(csv, (1 to n).map(i =>
+      s"${if (bad(i)) "x" else "1"},r$i").mkString("one,two\n", "\n", "\n"))
+    val out = dir.resolve("out").toString
+    def capture(args: Main.Args): (Int, String) = {
+      val buf = new java.io.ByteArrayOutputStream()
+      val exit = Console.withOut(buf)(Main.run(args, spark))
+      (exit, buf.toString.trim)
+    }
+    val args = Main.Args(config = Some(conf.toString), input = Some(csv.toString))
+    val report = s"'$csv' is invalid. Found ${bad.size} invalid rows"
+
+    val (withOut, jobs) = jobsIn("cli_jobs_out")(capture(args.copy(output = Some(out))))
+    assert(withOut === ((1, report)) && jobs === 1, s"$jobs jobs with -o")
+    val part = Files.list(java.nio.file.Paths.get(out)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-"))
+    assert(part.length === 1)
+    val lines = Files.readAllLines(part.head).toArray.map(_.toString).toSeq
+    assert(lines.head === "one,two,errors")
+    assert(lines.tail.map(_.split(",", 3)(1)) === (1 to n).map(i => s"r$i"))
+    assert(lines.tail.zipWithIndex.forall { case (l, i) =>
+      l.split(",", 3)(2).startsWith(s"[errors found on row ${i + 1}]") == bad(i + 1) })
+
+    val (withoutOut, jobs2) = jobsIn("cli_jobs_no_out")(capture(args))
+    assert(withoutOut === ((1, report)) && jobs2 <= 2, s"$jobs2 jobs without -o")
   }
 
   test("report wording + exit codes match the reference CLI") {

@@ -18,12 +18,14 @@ import graft.engine.Validator
 class ValidatorSpec extends SparkSuite {
   import Validator._
 
-  /** Build a manifest-style DataFrame from rows of Option[String] cells. */
+  /** Build a manifest-style DataFrame from rows of Option[String] cells,
+   * with the 1-based `row_id` in row order that ManifestReader appends. */
   def manifest(cols: Seq[String], rows: Seq[Seq[Option[String]]]): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(
-      cols.map(c => org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType)))
-    val rdd = spark.sparkContext.parallelize(
-      rows.map(r => org.apache.spark.sql.Row.fromSeq(r.map(_.orNull))), 2)
+    import org.apache.spark.sql.types._
+    val schema = StructType(cols.map(StructField(_, StringType)) :+
+      StructField(RowId, LongType, nullable = false))
+    val rdd = spark.sparkContext.parallelize(rows.zipWithIndex.map { case (r, i) =>
+      org.apache.spark.sql.Row.fromSeq(r.map(_.orNull) :+ (i + 1L)) }, 2)
     spark.createDataFrame(rdd, schema)
   }
 
@@ -420,17 +422,15 @@ class ValidatorSpec extends SparkSuite {
   }
 
   // --- violation rows + invariants ----------------------------------------
-  test("rowIdCol=None fails fast on non-manifest-sized inputs (plan stats)") {
-    // ~2.4 GB estimated (no data materialized): must refuse zipWithIndex
-    val big = spark.range(300000000L).selectExpr("cast(id as string) as v")
+  test("rowIdCol=None reads the input's row_id; an input without one " +
+      "fails, naming row_id") {
     val cl = Checklist("t", Seq(FieldDef("v", StrT())))
-    val e = intercept[IllegalArgumentException] {
-      validate(big, cl)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      validate(spark.range(3).selectExpr("cast(id as string) as v"), cl)
     }
-    assert(e.getMessage.contains("rowIdCol"))
-    // and still fine for manifest-sized input
-    val small = validate(manifest(Seq("v"), Seq(Seq(S("x")), Seq(S("y")))), cl)
-    assert(small.select(RowId).collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))
+    assert(e.getMessage.contains(RowId), e.getMessage)
+    val ided = validate(manifest(Seq("v"), Seq(Seq(S("x")), Seq(S("y")))), cl)
+    assert(ided.select(RowId).collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))
   }
 
   test("violation rows carry (row_id, field, rule_id, message)") {
@@ -471,13 +471,10 @@ class ValidatorSpec extends SparkSuite {
   test("verdicts invariant under partition count") {
     val rows = csv06if
     val a = errorsByRow(validate(manifest(checklist06if.fieldNames, rows), checklist06if))
-    val df8 = manifest(checklist06if.fieldNames, rows).repartition(1)
-    // NB row ids are input-order based; repartition(1) keeps content but ids may
-    // reassign — compare the multiset of error strings modulo row numbers.
-    def norm(m: Map[Long, String]) =
-      m.values.map(_.replaceAll(raw"row \d+", "row N")).toVector.sorted
-    val b = errorsByRow(validate(df8, checklist06if))
-    assert(norm(a) === norm(b))
+    // the ids travel with their rows through the repartition
+    val df1 = manifest(checklist06if.fieldNames, rows).repartition(1)
+    val b = errorsByRow(validate(df1, checklist06if))
+    assert(a === b)
   }
 
   // --- the reference fixture conformance sweep -----------------------------
