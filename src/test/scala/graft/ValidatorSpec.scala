@@ -422,8 +422,7 @@ class ValidatorSpec extends SparkSuite {
   }
 
   // --- violation rows + invariants ----------------------------------------
-  test("rowIdCol=None reads the input's row_id; an input without one " +
-      "fails, naming row_id") {
+  test("rowIdCol=None reads the input's row_id; without one it fails, naming row_id") {
     val cl = Checklist("t", Seq(FieldDef("v", StrT())))
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       validate(spark.range(3).selectExpr("cast(id as string) as v"), cl)
